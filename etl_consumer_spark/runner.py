@@ -14,11 +14,13 @@ loop → MySQL target).
   and a broker) or ``file:<dir>`` (broker-free parquet envelope stream —
   identical downstream columns; ``MAX_FILES_PER_TRIGGER`` bounds each
   micro-batch so backfills commit state incrementally);
-- state from ``STATE_PATH`` (bucket-partitioned partial-rewrite store, the
-  pipeline default), with ``STATE_BACKEND=versioned`` for tiny tables;
+- state from ``STATE_PATH``, a local directory holding the
+  bucket-partitioned partial-rewrite store (one writer per table; a URI
+  such as ``s3a://`` is rejected — object-store state needs a deploy-time
+  Delta MERGE);
 - ``SCD2_TABLES=t1,t2`` additionally maintains a Type-2 history table
   (``<name>__history``: validity intervals, deletes close the open
-  version) for the named tables — requires the partitioned backend;
+  version) for the named tables;
 - optional Debezium Connect REST control (X1/X2 pause/resume) when
   ``DEBEZIUM_CONTROL=1``.
 
@@ -43,7 +45,6 @@ from pyspark.sql import SparkSession
 from etl_consumer_spark.client.debezium import DebeziumAPI
 from etl_consumer_spark.config import Config
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-from etl_consumer_spark.sinks.state import ParquetStateStore
 from etl_consumer_spark.sources.envelope import WireField, wire_fields_from_connect_schema
 from etl_consumer_spark.sources.kafka import file_envelope_stream, kafka_stream
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
@@ -82,11 +83,9 @@ def build_pipeline(spark: SparkSession, cfg: Config | None = None) -> tuple[CDCP
     start() vs availableNow drain)."""
     cfg = cfg or Config()
     specs = load_table_specs(os.environ["TABLESPECS"])
-    state_path = os.environ.get("STATE_PATH", "/tmp/etl_consumer_spark/state")
-    if os.environ.get("STATE_BACKEND", "partitioned") == "versioned":
-        store = ParquetStateStore(spark, state_path)
-    else:
-        store = PartitionedParquetStateStore(spark, state_path)
+    store = PartitionedParquetStateStore(
+        spark, os.environ.get("STATE_PATH", "/tmp/etl_consumer_spark/state")
+    )
     api = None
     if os.environ.get("DEBEZIUM_CONTROL", "0") in ("1", "true"):
         api = DebeziumAPI(cfg.debezium_addr, cfg.debezium_port, cfg.connector)

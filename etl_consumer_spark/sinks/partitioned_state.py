@@ -1,9 +1,10 @@
-"""K1 (scale variant) — hash-bucket-partitioned state store with
+"""K1 — the engine's state store: materialized current-state tables (the
+reference's MySQL target, main.go:135), bucket-partitioned with
 partial-partition rewrite.
 
-The versioned :class:`~etl_consumer_spark.sinks.state.ParquetStateStore`
-rewrites the whole table every batch — O(state) I/O per batch. This store
-partitions state by ``bucket = pmod(hash(pk), n_buckets)`` and each upsert:
+Rewriting the whole table every batch costs O(state) I/O per batch. This
+store partitions state by ``bucket = pmod(hash(pk), n_buckets)`` and each
+upsert:
 
 1. derives the micro-batch's touched buckets (a tiny distinct list),
 2. reads ONLY those partitions (directory-partition pruning — verify with
@@ -14,8 +15,8 @@ partitions state by ``bucket = pmod(hash(pk), n_buckets)`` and each upsert:
 Per-batch I/O is O(touched partitions), independent of total state size —
 the property that makes per-batch upserts viable at 100 TB. Measured on a
 1.2M-row state with a 4k hot-tail batch: 1 of 143 range partitions
-rewritten (vs all of state with the versioned store); at local toy scale
-wall-time is constant-dominated, the win is the I/O asymptotics.
+rewritten; at local toy scale wall-time is constant-dominated, the win is
+the I/O asymptotics.
 
 Bucket count is data-dependent by default (``n_buckets=None`` → about
 ``rows / target_bucket_rows`` at init, clamped to [8, 4096]) and persisted
@@ -43,12 +44,20 @@ table untouched = pre-batch state); a crash after step 2 rolls FORWARD
 observe a mix: every public entry point runs recovery first. Staging
 also means the merge plan reads files the write never touches, so no
 cache-pinning dance and one fewer collect() job per batch.
+
+One writer per table, on a local filesystem: the protocol's commit point
+is an ``os.replace`` and each bucket swap an ``os.rename``, which are
+atomic only on a POSIX filesystem. Base paths with a URI scheme
+(``s3a://``, ``hdfs://``, ``file://``) are rejected. Multi-writer tables
+and object-store state take a deploy-time Delta ``MERGE`` above the same
+apply protocol (``operators.apply``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_consumer_spark.operators.apply import apply_cdc
+from etl_consumer_spark.sinks.state import evolve_frame, parse_rename_column
 
 
 class PartitionedParquetStateStore:
@@ -79,6 +89,12 @@ class PartitionedParquetStateStore:
     ):
         if bucket_mode not in ("hash", "range"):
             raise ValueError(f"bucket_mode must be 'hash' or 'range', got {bucket_mode!r}")
+        if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", base_path):
+            raise ValueError(
+                f"state path {base_path!r} carries a URI scheme: the state store "
+                "commits with local renames and needs a local filesystem path; "
+                "state on an object store or HDFS needs a deploy-time Delta MERGE"
+            )
         self.spark = spark
         self.base = base_path.rstrip("/")
         self.n_buckets = n_buckets
@@ -353,15 +369,12 @@ class PartitionedParquetStateStore:
         rewriting the table with the evolved schema. DDL is rare (the
         reference pauses the connector around it, main.go:70-121), so a
         full rewrite here is acceptable; per-batch DML stays partial."""
-        import re
-
-        from etl_consumer_spark.sinks.state import evolve_frame
-
         df = evolve_frame(self.read(table), statement)
         pk = self._pk_cols(table) or [df.columns[0]]
-        m = re.match(r"(?i)ALTER TABLE \w+ RENAME COLUMN (\w+) TO (\w+)", statement)
-        if m and m.group(1) in pk:
-            pk = [m.group(2) if c == m.group(1) else c for c in pk]
+        renamed = parse_rename_column(statement)
+        if renamed:
+            _, old, new = renamed
+            pk = [new if c == old else c for c in pk]
         # the table's PERSISTED layout survives evolution — a store instance
         # constructed with different bucket settings must not silently
         # re-bucket someone else's table

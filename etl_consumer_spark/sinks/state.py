@@ -1,38 +1,20 @@
-"""K1 — materialized current-state tables (the reference's target MySQL).
+"""Schema evolution for parquet-backed state tables.
 
-The reference applies each event to MySQL via GORM (db.Exec, main.go:135).
-The engine's equivalent is a maintained current-state table per source
-table, updated per micro-batch by the set-based CDC apply (operators.apply).
-
-Backend here: versioned parquet directories with an atomic pointer file —
-the dependency-free fallback that works in this container. Each upsert
-writes a full new version (read-modify-write). On a real deployment the
-same ``apply_fn`` drives Delta Lake ``MERGE INTO`` (partial file rewrite +
-txn log) or a JDBC upsert; the protocol (LWW ordering, dup-skip,
-dead-letter) is identical and lives above the backend.
-
-Scale note: the rewrite cost is bounded by partitioning state on the key
-(only touched partitions rewritten via dynamic partition overwrite); with
-Delta, AQE-sized MERGE touches only matching files. The versioned-pointer
-scheme keeps readers consistent (they always see a complete version dir) —
-the same idea as Delta's log, minus concurrent writers.
+The reference applies DDL to its MySQL target with ``db.Exec(ddl)``
+(main.go:88). The engine's state lives in parquet, so a translated ALTER
+statement (``operators.ddl`` output) is applied to the state DataFrame
+here and the store rewrites the table with the evolved schema.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-from etl_consumer_spark.operators.apply import apply_cdc
+from pyspark.sql import DataFrame
 
 
-# Identifier fragments shared by evolve_frame and the stores' DDL probes
-# (ADVICE r8: the pk-rename detection in the log store used a stricter
-# bare-\w+ regex than evolve_frame's statement shapes — any divergence
-# between "what evolves" and "what the pk list tracks" leaves the bucket
-# expression bound to a stale column. One grammar, used by both, makes
-# that drift impossible). Accepts bare, backtick-quoted, and db-qualified
+# Identifier fragments shared by evolve_frame and the state store's pk
+# tracking: one grammar for "what evolves" and "what the pk list follows",
+# so a rename the frame applies can never leave the bucket expression bound
+# to a stale column. Accepts bare, backtick-quoted, and db-qualified
 # identifiers (the shapes the captured Debezium fixtures carry).
 _TBL = r"`?(?:[\w$]+`?\s*\.\s*`?)?([\w$]+)`?"
 _COL = r"`?([\w$]+)`?"
@@ -53,8 +35,7 @@ def parse_rename_column(statement: str) -> tuple[str, str, str] | None:
 def evolve_frame(df: DataFrame, statement: str) -> DataFrame:
     """Apply one translated DDL statement (operators.ddl output shapes) to a
     state DataFrame — the parquet backend's equivalent of the reference's
-    db.Exec(ddl) (main.go:88). Shared by the versioned and partitioned
-    stores.
+    db.Exec(ddl) (main.go:88).
 
     Supported: ADD COLUMNS (new column null for existing rows),
     DROP COLUMN, RENAME COLUMN, ALTER COLUMN TYPE. Table and column
@@ -78,123 +59,3 @@ def evolve_frame(df: DataFrame, statement: str) -> DataFrame:
         _, col, typ = m.groups()
         return df.withColumn(col, SF.col(col).cast(typ.strip()))
     raise ValueError(f"unsupported evolved DDL: {statement}")
-
-
-class ParquetStateStore:
-    def __init__(self, spark: SparkSession, base_path: str):
-        self.spark = spark
-        self.base = base_path.rstrip("/")
-
-    def _table_dir(self, table: str) -> str:
-        return f"{self.base}/{table}"
-
-    def _pointer(self, table: str) -> str:
-        return f"{self._table_dir(table)}/_CURRENT"
-
-    def current_version(self, table: str) -> int | None:
-        try:
-            with open(self._pointer(table)) as fh:
-                return int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def init(self, table: str, df: DataFrame) -> None:
-        """Seed version 0 of a state table."""
-        self._write_version(table, df, 0)
-
-    def vacuum(self, table: str, keep_last: int = 2) -> list[int]:
-        """Retention: delete all but the newest ``keep_last`` versions
-        (never the current pointer's target). Returns the dropped version
-        numbers. The versioned store doubles as a time-travel log, so
-        unbounded history is a disk leak on long streams — call this from a
-        maintenance cadence, exactly like Delta VACUUM."""
-        import shutil
-
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        current = self.current_version(table)
-        vs = self.versions(table)
-        keep = set(vs[-keep_last:])
-        if current is not None:
-            keep.add(current)
-        dropped = [v for v in vs if v not in keep]
-        for v in dropped:
-            shutil.rmtree(f"{self._table_dir(table)}/v{v}", ignore_errors=True)
-        return dropped
-
-    def versions(self, table: str) -> list[int]:
-        """All retained version numbers, ascending — every upsert/evolve
-        leaves its predecessor intact, so the versioned store doubles as a
-        time-travel log (the poor man's Delta history)."""
-        import re
-
-        try:
-            names = os.listdir(self._table_dir(table))
-        except FileNotFoundError:
-            return []
-        return sorted(int(m.group(1)) for n in names if (m := re.fullmatch(r"v(\d+)", n)))
-
-    def read(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the current state, or a historical version (time travel)."""
-        v = self.current_version(table) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"state table {table} not initialized under {self.base}")
-        if version is not None and version not in self.versions(table):
-            raise FileNotFoundError(f"version {version} of {table} does not exist")
-        return self.spark.read.parquet(f"{self._table_dir(table)}/v{v}")
-
-    def _write_version(self, table: str, df: DataFrame, version: int) -> None:
-        os.makedirs(self._table_dir(table), exist_ok=True)
-        df.write.mode("overwrite").parquet(f"{self._table_dir(table)}/v{version}")
-        tmp = self._pointer(table) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer(table))  # atomic pointer swap
-
-    # MySQL->Spark type mapping lives in operators.ddl; here we apply the
-    # already-translated statement shapes to the parquet-backed state.
-    def evolve(self, table: str, statement: str) -> None:
-        """Apply one translated DDL statement (operators.ddl output) to the
-        state table by rewriting with the evolved schema — the parquet
-        backend's equivalent of the reference's db.Exec(ddl) (main.go:88).
-
-        Supported: ADD COLUMNS (new column null for existing rows),
-        DROP COLUMN, RENAME COLUMN, ALTER COLUMN TYPE."""
-        df = evolve_frame(self.read(table), statement)
-        v = (self.current_version(table) or 0) + 1
-        self._write_version(table, df, v)
-
-    def upsert(
-        self,
-        table: str,
-        events: DataFrame,
-        pk_cols: list[str],
-        missing_update: str = "upsert",
-        broadcast_threshold: int | None = 2_000_000,
-    ) -> int:
-        """Apply one micro-batch of CDC events; returns the new version.
-
-        Default mode is ``upsert`` compaction — exact for consistent ordered
-        CDC streams including within-batch insert→update chains (see
-        apply_cdc docstring); pass ``noop`` for strict per-statement
-        reference semantics.
-
-        Batches larger than ``broadcast_threshold`` rows take the sort-merge
-        (full-outer) apply instead of broadcasting the compacted batch — a
-        snapshot/backfill flood must not be broadcast to every executor.
-        The one count() job is the price of not OOMing; pass None to skip
-        the check for latency-critical small-batch paths."""
-        state = self.read(table)
-        broadcast = True
-        if broadcast_threshold is not None:
-            broadcast = events.count() <= broadcast_threshold
-        handle: list = []
-        new_state = apply_cdc(
-            state, events, pk_cols, missing_update=missing_update,
-            broadcast_batch=broadcast, cache_handle=handle,
-        )
-        v = (self.current_version(table) or 0) + 1
-        self._write_version(table, new_state, v)
-        for df in handle:
-            df.unpersist()
-        return v

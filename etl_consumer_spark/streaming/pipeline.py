@@ -17,6 +17,9 @@ Maps the reference's main loop (main.go:63-169) onto micro-batches:
 Exactly-once: the transport checkpoint plus idempotent apply (replays
 collapse in LWW + dup-skip) gives effective exactly-once on state, the
 same guarantee the reference approximates with its Duplicate-entry skip.
+``tests/test_restart_faults.py`` kills the stream at each layer boundary
+(staged write, manifest publish, SCD2 history write, offset commit) and
+checks that a checkpoint restart lands the serial-apply state.
 Micro-batch architecture per "Structured Streaming: A Declarative API for
 Real-Time Applications in Apache Spark" (SIGMOD 2018).
 """
@@ -44,7 +47,6 @@ from etl_consumer_spark.operators.routing import (
 from etl_consumer_spark.sinks.dead_letter import dead_letter_rows, write_dead_letters
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 from etl_consumer_spark.sinks.republish import republish_frame
-from etl_consumer_spark.sinks.state import ParquetStateStore
 from etl_consumer_spark.sources.envelope import (
     DATE,
     DECIMAL,
@@ -71,7 +73,7 @@ class BatchResult:
     """Observability record for one micro-batch."""
 
     epoch_id: int
-    applied: dict[str, int] = field(default_factory=dict)      # table -> new version
+    applied: dict[str, int] = field(default_factory=dict)      # table -> buckets rewritten
     ddl_applied: list[str] = field(default_factory=list)
     ddl_skipped: list[str] = field(default_factory=list)
     passthrough: list[str] = field(default_factory=list)       # P7 verbatim SQL
@@ -119,7 +121,9 @@ def _wire_field_for(col: str, spark_type: str) -> WireField:
 def metrics_rows(result: BatchResult) -> list[tuple]:
     """Flatten a BatchResult into (epoch, table, version, ddl_applied,
     ddl_skipped, passthrough, dead_letters, republish) metric rows — one per
-    applied table (or a single table-less row for apply-free batches)."""
+    applied table (or a single table-less row for apply-free batches). The
+    ``version`` column keeps its persisted name; it holds the number of
+    buckets the upsert rewrote."""
     base = (
         len(result.ddl_applied),
         len(result.ddl_skipped),
@@ -159,11 +163,9 @@ class CDCPipeline:
         self.cfg = cfg
         self.tables = {t.name: t for t in tables}
         if store is None:
-            # Default state backend: bucket-partitioned parquet with partial
-            # rewrite — per-batch I/O is O(touched buckets), not O(state).
-            # The versioned ParquetStateStore remains available for tiny
-            # tables (pass it explicitly); at 100 TB the partitioned store
-            # (or a Delta MERGE sink) is the only viable default.
+            # bucket-partitioned parquet with partial rewrite — per-batch I/O
+            # is O(touched buckets), not O(state). Any object with the
+            # store's methods may be passed instead (test doubles, proxies).
             if state_path is None:
                 raise ValueError("pass either a state store or state_path")
             store = PartitionedParquetStateStore(spark, state_path)
@@ -185,17 +187,11 @@ class CDCPipeline:
         self.metrics_path = metrics_path
         # tables that ALSO maintain an SCD Type-2 history ("<name>__history"
         # in the same store): every applied image opens a version, the
-        # predecessor closes, deletes close without reopening. Requires the
-        # partitioned store (the history read path is bucket-pruned).
+        # predecessor closes, deletes close without reopening.
         self.scd2_tables = set(scd2_tables or ())
         unknown = self.scd2_tables - set(self.tables)
         if unknown:
             raise ValueError(f"scd2_tables not in table specs: {sorted(unknown)}")
-        if self.scd2_tables and not hasattr(self.store, "read_leading_range"):
-            raise ValueError(
-                "scd2_tables requires the partitioned state store "
-                "(bucket-pruned history reads)"
-            )
         # K3 retry buffer root: failed slices gated by republish_gate spill
         # HERE as epoch-keyed parquet (distributed write) instead of
         # collect()ing to the driver. When not given explicitly it binds
@@ -225,23 +221,14 @@ class CDCPipeline:
         # decoded int image unions cleanly with state.
         statement = _re.sub(r"(?i)\bBOOLEAN\b", "INT", statement)
         name = m.group(1)
-        if hasattr(self.store, "evolve"):
-            self.store.evolve(name, statement)
-            # SCD2 history evolves in LOCKSTEP with its base table: without
-            # this the cached maintainer keeps its first-batch payload list
-            # (new column silently omitted), and a restarted maintainer
-            # would bind the new column against the stale on-disk __history
-            # schema and dead-letter slices already applied to the base
-            # guard locally, not via the distant constructor invariant that
-            # scd2_tables implies the partitioned store: a future store
-            # gaining evolve() without exists() must not AttributeError
-            # mid-stream on the DDL path
-            if (
-                name in self.scd2_tables
-                and hasattr(self.store, "exists")
-                and self.store.exists(f"{name}__history")
-            ):
-                self.store.evolve(f"{name}__history", statement)
+        self.store.evolve(name, statement)
+        # SCD2 history evolves in LOCKSTEP with its base table: without this
+        # the cached maintainer keeps its first-batch payload list (new
+        # column silently omitted), and a restarted maintainer would bind
+        # the new column against the stale on-disk __history schema and
+        # dead-letter slices already applied to the base
+        if name in self.scd2_tables and self.store.exists(f"{name}__history"):
+            self.store.evolve(f"{name}__history", statement)
         # drop the cached maintainer so the next batch rebuilds it from the
         # refreshed spec.fields (payload list includes/excludes the column)
         self._scd2_maintainers.pop(name, None)
@@ -483,8 +470,7 @@ class CDCPipeline:
                         pt.unpersist()
                     events = decoded.filter(F.col("passthrough").isNull())
                     try:
-                        version = self.store.upsert(name, events, spec.pk_cols)
-                        result.applied[name] = version
+                        result.applied[name] = self.store.upsert(name, events, spec.pk_cols)
                         # replay hygiene (review r9 finding #2): if THIS
                         # (epoch, table) spilled on a previous attempt and
                         # now succeeded on replay, the stale spill would

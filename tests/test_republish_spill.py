@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from etl_consumer_spark.config import Config
 from etl_consumer_spark.operators.retry import loop_count_from_headers
-from etl_consumer_spark.sinks.state import ParquetStateStore
+from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 from etl_consumer_spark.sources.envelope import WireField
 from etl_consumer_spark.sources.kafka import file_envelope_stream
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
@@ -101,8 +101,8 @@ def test_poison_flood_spills_distributed_never_collects(spark, tmp_path):
         .write.mode("overwrite")
         .parquet(transport)
     )
-    inner = ParquetStateStore(spark, str(tmp_path / "state"))
-    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"))
+    inner = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"), PK)
     pipe = _mk_pipe(spark, tmp_path, PoisonStore(inner, fail_times=10**9))
     _run(spark, pipe, transport, str(tmp_path / "ckpt"))
 
@@ -143,8 +143,8 @@ def test_requeue_retry_converges_and_gate_exhausts(spark, tmp_path):
         .write.mode("overwrite")
         .parquet(transport)
     )
-    inner = ParquetStateStore(spark, str(tmp_path / "state"))
-    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"))
+    inner = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"), PK)
     store = PoisonStore(inner, fail_times=1)  # first batch fails, retry works
     pipe = _mk_pipe(spark, tmp_path, store)
     _run(spark, pipe, transport, str(tmp_path / "ck1"))
@@ -177,8 +177,8 @@ def test_default_spill_roots_bind_to_stream_checkpoints(spark, tmp_path):
     """Review r9 finding #1: two pipelines built WITHOUT an explicit
     republish_path must not share a spill root — the buffer binds to each
     stream's actual checkpoint dir at start()."""
-    inner = ParquetStateStore(spark, str(tmp_path / "state"))
-    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"))
+    inner = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"), PK)
 
     def mk():
         cfg = Config()
@@ -217,8 +217,8 @@ def test_replay_success_clears_stale_epoch_spill(spark, tmp_path):
     """Review r9 finding #2: a spill from a crashed epoch whose upsert
     SUCCEEDS on replay must be cleared — otherwise a later requeue
     re-delivers already-committed old events."""
-    inner = ParquetStateStore(spark, str(tmp_path / "state"))
-    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"))
+    inner = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"), PK)
     store = PoisonStore(inner, fail_times=1)
     pipe = _mk_pipe(spark, tmp_path, store)
     batch = spark.createDataFrame(
@@ -239,8 +239,8 @@ def test_requeue_drains_only_its_snapshot(spark, tmp_path, monkeypatch):
     """Review r9 finding #3: a slice spilled concurrently with a drain
     must survive for the next drain — requeue removes exactly the
     directories in its snapshot."""
-    inner = ParquetStateStore(spark, str(tmp_path / "state"))
-    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"))
+    inner = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"), PK)
     pipe = _mk_pipe(spark, tmp_path, PoisonStore(inner, fail_times=10**9))
     batch = spark.createDataFrame(
         [(TOPIC, _ENV_TMPL.replace("%s", "7", 2).encode(), None, None)],
@@ -286,8 +286,8 @@ def test_closed_loop_retry_self_heals(spark, tmp_path):
         .write.mode("overwrite")
         .parquet(transport)
     )
-    inner = ParquetStateStore(spark, str(tmp_path / "state"))
-    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"))
+    inner = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    inner.init("batch_seq", spark.createDataFrame([], "id long, seq long"), PK)
     store = PoisonStore(inner, fail_times=2)  # two failing batches, then ok
     cfg = Config()
     cfg.server, cfg.db_name, cfg.tables = SERVER, DB, ["batch_seq"]
@@ -306,8 +306,10 @@ def test_closed_loop_retry_self_heals(spark, tmp_path):
     )
     try:
         deadline = time.time() + 150
+        # poll the batch results, not the store: a store read runs crash
+        # recovery, which discards the staging of an upsert still in flight
         while time.time() < deadline:
-            if inner.read("batch_seq").count() == 10:
+            if any(r.applied for r in pipe.results):
                 break
             time.sleep(2)
     finally:

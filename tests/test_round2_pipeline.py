@@ -15,8 +15,8 @@ import json
 import os
 
 from etl_consumer_spark.config import Config
+from etl_consumer_spark.operators.apply import apply_cdc
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-from etl_consumer_spark.sinks.state import ParquetStateStore
 from etl_consumer_spark.sources.envelope import WireField
 from etl_consumer_spark.sources.kafka import file_envelope_stream
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
@@ -100,8 +100,9 @@ def test_default_store_is_partitioned(spark, tmp_path):
     assert isinstance(pipe.store, PartitionedParquetStateStore)
 
 
-def test_versioned_and_partitioned_stores_equivalent(spark, tmp_path):
-    """Same seed + same event batch through both backends → identical state."""
+def test_partitioned_store_matches_apply_cdc(spark, tmp_path):
+    """Same seed + same event batch: the bucketed store's upsert lands the
+    state the whole-table reference apply (``apply_cdc``) computes."""
     seed = spark.createDataFrame(
         [(i, i % 7, 0, float(i), None) for i in range(1, 101)], STATE_DDL
     )
@@ -129,15 +130,11 @@ def test_versioned_and_partitioned_stores_equivalent(spark, tmp_path):
         F.lit(1).cast("long").alias("ts_ms"),
     )
 
-    vstore = ParquetStateStore(spark, str(tmp_path / "v"))
-    vstore.init("t", seed)
-    vstore.upsert("t", ev, ["id"])
-
     pstore = PartitionedParquetStateStore(spark, str(tmp_path / "p"), n_buckets=8)
     pstore.init("t", seed, ["id"])
     pstore.upsert("t", ev, ["id"])
 
-    a = {tuple(r) for r in vstore.read("t").collect()}
+    a = {tuple(r) for r in apply_cdc(seed, ev, ["id"]).collect()}
     b = {tuple(r) for r in pstore.read("t").collect()}
     assert a == b
     assert len(a) == 100  # 100 - 1 delete + 1 insert
@@ -287,10 +284,8 @@ def test_range_bucket_exact_above_2_53(spark, tmp_path):
 
 def test_upsert_backfill_takes_sort_merge_path(spark, tmp_path):
     """A batch above broadcast_threshold must still apply correctly through
-    the full-outer sort-merge path (both store backends)."""
+    the full-outer sort-merge path."""
     from pyspark.sql import functions as F
-
-    from etl_consumer_spark.sinks.state import ParquetStateStore
 
     img = "struct<id:long,province_id:long,seq:long,amount:double,created_day:date>"
     seed = spark.createDataFrame([(i, 0, 0, 1.0, None) for i in range(1, 21)], STATE_DDL)
@@ -303,20 +298,13 @@ def test_upsert_backfill_takes_sort_merge_path(spark, tmp_path):
         F.col("id").alias("pos"),
         F.lit(1).cast("long").alias("ts_ms"),
     )
-    for Store, path in [
-        (ParquetStateStore, tmp_path / "v"),
-        (PartitionedParquetStateStore, tmp_path / "p"),
-    ]:
-        store = Store(spark, str(path))
-        if Store is ParquetStateStore:
-            store.init("t", seed)
-        else:
-            store.init("t", seed, ["id"])
-        # threshold 5 < 30 events -> sort-merge branch
-        store.upsert("t", events, ["id"], broadcast_threshold=5)
-        out = {r["id"]: r["amount"] for r in store.read("t").collect()}
-        assert len(out) == 40  # 20 seed + 20 new (ids 21..40); 11..20 upserted
-        assert out[15] == 2.0 and out[5] == 1.0 and out[40] == 2.0
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "p"))
+    store.init("t", seed, ["id"])
+    # threshold 5 < 30 events -> sort-merge branch
+    store.upsert("t", events, ["id"], broadcast_threshold=5)
+    out = {r["id"]: r["amount"] for r in store.read("t").collect()}
+    assert len(out) == 40  # 20 seed + 20 new (ids 21..40); 11..20 upserted
+    assert out[15] == 2.0 and out[5] == 1.0 and out[40] == 2.0
 
 
 def test_metrics_sink_rows(spark, tmp_path):

@@ -10,7 +10,6 @@ import pytest
 
 from etl_consumer_spark.runner import build_pipeline, load_table_specs
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-from etl_consumer_spark.sinks.state import ParquetStateStore
 
 from tests.test_streaming import DB, SERVER, TOPIC, envelope, make_transport, row
 
@@ -97,20 +96,31 @@ def test_runner_end_to_end_file_transport(spark, tmp_path, monkeypatch):
     assert state[0]["amount"] == 5.00
 
 
-def test_runner_versioned_backend_and_bad_transport(spark, tmp_path, monkeypatch):
+def test_runner_bad_transport(spark, tmp_path, monkeypatch):
     specs_file = tmp_path / "specs.json"
     specs_file.write_text(json.dumps(SPECS))
     monkeypatch.setenv("TABLESPECS", str(specs_file))
     monkeypatch.setenv("STATE_PATH", str(tmp_path / "state"))
-    monkeypatch.setenv("STATE_BACKEND", "versioned")
-    (tmp_path / "t").mkdir()
-    monkeypatch.setenv("TRANSPORT", f"file:{tmp_path / 't'}")
-    pipe, _ = build_pipeline(spark)
-    assert isinstance(pipe.store, ParquetStateStore)
-
     monkeypatch.setenv("TRANSPORT", "carrier-pigeon")
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="carrier-pigeon"):
         build_pipeline(spark)
+
+
+def test_runner_rejects_uri_state_path(spark, tmp_path, monkeypatch):
+    """An object-store STATE_PATH fails at build time, before anything is
+    written: the store's commit renames are only atomic on a local
+    filesystem."""
+    specs_file = tmp_path / "specs.json"
+    specs_file.write_text(json.dumps(SPECS))
+    (tmp_path / "t").mkdir()
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("TABLESPECS", str(specs_file))
+    monkeypatch.setenv("STATE_PATH", "s3a://b/state")
+    monkeypatch.setenv("TRANSPORT", f"file:{tmp_path / 't'}")
+    before = sorted(p.name for p in tmp_path.iterdir())
+    with pytest.raises(ValueError, match="s3a://b/state"):
+        build_pipeline(spark)
+    assert sorted(p.name for p in tmp_path.iterdir()) == before
 
 
 def test_runner_max_files_per_trigger_env(spark, tmp_path, monkeypatch):

@@ -1,5 +1,5 @@
 """Sink unit tests: republish frame (K3), dead-letter shaping (K2), state
-store versioning (K1)."""
+store schema evolution (K1)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from etl_consumer_spark.sinks.dead_letter import dead_letter_rows
 from etl_consumer_spark.sinks.republish import republish_frame
-from etl_consumer_spark.sinks.state import ParquetStateStore
+from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 
 
 def _headers(val: bytes | None):
@@ -41,24 +41,11 @@ def test_dead_letter_rows_shape(spark):
     assert r["error"] == "Error-1062-Duplicate-entry-x-"
 
 
-def test_state_store_versioning(spark, tmp_path):
-    store = ParquetStateStore(spark, str(tmp_path))
-    store.init("t", spark.createDataFrame([(1, 10)], "id long, v long"))
-    assert store.current_version("t") == 0
-    events = spark.createDataFrame(
-        [(None, (2, 20), 1, 0)],
-        "before struct<id:long,v:long>, after struct<id:long,v:long>, pos long, ts_ms long",
-    )
-    v = store.upsert("t", events, ["id"])
-    assert v == 1 and store.current_version("t") == 1
-    assert {tuple(r) for r in store.read("t").collect()} == {(1, 10), (2, 20)}
-
-
 def test_state_store_schema_evolution(spark, tmp_path):
     """The DDL loop closed on the parquet backend: translated ALTER
     statements evolve the state schema (reference main.go:88 equivalent)."""
-    store = ParquetStateStore(spark, str(tmp_path / "evo"))
-    store.init("t", spark.createDataFrame([(1, 10)], "id long, v long"))
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "evo"))
+    store.init("t", spark.createDataFrame([(1, 10)], "id long, v long"), ["id"])
     store.evolve("t", "ALTER TABLE t ADD COLUMNS (note STRING)")
     assert store.read("t").columns == ["id", "v", "note"]
     assert store.read("t").collect()[0]["note"] is None
@@ -68,6 +55,22 @@ def test_state_store_schema_evolution(spark, tmp_path):
     assert dict(store.read("t").dtypes)["val"] == "double"
     store.evolve("t", "ALTER TABLE t DROP COLUMN note")
     assert store.read("t").columns == ["id", "val"]
+    assert [tuple(r) for r in store.read("t").collect()] == [(1, 10.0)]
+
+
+def test_state_store_pk_rename_follows_quoted_identifiers(spark, tmp_path):
+    """A pk RENAME in backtick-quoted, db-qualified form moves the
+    persisted pk with it, so later upserts bucket on the renamed column."""
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "pk"), n_buckets=4)
+    store.init("t", spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"), ["id"])
+    store.evolve("t", "ALTER TABLE `db`.`t` RENAME COLUMN `id` TO `key`")
+    assert store._pk_cols("t") == ["key"]
+    events = spark.createDataFrame(
+        [((1, 10), (1, 11), 1, 0)],
+        "before struct<key:long,v:long>, after struct<key:long,v:long>, pos long, ts_ms long",
+    )
+    store.upsert("t", events, ["key"])
+    assert {tuple(r) for r in store.read("t").collect()} == {(1, 11), (2, 20)}
 
 
 def test_republish_delay_header_and_split_due(spark):
@@ -101,46 +104,3 @@ def test_republish_delay_header_and_split_due(spark):
     # messages without the header are immediately due
     due3, deferred3 = split_due(df, now_ms=0)
     assert due3.count() == 1 and deferred3.count() == 0
-
-
-def test_versioned_store_time_travel(spark, tmp_path):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    store = ParquetStateStore(spark, str(tmp_path / "tt"))
-    store.init("t", spark.createDataFrame([(1, "a")], "id long, v string"))
-    img = "struct<id:long,v:string>"
-    ev = spark.range(1).select(
-        F.expr(f"cast(null as {img})").alias("before"),
-        F.expr("named_struct('id', 2L, 'v', 'b')").alias("after"),
-        F.lit(1).cast("long").alias("pos"),
-        F.lit(1).cast("long").alias("ts_ms"),
-    )
-    store.upsert("t", ev, ["id"])
-    assert store.versions("t") == [0, 1]
-    assert store.read("t").count() == 2
-    assert store.read("t", version=0).count() == 1          # time travel
-    assert [r["id"] for r in store.read("t", version=0).collect()] == [1]
-    with _pytest.raises(FileNotFoundError):
-        store.read("t", version=7)
-
-
-def test_versioned_store_vacuum(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    store = ParquetStateStore(spark, str(tmp_path / "vac"))
-    store.init("t", spark.createDataFrame([(1, "a")], "id long, v string"))
-    img = "struct<id:long,v:string>"
-    for i in range(2, 6):
-        ev = spark.range(1).select(
-            F.expr(f"cast(null as {img})").alias("before"),
-            F.expr(f"named_struct('id', {i}L, 'v', 'x')").alias("after"),
-            F.lit(i).cast("long").alias("pos"), F.lit(0).cast("long").alias("ts_ms"),
-        )
-        store.upsert("t", ev, ["id"])
-    assert store.versions("t") == [0, 1, 2, 3, 4]
-    dropped = store.vacuum("t", keep_last=2)
-    assert dropped == [0, 1, 2]
-    assert store.versions("t") == [3, 4]
-    assert store.read("t").count() == 5          # current unaffected
-    assert store.read("t", version=3).count() == 4

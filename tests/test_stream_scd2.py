@@ -190,22 +190,6 @@ def test_pipeline_maintains_scd2_history_table(spark, tmp_path):
     assert got == {1: 1}
 
 
-def test_pipeline_scd2_requires_partitioned_store(spark, tmp_path):
-    from etl_consumer_spark.config import Config
-    from etl_consumer_spark.sinks.state import ParquetStateStore
-    from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
-    from tests.test_streaming import FIELDS, PK, SERVER, DB
-
-    cfg = Config()
-    cfg.server, cfg.db_name, cfg.tables = SERVER, DB, ["batch_seq"]
-    store = ParquetStateStore(spark, str(tmp_path / "vstate"))
-    with pytest.raises(ValueError, match="partitioned"):
-        CDCPipeline(
-            spark, cfg, [TableSpec("batch_seq", FIELDS, PK)], store,
-            scd2_tables={"batch_seq"},
-        )
-
-
 def test_pipeline_scd2_history_evolves_through_mid_stream_ddl(spark, tmp_path):
     """ADVICE r5: a mid-stream ADD COLUMN must evolve <table>__history in
     lockstep with the base table and rebuild the cached maintainer —

@@ -15,7 +15,7 @@ import pytest
 
 from etl_consumer_spark.client.debezium import DebeziumAPI
 from etl_consumer_spark.config import Config
-from etl_consumer_spark.sinks.state import ParquetStateStore
+from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 from etl_consumer_spark.sources.envelope import WireField
 from etl_consumer_spark.sources.kafka import file_envelope_stream
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
@@ -89,11 +89,11 @@ def row(id_, prov, seq, amount_unscaled, day):
 def pipeline_env(spark, tmp_path):
     cfg = Config()
     cfg.server, cfg.db_name, cfg.tables = SERVER, DB, ["batch_seq"]
-    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
     empty = spark.createDataFrame(
         [], "id long, province_id long, seq long, amount double, created_day date"
     )
-    store.init("batch_seq", empty)
+    store.init("batch_seq", empty, PK)
     spec = TableSpec("batch_seq", FIELDS, PK)
     applied_ddl = []
     pipe = CDCPipeline(
@@ -290,9 +290,9 @@ def test_pipeline_multi_table(spark, tmp_path):
 
     cfg = Config()
     cfg.server, cfg.db_name, cfg.tables = SERVER, DB, ["batch_seq", "other_t"]
-    store = ParquetStateStore(spark, str(tmp_path / "state"))
-    store.init("batch_seq", spark.createDataFrame([], "id long, province_id long, seq long, amount double, created_day date"))
-    store.init("other_t", spark.createDataFrame([], "id long, name string"))
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    store.init("batch_seq", spark.createDataFrame([], "id long, province_id long, seq long, amount double, created_day date"), PK)
+    store.init("other_t", spark.createDataFrame([], "id long, name string"), ["id"])
     specs = [
         TableSpec("batch_seq", FIELDS, PK),
         TableSpec("other_t", [WireField("id", "int64"), WireField("name", "string")], ["id"]),
@@ -323,10 +323,10 @@ def test_pipeline_ddl_evolves_parquet_state(spark, tmp_path):
     store schema end-to-end through the streaming DDL path."""
     cfg = Config()
     cfg.server, cfg.db_name, cfg.tables = SERVER, DB, ["batch_seq"]
-    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
     store.init("batch_seq", spark.createDataFrame(
         [(1, 2, 3, 4.0, None)],
-        "id long, province_id long, seq long, amount double, created_day date"))
+        "id long, province_id long, seq long, amount double, created_day date"), PK)
     pipe = CDCPipeline(spark, cfg, [TableSpec("batch_seq", FIELDS, PK)], store)
     make_transport(
         spark,
