@@ -17,6 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_consumer_spark.plans import QUERIES  # noqa: E402
+from etl_consumer_spark.plans.queries import STREAM_PHASES  # noqa: E402
 from etl_consumer_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
@@ -419,20 +420,6 @@ def _cpu_calibration() -> float:
     return round(time.time() - t0, 3)
 
 
-# stream queries whose fn populates STREAM_PHASES: the envelope synthesis +
-# transport write and store seeding are test-DATA GENERATION, not pipeline
-# cost — their phase split is reported alongside the wall time so the
-# stream metric grades the pipeline (VERDICT r5 #6; extended r8 to the
-# snapshot-bootstrap and mid-stream-DDL harnesses, the slowest bench rows)
-_STREAM_QUERIES = (
-    "stream_cdc_full_stack",
-    "stream_cdc_partitioned",
-    "stream_cdc_snapshot_bootstrap",
-    "stream_cdc_type_change",
-    "stream_cdc_scd2",  # r10: the sweep's most expensive stream row at sf1.0
-)
-
-
 def _measure(spark, sf_dir, names=None):
     """One full measurement pass: each query 3x, steady-state (min) time,
     calibration + loadavg bracketing the pass. Returns the result dict and
@@ -452,18 +439,19 @@ def _measure(spark, sf_dir, names=None):
         times = []
         phases = []
         for _ in range(3):
+            STREAM_PHASES.clear()
             t0 = time.time()
             df = q.fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             times.append(time.time() - t0)
-            if name in _STREAM_QUERIES:
-                from etl_consumer_spark.plans.queries import STREAM_PHASES
-
-                phases.append(dict(STREAM_PHASES))
+            phases.append(dict(STREAM_PHASES))
         best = min(range(len(times)), key=times.__getitem__)
         dt = round(times[best], 3)
         per_query[name] = dt
-        if phases:
+        # every CDC stream harness sets STREAM_PHASES: envelope synthesis +
+        # transport write and store seeding are test-DATA GENERATION, not
+        # pipeline cost, so the split is reported beside the wall time
+        if phases[best]:
             stream_phases[name] = phases[best]
         total += dt
         # scale_safe=False marks retained correctness baselines (uncapped

@@ -522,3 +522,39 @@ def test_builtin_percentile_sites_carry_a_documented_bound():
         f"(add a 'percentile() bound:' note or use the exact_percentiles_* "
         f"devices): {offenders}"
     )
+
+
+def test_stream_harness_plumbing_has_one_site_each():
+    """Source-level lint: the registry's stream harnesses share one scratch
+    directory maker, one CDC pipeline wiring, one multi-batch file writer
+    and one envelope encoder — a harness that grows its own copy of any of
+    them (and so its own leaked temp dir, or its own unchecked stream
+    wait) fails here."""
+    import ast
+    from pathlib import Path
+
+    src = (
+        Path(__file__).resolve().parent.parent
+        / "etl_consumer_spark"
+        / "plans"
+        / "queries.py"
+    ).read_text()
+    lines = src.splitlines()
+    bodies = {
+        fn.name: "\n".join(lines[fn.lineno - 1 : fn.end_lineno])
+        for fn in ast.parse(src).body
+        if isinstance(fn, ast.FunctionDef)
+    }
+
+    def owners(needle: str) -> list[str]:
+        """Top-level function of every occurrence of ``needle``."""
+        found = [
+            name for name, body in bodies.items() for _ in range(body.count(needle))
+        ]
+        assert len(found) == src.count(needle), f"{needle} outside any function"
+        return found
+
+    assert owners("tempfile.mkdtemp(") == ["_scratch_dir"]
+    assert owners("CDCPipeline(") == ["_cdc_stream"]
+    assert set(owners("_pin_batch_order(")) <= {"_write_batches"}
+    assert "def env(" not in src

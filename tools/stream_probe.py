@@ -7,8 +7,9 @@ run at 1x and Nx synthesized data (same id-shifted synthesis as
 tools/scale_probe.py: fact keys shifted per copy, dims/shared keys fixed —
 keys get HOTTER with scale) and reports:
 
-- wall ratio and per-phase ratios (STREAM_PHASES for the _stream_cdc_run
-  harnesses: transport write / store seed / stream run);
+- wall ratio and per-phase ratios (STREAM_PHASES, which every CDC stream
+  query sets through the registry's one harness, _cdc_stream: transport
+  write / store seed / stream run);
 - for stream_cdc_transactional, the per-microbatch TX_STREAM_BATCHES rows
   (SPARK_GRAFT_STREAM_PROBE=1): pending rewrite seconds vs pending rows,
   the evidence that the pending-buffer rewrite is linear in PENDING size,
