@@ -35,10 +35,15 @@ def route_schema(df: DataFrame, server: str, topic_col: str = "topic") -> DataFr
     return df.filter(is_schema_topic(topic_col, server))
 
 
+def is_tombstone(value: ColumnOrName) -> Column:
+    """S7 — a zero-length message value (reference: main.go:124-126). Null
+    values (Kafka tombstones surface as null) count too."""
+    return F.coalesce(F.length(_col(value).cast("string")), F.lit(0)) == 0
+
+
 def drop_tombstones(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """S7 — skip zero-length message values (reference: main.go:124-126).
-    Null values (Kafka tombstones surface as null) are dropped too."""
-    return df.filter(F.length(F.col(value_col).cast("string")) > 0)
+    """S7 — skip tombstones (:func:`is_tombstone`)."""
+    return df.filter(~is_tombstone(value_col))
 
 
 def table_whitelist(

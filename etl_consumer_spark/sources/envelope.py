@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_consumer_spark import functions as EF
+from etl_consumer_spark.operators.routing import passthrough_query
 from etl_consumer_spark.schemas import DDL_ENVELOPE_SCHEMA, envelope_schema
 
 # Debezium/Kafka-Connect logical type names (reference main.go:224-297)
@@ -125,10 +126,7 @@ def decode_envelope(
         env["payload"]["source"]["pos"].alias("pos"),
         env["payload"]["ts_ms"].alias("ts_ms"),
         # P7: verbatim passthrough SQL when source.query is meaningful
-        F.when(
-            F.length(env["payload"]["source"]["query"]) > 5,
-            env["payload"]["source"]["query"],
-        ).alias("passthrough"),
+        passthrough_query(env["payload"]["source"]["query"]).alias("passthrough"),
         (env["payload"].isNull()).alias("parse_error"),
     )
 

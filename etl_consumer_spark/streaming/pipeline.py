@@ -1,18 +1,25 @@
 """The end-to-end CDC streaming pipeline: transport → parse → route →
 decode → apply, inside ``foreachBatch``.
 
-Maps the reference's main loop (main.go:63-169) onto micro-batches:
+Maps the reference's main loop (main.go:63-169), which reads each message
+once and decides its fate in one loop body, onto micro-batches that read
+the transport once:
 
-1. split the batch by topic (P1) — schema events vs DML events;
-2. apply the DDL path FIRST (the reference pauses the connector and
+1. one projection classifies every envelope — schema-topic DDL (P1),
+   tombstone (S7), parse error (E4, counted and dropped) or DML for a
+   table — and parses it (S5). The result is cached, and one global
+   aggregate fills the cache and yields the fate counts and each table's
+   row and passthrough counts. Every later step reads the cached frame
+   and runs only when its count is non-zero;
+2. the DDL path runs FIRST (the reference pauses the connector and
    applies DDL synchronously before more DML flows — cross-batch ordering
    per SURVEY §4): filter chain P3-P6, pause (X1), translate+apply,
    resume (X2), errors dead-lettered (E5);
-3. DML path: tombstone filter (S7) → envelope parse (S5) → parse-error
-   drop (E4) → per-table decode (C5/§1.2) → set-based apply with LWW +
-   dup-skip (C1-C6) into the state store (K1);
-4. any per-table apply failure dead-letters the whole table's slice (K2)
-   and emits a bounded republish frame (K3/E1-E3).
+3. per table, inside its dead-letter boundary (K2): decode (C5/§1.2),
+   the bounded passthrough probe (P7), and the set-based apply with LWW +
+   dup-skip (C1-C6) into the state store (K1). Any failure dead-letters
+   the whole table's slice and emits a bounded republish frame
+   (K3/E1-E3).
 
 Exactly-once: the transport checkpoint plus idempotent apply (replays
 collapse in LWW + dup-skip) gives effective exactly-once on state, the
@@ -26,7 +33,10 @@ Real-Time Applications in Apache Spark" (SIGMOD 2018).
 
 from __future__ import annotations
 
+import glob
+import os
 import re as _re
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,15 +48,15 @@ from etl_consumer_spark.operators.ddl import translate_mysql_ddl
 from etl_consumer_spark.operators.routing import (
     drop_blocked_ddl,
     drop_instance_events,
-    drop_tombstones,
     is_empty_ddl,
-    route_dml,
-    route_schema,
+    is_schema_topic,
+    is_tombstone,
+    passthrough_query,
     table_whitelist,
 )
 from etl_consumer_spark.sinks.dead_letter import dead_letter_rows, write_dead_letters
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-from etl_consumer_spark.sinks.republish import republish_frame
+from etl_consumer_spark.sinks.republish import republish_frame, split_due
 from etl_consumer_spark.sources.envelope import (
     DATE,
     DECIMAL,
@@ -56,6 +66,10 @@ from etl_consumer_spark.sources.envelope import (
     parse_ddl_envelope,
     parse_dml_envelope,
 )
+from etl_consumer_spark.sources.kafka import as_transport
+
+# envelope fates besides DML (the ``fate`` column is null for DML)
+_DDL, _TOMBSTONE, _PARSE_ERROR = "ddl", "tombstone", "parse_error"
 
 
 @dataclass
@@ -81,6 +95,8 @@ class BatchResult:
     # configured — otherwise they'd be unexecuted AND unpersisted
     passthrough_overflow: list[str] = field(default_factory=list)
     dead_letters: int = 0
+    tombstones: int = 0     # S7: counted and skipped
+    parse_errors: int = 0   # E4: counted and dropped, no dead letter for DML
     # K3 republish candidates: COUNT of rows spilled to the epoch-keyed
     # parquet retry buffer this batch (VERDICT r8 #2: the rows themselves
     # never visit the driver — the old design collect()ed the failed slice
@@ -283,8 +299,7 @@ class CDCPipeline:
     # -- DDL path (reference main.go:70-121, 382-424) ----------------------
 
     def _process_ddl(self, batch: DataFrame, result: BatchResult) -> None:
-        if batch.isEmpty():  # skip the parse/filter/count jobs on DML-only batches
-            return
+        """``batch`` holds the schema-topic envelopes of the cached batch."""
         parsed = parse_ddl_envelope(batch).select(
             "value",
             F.col("ddl_envelope.payload.databaseName").alias("database_name"),
@@ -295,29 +310,20 @@ class CDCPipeline:
         parsed = table_whitelist(                                              # P3
             parsed, list(self.tables), self.cfg.replace_all_scheme, "source_table"
         )
-        # batch-scoped cache: the error count and the good-DDL collect both
-        # walk this frame, and since the probe de-shuffle (r13) it reads the
-        # RAW transport — without the cache each consumer re-parses the
-        # whole batch through from_json (r13 watch item
-        # stream_cdc_type_change: two full parse passes per DDL batch)
-        parsed = parsed.cache()
-        try:
-            errors = parsed.filter(is_empty_ddl("ddl"))                        # P6
-            dead = dead_letter_rows(
-                errors.withColumn("err", F.lit("unexpected ddl")),
-                "err",
-                ",".join(self.tables),
-                self.cfg.db_name,
-            )
-            n_err = dead.count()
-            if n_err and self.dead_letter_path:
-                write_dead_letters(dead, self.dead_letter_path)
-            result.dead_letters += n_err
+        errors = parsed.filter(is_empty_ddl("ddl"))                            # P6
+        dead = dead_letter_rows(
+            errors.withColumn("err", F.lit("unexpected ddl")),
+            "err",
+            ",".join(self.tables),
+            self.cfg.db_name,
+        )
+        n_err = dead.count()
+        if n_err and self.dead_letter_path:
+            write_dead_letters(dead, self.dead_letter_path)
+        result.dead_letters += n_err
 
-            good = drop_blocked_ddl(parsed.filter(~is_empty_ddl("ddl")), self.cfg.reclaim)  # P5
-            ddl_rows = [r["ddl"] for r in good.select("ddl").collect()]
-        finally:
-            parsed.unpersist()
+        good = drop_blocked_ddl(parsed.filter(~is_empty_ddl("ddl")), self.cfg.reclaim)  # P5
+        ddl_rows = [r["ddl"] for r in good.select("ddl").collect()]
         if not ddl_rows:
             return
         if self.api is not None:
@@ -378,155 +384,110 @@ class CDCPipeline:
 
     # -- DML path (reference main.go:122-168, 348-380) ---------------------
 
-    def _process_dml(self, batch: DataFrame, result: BatchResult) -> None:
-        batch = drop_tombstones(batch)                                         # S7
-        if batch.isEmpty():  # DDL-only batch
-            return
-        # A file-transport micro-batch inherits the transport's file count
-        # as its partitioning — often far below the cluster's parallelism
-        # (a 2-file batch would run the whole JSON parse+decode chain on 2
-        # cores). Kafka transports inherit topic partitions and usually
-        # don't need this. The repartition sits HERE, below the routing /
-        # isEmpty probes, so those limit-1 scans read the transport
-        # directly instead of pulling the whole batch through a shuffle
-        # (guide §2.4 — the old top-level repartition made every probe job
-        # pay a full map-side shuffle of the raw batch); only the parse →
-        # decode → apply chain, which needs the parallelism, pays it, and
-        # exactly once via the parsed cache.
-        parallelism = self.spark.sparkContext.defaultParallelism
-        if batch.rdd.getNumPartitions() < min(parallelism, 32):
-            batch = batch.repartition(min(parallelism, 32))
-        parsed = parse_dml_envelope(batch)
-        # E4: parse failures are logged-and-dropped (no dead letter for DML)
-        parsed = parsed.filter(F.col("envelope.payload").isNotNull())
-        parsed = parsed.withColumn(
-            "table", F.col("envelope.payload.source.table")
+    def _process_table(self, name, spec, slice_df, n_rows, n_passthrough, result) -> None:
+        """One table's slice of the cached batch. All of its work sits inside
+        the table's dead-letter boundary (K2): a failure anywhere, such as
+        an ANSI cast error from a bad value in a non-key column, dead-letters
+        and spills the slice instead of stopping the stream."""
+        # cached: the passthrough probe, the upsert and the SCD2 history all
+        # consume the decoded slice. The decode runs in the first action.
+        decoded = decode_envelope(
+            slice_df,
+            spec.fields,
+            with_timezone=self.cfg.with_timezone,
+            tz_hours=self.cfg.timezone_hours,
         ).cache()
         try:
-            for name, spec in self.tables.items():
-                slice_df = parsed.filter(F.col("table") == name)
-                # cached: both the passthrough probe and the state upsert
-                # consume the decoded slice — without the cache the typed
-                # decode chain runs twice per table per batch
-                decoded = decode_envelope(
+            if n_passthrough:
+                self._run_passthrough(name, decoded, n_passthrough, result)
+            if n_rows > n_passthrough:
+                events = decoded.filter(F.col("passthrough").isNull())
+                result.applied[name] = self.store.upsert(name, events, spec.pk_cols)
+                if name in self.scd2_tables:
+                    # own error channel: a history-write failure must NOT
+                    # dead-letter/republish a slice already committed to the
+                    # base table (the K2/K3 branch would re-apply it on replay)
+                    try:
+                        self._apply_scd2(name, spec, events, result.epoch_id)
+                    except Exception as exc:  # noqa: BLE001
+                        result.scd2_errors.append(f"{name}: {str(exc)[:200]}")
+            # replay hygiene: if THIS (epoch, table) spilled on a previous
+            # attempt and now succeeded on replay, the stale spill would
+            # re-deliver already-committed OLD events on a later requeue —
+            # regressing keys newer epochs updated.
+            self._clear_republish_slice(result.epoch_id, name)
+        except Exception as exc:  # noqa: BLE001 — K2 + K3 branch
+            if self.dead_letter_path:
+                write_dead_letters(
+                    dead_letter_rows(
+                        slice_df.withColumn("err", F.lit(str(exc)[:200])),
+                        "err",
+                        name,
+                        self.cfg.db_name,
+                    ),
+                    self.dead_letter_path,
+                )
+            result.dead_letters += n_rows
+            if self.cfg.republish:
+                # K3: spill the gated retry frame to an epoch-keyed parquet
+                # buffer with a distributed write; the rows never visit the
+                # driver. The epoch-keyed overwrite makes a micro-batch
+                # retry rewrite its own spill instead of double-queueing.
+                out = f"{self._republish_base()}/epoch={result.epoch_id}/table={name}"
+                republish_frame(
                     slice_df,
-                    spec.fields,
-                    with_timezone=self.cfg.with_timezone,
-                    tz_hours=self.cfg.timezone_hours,
-                ).cache()
-                # P7 — bounded: an adversarial batch full of source.query
-                # events would otherwise run one-at-a-time statements on the
-                # driver without limit (the reference has no bound either,
-                # main.go:357-359). The batch itself is already capped by
-                # max_offsets_per_trigger; execution is capped here and the
-                # overflow statements dead-letter (K2 shape) for replay.
-                limit = self.cfg.passthrough_limit
-                # The cap binds IN THE PLAN: at most limit+1 rows ever reach
-                # the driver (an adversarial all-passthrough batch must not
-                # ship the whole batch through collect). The id column makes
-                # the executed prefix deterministic and lets the overflow be
-                # carved out distributively.
-                try:
-                    pt = (
-                        decoded.filter(F.col("passthrough").isNotNull())
-                        .select("passthrough")
-                        .withColumn("_ptid", F.monotonically_increasing_id())
-                        .cache()
-                    )
-                    try:
-                        head = pt.orderBy("_ptid").limit(limit + 1).collect()
-                        for r in head[:limit]:
-                            result.passthrough.append(r["passthrough"])
-                            self.passthrough_executor(r["passthrough"])
-                        if len(head) > limit:
-                            overflow_cnt = pt.count() - limit
-                            executed_ids = [r["_ptid"] for r in head[:limit]]
-                            overflow = (
-                                pt.filter(~F.col("_ptid").isin(executed_ids))
-                                .withColumnRenamed("passthrough", "value")
-                                .withColumn(
-                                    "err", F.lit(f"passthrough limit {limit} exceeded")
-                                )
-                            )
-                            if self.dead_letter_path:
-                                # distributed write — overflow never visits
-                                # the driver
-                                write_dead_letters(
-                                    dead_letter_rows(overflow, "err", name, self.cfg.db_name),
-                                    self.dead_letter_path,
-                                )
-                            else:
-                                # no dead-letter sink configured: keep a
-                                # bounded window of the overflow statements
-                                # replayable in the batch result instead of
-                                # silently dropping them (anything past the
-                                # window is still counted in dead_letters)
-                                result.passthrough_overflow.extend(
-                                    r["value"]
-                                    for r in overflow.select("value").limit(limit).collect()
-                                )
-                            result.dead_letters += overflow_cnt
-                    finally:
-                        pt.unpersist()
-                    events = decoded.filter(F.col("passthrough").isNull())
-                    try:
-                        result.applied[name] = self.store.upsert(name, events, spec.pk_cols)
-                        # replay hygiene (review r9 finding #2): if THIS
-                        # (epoch, table) spilled on a previous attempt and
-                        # now succeeded on replay, the stale spill would
-                        # re-deliver already-committed OLD events on a later
-                        # requeue — regressing keys newer epochs updated.
-                        # Success must clear its own epoch's spill.
-                        self._clear_republish_slice(result.epoch_id, name)
-                        if name in self.scd2_tables:
-                            # own error channel: a history-write failure must
-                            # NOT dead-letter/republish a slice already
-                            # committed to the base table (the K2/K3 branch
-                            # below would re-apply it on replay)
-                            try:
-                                self._apply_scd2(name, spec, events, result.epoch_id)
-                            except Exception as exc:  # noqa: BLE001
-                                result.scd2_errors.append(
-                                    f"{name}: {str(exc)[:200]}"
-                                )
-                    except Exception as exc:  # noqa: BLE001 — K2 + K3 branch
-                        dead = dead_letter_rows(
-                            slice_df.withColumn("err", F.lit(str(exc)[:200])),
-                            "err",
-                            name,
-                            self.cfg.db_name,
-                        )
-                        if self.dead_letter_path:
-                            write_dead_letters(dead, self.dead_letter_path)
-                        result.dead_letters += dead.count()
-                        if self.cfg.republish:
-                            # K3: spill the gated retry frame to an
-                            # epoch-keyed parquet buffer — a DISTRIBUTED
-                            # write (VERDICT r8 #2: the old code collect()ed
-                            # the failed slice, the engine's one surviving
-                            # O(batch) driver materialization; a poison
-                            # batch of N rows pulled N rows driver-side).
-                            # Epoch-keyed overwrite makes a microbatch RETRY
-                            # rewrite its own spill instead of double-
-                            # queueing — the same idempotence device as the
-                            # transactional result buffer; nothing stays
-                            # cached, so no plan pins for the stream's life.
-                            out = (
-                                f"{self._republish_base()}/epoch={result.epoch_id}"
-                                f"/table={name}"
-                            )
-                            republish_frame(
-                                slice_df,
-                                self.cfg.republish_limit,
-                                delay_ms=self.cfg.republish_delay_ms,
-                            ).write.mode("overwrite").parquet(out)
-                            # count from the written files (columnar count
-                            # scan) — cheaper than re-running the gate
-                            result.republish += self.spark.read.parquet(out).count()
-                finally:
-                    decoded.unpersist()
+                    self.cfg.republish_limit,
+                    delay_ms=self.cfg.republish_delay_ms,
+                ).write.mode("overwrite").parquet(out)
+                # count from the written files (columnar count scan) —
+                # cheaper than re-running the gate
+                result.republish += self.spark.read.parquet(out).count()
         finally:
-            parsed.unpersist()
+            decoded.unpersist()
+
+    def _run_passthrough(self, name, decoded, n_passthrough, result) -> None:
+        """P7 — execute at most ``passthrough_limit`` of the slice's verbatim
+        statements. An adversarial batch full of source.query events would
+        otherwise run one-at-a-time statements on the driver without limit
+        (the reference has no bound either, main.go:357-359); the overflow
+        dead-letters (K2 shape) for replay."""
+        limit = self.cfg.passthrough_limit
+        # The cap binds IN THE PLAN: at most ``limit`` rows ever reach the
+        # driver. The id column makes the executed prefix deterministic and
+        # lets the overflow be carved out distributively.
+        pt = (
+            decoded.filter(F.col("passthrough").isNotNull())
+            .select("passthrough")
+            .withColumn("_ptid", F.monotonically_increasing_id())
+            .cache()
+        )
+        try:
+            head = pt.orderBy("_ptid").limit(limit).collect()
+            for r in head:
+                result.passthrough.append(r["passthrough"])
+                self.passthrough_executor(r["passthrough"])
+            if n_passthrough <= limit:
+                return
+            overflow = (
+                pt.filter(~F.col("_ptid").isin([r["_ptid"] for r in head]))
+                .withColumnRenamed("passthrough", "value")
+                .withColumn("err", F.lit(f"passthrough limit {limit} exceeded"))
+            )
+            if self.dead_letter_path:
+                write_dead_letters(
+                    dead_letter_rows(overflow, "err", name, self.cfg.db_name),
+                    self.dead_letter_path,
+                )
+            else:
+                # no dead-letter sink configured: keep a bounded window of
+                # the overflow statements replayable in the batch result
+                # (anything past the window is still counted in dead_letters)
+                result.passthrough_overflow.extend(
+                    r["value"] for r in overflow.select("value").limit(limit).collect()
+                )
+            result.dead_letters += n_passthrough - limit
+        finally:
+            pt.unpersist()
 
     # -- foreachBatch entry point ------------------------------------------
 
@@ -536,20 +497,53 @@ class CDCPipeline:
             # E3 consume side (closed-loop mode only): not-yet-due retries
             # re-feed the transport VERBATIM (headers untouched — deferral
             # never consumes an attempt) and only due rows process now
-            from etl_consumer_spark.sinks.republish import split_due
-            from etl_consumer_spark.sources.kafka import as_transport
-
             due, deferred = split_due(batch)
             if not deferred.isEmpty():
                 as_transport(deferred).write.mode("append").parquet(
                     self.retry_transport_path
                 )
                 batch = due
-        schema_events = route_schema(batch, self.cfg.server)                   # P1
-        dml_events = route_dml(batch, self.cfg.server)
-        # DDL strictly before DML (SURVEY §4: pause-the-world ordering)
-        self._process_ddl(schema_events, result)
-        self._process_dml(dml_events, result)
+        # A file-transport micro-batch inherits the transport's file count as
+        # its partitioning — often far below the cluster's parallelism (a
+        # 2-file batch would run the whole parse+decode chain on 2 cores).
+        # Kafka transports inherit topic partitions and usually don't need it.
+        parallelism = min(self.spark.sparkContext.defaultParallelism, 32)
+        if batch.rdd.getNumPartitions() < parallelism:
+            batch = batch.repartition(parallelism)
+        # One projection classifies and parses every envelope: schema-topic
+        # DDL (P1), tombstone (S7), parse error (S5/E4: counted and
+        # dropped), or else DML for ``table``.
+        fate = (
+            F.when(is_schema_topic("topic", self.cfg.server), F.lit(_DDL))
+            .when(is_tombstone("value"), F.lit(_TOMBSTONE))
+            .when(F.col("envelope.payload").isNull(), F.lit(_PARSE_ERROR))
+        )
+        parsed = parse_dml_envelope(batch).select(
+            "*",
+            fate.alias("fate"),
+            F.when(fate.isNull(), F.col("envelope.payload.source.table")).alias("table"),
+        ).cache()
+        try:
+            # One global aggregate (no grouping key, so no reduce stage as
+            # wide as spark.sql.shuffle.partitions) fills the cache and yields
+            # every count; each later step reads the cached frame and runs
+            # only when its count is non-zero.
+            in_table = [F.col("table") == name for name in self.tables]
+            is_passthrough = passthrough_query("envelope.payload.source.query").isNotNull()
+            n_ddl, result.tombstones, result.parse_errors, *n = parsed.agg(
+                *[F.count_if(F.col("fate") == f) for f in (_DDL, _TOMBSTONE, _PARSE_ERROR)],
+                *[F.count_if(c) for c in in_table],
+                *[F.count_if(c & is_passthrough) for c in in_table],
+            ).first()
+            # DDL strictly before DML (SURVEY §4: pause-the-world ordering)
+            if n_ddl:
+                self._process_ddl(parsed.filter(F.col("fate") == _DDL), result)
+            k = len(self.tables)
+            for (name, spec), c, n_rows, n_pt in zip(self.tables.items(), in_table, n[:k], n[k:]):
+                if n_rows:
+                    self._process_table(name, spec, parsed.filter(c), n_rows, n_pt, result)
+        finally:
+            parsed.unpersist()
         if self.retry_transport_path is not None and result.republish:
             # K3 closed loop: this batch's spilled retries go straight back
             # into the transport (snapshot drain — concurrent spills from a
@@ -577,27 +571,21 @@ class CDCPipeline:
         return self.republish_path
 
     def _clear_republish_slice(self, epoch_id: int, table: str) -> None:
-        import os as _os
-        import shutil as _shutil
-
         if self.republish_path is None:
             return
         d = f"{self.republish_path}/epoch={epoch_id}/table={table}"
-        if _os.path.isdir(d):
-            _shutil.rmtree(d, ignore_errors=True)
+        if os.path.isdir(d):
+            shutil.rmtree(d, ignore_errors=True)
 
     def _republish_slices(self) -> list[str]:
         """Leaf spill directories (epoch=*/table=*), a STABLE snapshot —
         drain operates on exactly this list so rows spilled concurrently by
         a live stream are never deleted un-requeued (review r9 finding #3)."""
-        import glob as _glob
-        import os as _os
-
         base = self._republish_base()
-        if not _os.path.isdir(base):
+        if not os.path.isdir(base):
             return []
         return sorted(
-            d for d in _glob.glob(f"{base}/epoch=*/table=*") if _os.path.isdir(d)
+            d for d in glob.glob(f"{base}/epoch=*/table=*") if os.path.isdir(d)
         )
 
     def pending_republish(self) -> DataFrame | None:
@@ -624,10 +612,6 @@ class CDCPipeline:
         stays in the buffer for the next drain instead of being deleted
         unrequeued; the materialized snapshot also pins count == written
         rows."""
-        import shutil as _shutil
-
-        from etl_consumer_spark.sources.kafka import as_transport
-
         slices = self._republish_slices()
         if not slices:
             return 0
@@ -640,7 +624,7 @@ class CDCPipeline:
         if n:
             as_transport(pending).write.mode("append").parquet(transport_path)
         for d in slices:
-            _shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(d, ignore_errors=True)
         return n
 
     def start(self, transport: DataFrame, checkpoint_dir: str | None = None, trigger_available_now: bool = False):

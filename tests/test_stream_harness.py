@@ -4,6 +4,7 @@ the bounded stream wait of both runners (CDC pipeline and memory sink)."""
 from __future__ import annotations
 
 import os
+import subprocess
 
 import pytest
 
@@ -29,6 +30,25 @@ def test_scratch_dirs_share_one_root_removed_by_exit_hook(tmp_path, monkeypatch)
     hooks[0]()
     assert not os.path.exists(root)
     hooks[0]()  # a second call is harmless
+
+
+def test_scratch_root_removes_roots_of_dead_pids(tmp_path, monkeypatch):
+    """A process killed by a signal skips the exit hook; the next process to
+    make its root removes roots whose pid is gone and keeps live ones."""
+    monkeypatch.setattr(Q.atexit, "register", lambda hook: None)
+    monkeypatch.setattr(Q.tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(Q, "_scratch_root", None)
+    child = subprocess.Popen(["true"])
+    child.wait()
+    dead = tmp_path / f"etl_scratch_{child.pid}_0badc0de"
+    live = tmp_path / f"etl_scratch_{os.getppid()}_0badc0de"
+    other = tmp_path / f"etl_scratch_notapid_{child.pid}"
+    for d in (dead, live, other):
+        (d / "stream_x").mkdir(parents=True)
+
+    Q._scratch_dir("stream_a_")
+    assert not dead.exists()
+    assert live.exists() and other.exists()
 
 
 class _StuckQuery:
