@@ -20,7 +20,6 @@ from etl_consumer_spark.operators.ddl import (
     apply_ddl_batch,
     ddl_pipeline,
     translate_mysql_ddl,
-    translate_mysql_type,
 )
 from etl_consumer_spark.operators.retry import (
     loop_count_from_headers,
@@ -87,6 +86,5 @@ __all__ = [
     "sessionize",
     "table_whitelist",
     "translate_mysql_ddl",
-    "translate_mysql_type",
     "with_retry_columns",
 ]

@@ -173,6 +173,11 @@ def apply_cdc(
     latest = compact_events(events, pk_cols, before_col, after_col, pos_col, ts_col)
     op = F.col("_op")
 
+    def image(c: str) -> Column:
+        # the state schema decides column types, so a rewritten slice never
+        # disagrees with untouched rows (Catalyst drops a same-type cast)
+        return F.col(f"_after.{c}").cast(state.schema[c].dataType)
+
     if broadcast_batch:
         # Scale path (micro-batch ≪ state): state is only STREAMED, never
         # shuffled. Upsert mode needs ONE broadcast join (state anti the
@@ -203,7 +208,7 @@ def apply_cdc(
                 F.broadcast(latest.select(*pk_cols)), on=pk_cols, how="left_anti"
             )
             replacements = latest.filter(op.isin(OP_INSERT, OP_UPDATE)).select(
-                *[c if c in pk_cols else F.col(f"_after.{c}").alias(c) for c in cols]
+                *[c if c in pk_cols else image(c).alias(c) for c in cols]
             )
             return survivors.unionByName(replacements)
         joined = state.alias("s").join(F.broadcast(latest.alias("e")), on=pk_cols, how="left")
@@ -212,7 +217,7 @@ def apply_cdc(
         survivors = joined.filter(keep).select(
             *[
                 c if c in pk_cols
-                else F.when(use_state, F.col(f"s.{c}")).otherwise(F.col(f"_after.{c}")).alias(c)
+                else F.when(use_state, F.col(f"s.{c}")).otherwise(image(c)).alias(c)
                 for c in cols
             ]
         )
@@ -222,7 +227,7 @@ def apply_cdc(
             .join(F.broadcast(candidates.select(*pk_cols)), on=pk_cols, how="left_semi")
         )
         new_rows = candidates.join(F.broadcast(matched_keys), on=pk_cols, how="left_anti").select(
-            *[c if c in pk_cols else F.col(f"_after.{c}").alias(c) for c in cols]
+            *[c if c in pk_cols else image(c).alias(c) for c in cols]
         )
         return survivors.unionByName(new_rows)
 
@@ -243,7 +248,7 @@ def apply_cdc(
             out_cols.append(F.col(c).alias(c))
         else:
             out_cols.append(
-                F.when(use_state, F.col(f"s.{c}")).otherwise(F.col(f"_after.{c}")).alias(c)
+                F.when(use_state, F.col(f"s.{c}")).otherwise(image(c)).alias(c)
             )
     return joined.filter(keep).select(*out_cols)
 

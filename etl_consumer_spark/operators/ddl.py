@@ -1,12 +1,12 @@
 """DDL pipeline operators (SURVEY §2.3 P3-P6, §2.4 C7, §3.2).
 
 The reference replays MySQL DDL verbatim against the target MySQL after a
-filter chain (main.go:382-424). In the Spark engine the filter chain is
-declarative (see operators.routing) and the *apply* step needs a dialect
-translation when the state tables live in the Spark catalog rather than
-behind JDBC. Translation is deliberately minimal: the ALTER forms Debezium
-actually emits (cf. reference collection.json:121 — ``ALTER TABLE ...
-CHANGE COLUMN``), plus ADD/DROP COLUMN.
+filter chain (main.go:382-424). Here the filter chain is declarative (see
+operators.routing) and each schema change is decided once:
+:func:`translate_mysql_ddl` gives every ALTER TABLE clause (ADD, DROP,
+CHANGE or MODIFY [COLUMN]; cf. reference collection.json:121) a
+Spark-SQL statement and the Debezium wire binding of its MySQL type, and
+:func:`parse_statement` is the one reader of those statements.
 """
 
 from __future__ import annotations
@@ -24,101 +24,178 @@ from etl_consumer_spark.operators.routing import (
     is_empty_ddl,
     table_whitelist,
 )
+from etl_consumer_spark.schemas import DATE, DECIMAL, MICROTIME, TIMESTAMP, ZONEDTS, WireField
 
-# MySQL -> Spark SQL type mapping for the column types Debezium CDC emits.
-_TYPE_MAP = [
-    (r"(?i)\bTINYINT\s*\(\s*1\s*\)", "BOOLEAN"),
-    (r"(?i)\bTINYINT(\s*\(\d+\))?( UNSIGNED)?", "TINYINT"),
-    (r"(?i)\bSMALLINT(\s*\(\d+\))?( UNSIGNED)?", "SMALLINT"),
-    (r"(?i)\bMEDIUMINT(\s*\(\d+\))?( UNSIGNED)?", "INT"),
-    (r"(?i)\bBIGINT(\s*\(\d+\))?( UNSIGNED)?", "BIGINT"),
-    (r"(?i)\bINT(EGER)?(\s*\(\d+\))?( UNSIGNED)?", "INT"),
-    (r"(?i)\bDOUBLE(\s*\(\d+\s*,\s*\d+\))?", "DOUBLE"),
-    (r"(?i)\bFLOAT(\s*\(\d+\s*,\s*\d+\))?", "FLOAT"),
-    (r"(?i)\bDECIMAL\s*\((\d+)\s*,\s*(\d+)\)", r"DECIMAL(\1,\2)"),
-    (r"(?i)\bDATETIME(\s*\(\d+\))?", "TIMESTAMP"),
-    (r"(?i)\bTIMESTAMP(\s*\(\d+\))?", "TIMESTAMP"),
-    (r"(?i)\bDATE\b", "DATE"),
-    (r"(?i)\bTIME(\s*\(\d+\))?\b", "STRING"),  # engine stores MicroTime as H:M:S string (F4)
-    (r"(?i)\b(VAR)?CHAR\s*\(\d+\)", "STRING"),
-    (r"(?i)\b(TINY|MEDIUM|LONG)?TEXT\b", "STRING"),
-    (r"(?i)\bENUM\s*\([^)]*\)", "STRING"),
-    (r"(?i)\b(TINY|MEDIUM|LONG)?BLOB\b", "BINARY"),
-    (r"(?i)\bVAR?BINARY\s*\(\d+\)", "BINARY"),
-    (r"(?i)\bJSON\b", "STRING"),
+# MySQL column type -> (Spark SQL type, Connect primitive, logical type) of
+# the column as the Debezium MySQL connector emits it. First full match
+# wins; DECIMAL is handled apart (its precision and scale bind the decoder).
+_TYPES = [
+    (r"TINYINT\s*\(\s*1\s*\)", "BOOLEAN", "boolean", None),
+    (r"TINYINT(?:\s*\(\d+\))?", "TINYINT", "int16", None),
+    (r"SMALLINT(?:\s*\(\d+\))?", "SMALLINT", "int16", None),
+    (r"MEDIUMINT(?:\s*\(\d+\))?", "INT", "int32", None),
+    (r"BIGINT(?:\s*\(\d+\))?", "BIGINT", "int64", None),
+    (r"INT(?:EGER)?(?:\s*\(\d+\))?", "INT", "int32", None),
+    (r"DOUBLE(?:\s*\(\d+\s*,\s*\d+\))?", "DOUBLE", "float64", None),
+    (r"FLOAT(?:\s*\(\d+\s*,\s*\d+\))?", "FLOAT", "float32", None),
+    (r"DATETIME(?:\s*\(\d+\))?", "TIMESTAMP", "int64", TIMESTAMP),
+    (r"TIMESTAMP(?:\s*\(\d+\))?", "TIMESTAMP", "string", ZONEDTS),
+    (r"DATE", "DATE", "int32", DATE),
+    # the decoder stores MicroTime as an H:M:S string (F4)
+    (r"TIME(?:\s*\(\d+\))?", "STRING", "int64", MICROTIME),
+    (r"(?:VAR)?CHAR\s*\(\d+\)|(?:TINY|MEDIUM|LONG)?TEXT|JSON", "STRING", "string", None),
+    (r"ENUM\s*\(.*\)", "STRING", "string", None),
+    (r"(?:TINY|MEDIUM|LONG)?BLOB|(?:VAR)?BINARY\s*\(\d+\)", "BINARY", "bytes", None),
 ]
+_DECIMAL_TYPE = re.compile(r"(?is)DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)")
 
-# MySQL column attributes Spark SQL doesn't take in ALTER ... ADD/CHANGE
+# MySQL column attributes and placement that Spark SQL doesn't take in
+# ALTER ... ADD/CHANGE, and that do not change the column's type
 _ATTR_STRIP = re.compile(
-    r"(?i)\s+(NOT\s+NULL|NULL|AUTO_INCREMENT|DEFAULT\s+(?:'[^']*'|\S+)|"
-    r"CHARACTER\s+SET\s+\S+|COLLATE\s+\S+|UNSIGNED|ON\s+UPDATE\s+\S+(?:\(\))?)"
+    r"(?is)\s+(COMMENT\s+(?:'(?:[^'\\]|\\.|'')*'|\"[^\"]*\")|NOT\s+NULL|NULL|AUTO_INCREMENT|"
+    r"DEFAULT\s+(?:'[^']*'|\S+)|CHARACTER\s+SET\s+\S+|COLLATE\s+\S+|"
+    r"UNSIGNED|ON\s+UPDATE\s+\S+(?:\(\))?|FIRST\b|AFTER\s+`?[\w$]+`?)"
 )
 
 
-def translate_mysql_type(mysql_type: str) -> str:
-    out = mysql_type
-    for pat, repl in _TYPE_MAP:
-        new = re.sub(pat, repl, out)
-        if new != out:
-            return new
-    return out
+def _column_type(column: str, mysql_type: str) -> tuple[str, WireField] | None:
+    """(Spark SQL type, wire binding) for a MySQL column type, or None when
+    the type is not one the engine decodes."""
+    t = _ATTR_STRIP.sub("", " " + mysql_type).strip()
+    m = _DECIMAL_TYPE.fullmatch(t)
+    if m:
+        precision, scale = int(m[1]), int(m[2])
+        field = WireField(column, "bytes", DECIMAL, scale=scale, precision=precision)
+        return f"DECIMAL({precision},{scale})", field
+    for pattern, spark_type, wire_type, logical in _TYPES:
+        if re.fullmatch(pattern, t, re.I | re.S):
+            return spark_type, WireField(column, wire_type, logical)
+    return None
 
 
-@dataclass
+def state_type(spark_type: str) -> str:
+    """The state column type for a translated Spark type. F6 parity: the
+    reference stores MySQL tinyint(1) booleans as ints (bool_to_int,
+    main.go:259-265), so a BOOLEAN column is kept as INT in state."""
+    return "INT" if spark_type.strip().upper() == "BOOLEAN" else spark_type
+
+
+@dataclass(frozen=True)
 class TranslatedDDL:
-    """One Spark-SQL statement derived from a MySQL DDL, or a skip marker."""
+    """One schema change decided from one ALTER clause, or a skip marker.
+    ``field`` is the column's wire binding after an ADD or a type change
+    (None for DROP, and for RENAME, which keeps the column's binding)."""
 
     statement: str | None
-    reason: str | None = None  # set when statement is None
+    reason: str | None = None      # set when statement is None
+    op: str | None = None          # "add" | "drop" | "rename" | "type"
+    table: str | None = None
+    column: str | None = None
+    new_name: str | None = None    # rename target
+    spark_type: str | None = None  # add / type change
+    field: WireField | None = None
 
 
-_ADD_RE = re.compile(
-    r"(?i)^\s*ALTER\s+TABLE\s+`?(\w+)`?\s+ADD\s+(?:COLUMN\s+)?`?(\w+)`?\s+(.+?)\s*$"
-)
-_DROP_RE = re.compile(r"(?i)^\s*ALTER\s+TABLE\s+`?(\w+)`?\s+DROP\s+(?:COLUMN\s+)?`?(\w+)`?\s*$")
-_CHANGE_RE = re.compile(
-    r"(?i)^\s*ALTER\s+TABLE\s+`?(\w+)`?\s+CHANGE\s+(?:COLUMN\s+)?`?(\w+)`?\s+`?(\w+)`?\s+(.+?)\s*$"
-)
-_MODIFY_RE = re.compile(
-    r"(?i)^\s*ALTER\s+TABLE\s+`?(\w+)`?\s+MODIFY\s+(?:COLUMN\s+)?`?(\w+)`?\s+(.+?)\s*$"
-)
+# Identifiers may be bare or backtick-quoted, tables db-qualified either way
+_TBL = r"`?(?:[\w$]+`?\s*\.\s*`?)?([\w$]+)`?"
+_COL = r"`?([\w$]+)`?"
+
+# The translated statement forms: rendered by _change, read back by
+# parse_statement
+_FORMS = {
+    "add": "ALTER TABLE {table} ADD COLUMNS ({column} {spark_type})",
+    "drop": "ALTER TABLE {table} DROP COLUMN {column}",
+    "rename": "ALTER TABLE {table} RENAME COLUMN {column} TO {new_name}",
+    "type": "ALTER TABLE {table} ALTER COLUMN {column} TYPE {spark_type}",
+}
+_STATEMENTS = {
+    op: re.compile(rf"(?is)\s*ALTER\s+TABLE\s+{_TBL}\s+{body}\s*")
+    for op, body in {
+        "add": rf"ADD\s+COLUMNS\s*\(\s*{_COL}\s+(.+?)\s*\)",
+        "drop": rf"DROP\s+COLUMN\s+{_COL}",
+        "rename": rf"RENAME\s+COLUMN\s+{_COL}\s+TO\s+{_COL}",
+        "type": rf"ALTER\s+COLUMN\s+{_COL}\s+TYPE\s+(.+?)",
+    }.items()
+}
+
+
+def _change(op: str, table: str, column: str, **kw) -> TranslatedDDL:
+    args = {"new_name": None, "spark_type": None, **kw}
+    statement = _FORMS[op].format(table=table, column=column, **args)
+    return TranslatedDDL(statement, op=op, table=table, column=column, **kw)
+
+
+def parse_statement(statement: str) -> TranslatedDDL | None:
+    """Read a translated statement back (the state store receives strings):
+    op, table, column and new name or Spark type. Identifiers may be
+    quoted or db-qualified. The wire binding is not recoverable from a
+    Spark type, so ``field`` stays None. None for any other statement."""
+    for op, pattern in _STATEMENTS.items():
+        m = pattern.fullmatch(statement)
+        if m:
+            table, column, *arg = m.groups()
+            kw = {"new_name" if op == "rename" else "spark_type": arg[0]} if arg else {}
+            return TranslatedDDL(statement, op=op, table=table, column=column, **kw)
+    return None
+
+
+def _split(text: str, sep: str) -> list[str]:
+    """``text`` split at ``sep`` outside quotes and parentheses, so the comma
+    in ``DECIMAL(10,2)`` or ``ENUM('a','b')`` stays inside its clause."""
+    parts, depth, quote, start = [], 0, None, 0
+    for i, ch in enumerate(text):
+        if quote:
+            quote = None if ch == quote else quote
+        elif ch in "'\"`":
+            quote = ch
+        elif ch in "()":
+            depth += 1 if ch == "(" else -1
+        elif ch == sep and depth == 0:
+            parts.append(text[start:i])
+            start = i + 1
+    parts.append(text[start:])
+    return [p.strip() for p in parts if p.strip()]
+
+
+_ALTER = re.compile(rf"(?is)ALTER\s+TABLE\s+{_TBL}\s+(.+)")
+_CLAUSES = [
+    # ADD INDEX/KEY/... parse as a column with an unknown type: skipped
+    ("add", re.compile(rf"(?is)ADD\s+(?:COLUMN\s+)?{_COL}\s+(.+)")),
+    ("drop", re.compile(rf"(?is)DROP\s+(?:COLUMN\s+)?{_COL}")),
+    ("change", re.compile(rf"(?is)CHANGE\s+(?:COLUMN\s+)?{_COL}\s+{_COL}\s+(.+)")),
+    ("type", re.compile(rf"(?is)MODIFY\s+(?:COLUMN\s+)?{_COL}\s+(.+)")),
+]
+
+
+def _translate_clause(table: str, clause: str) -> TranslatedDDL:
+    for op, pattern in _CLAUSES:
+        m = pattern.fullmatch(clause)
+        if not m:
+            continue
+        if op == "drop":
+            return _change(op, table, m[1])
+        if op == "change" and m[1].lower() != m[2].lower():
+            return _change("rename", table, m[1], new_name=m[2])
+        typed = _column_type(m[1], m[m.lastindex])
+        if typed:
+            op = "add" if op == "add" else "type"
+            return _change(op, table, m[1], spark_type=typed[0], field=typed[1])
+    return TranslatedDDL(None, reason=f"unsupported DDL form: {clause[:80]}")
 
 
 def translate_mysql_ddl(ddl: str) -> list[TranslatedDDL]:
-    """Translate a (db-qualifier-stripped) MySQL DDL statement into Spark SQL
-    statements. Unsupported statements come back as skip markers so the
-    caller can dead-letter them rather than fail the batch."""
-    stmts = [s.strip() for s in ddl.split(";") if s.strip()]
+    """Translate MySQL DDL into one :class:`TranslatedDDL` per ALTER TABLE
+    clause. The table may be bare, quoted or db-qualified; column placement
+    (AFTER/FIRST) and comments are dropped. Unsupported statements and
+    clauses come back as skip markers so the caller can dead-letter them
+    rather than fail the batch."""
     out: list[TranslatedDDL] = []
-    for s in stmts:
-        m = _ADD_RE.match(s)
-        if m and not re.match(r"(?i).*(ADD\s+(INDEX|KEY|CONSTRAINT|PRIMARY))", s):
-            tbl, col, typ = m.groups()
-            typ = _ATTR_STRIP.sub("", typ).strip()
-            out.append(TranslatedDDL(f"ALTER TABLE {tbl} ADD COLUMNS ({col} {translate_mysql_type(typ)})"))
-            continue
-        m = _DROP_RE.match(s)
-        if m:
-            tbl, col = m.groups()
-            out.append(TranslatedDDL(f"ALTER TABLE {tbl} DROP COLUMN {col}"))
-            continue
-        m = _CHANGE_RE.match(s)
-        if m:
-            tbl, old, new, typ = m.groups()
-            typ = _ATTR_STRIP.sub("", typ).strip()
-            spark_type = translate_mysql_type(typ)
-            if old.lower() == new.lower():
-                out.append(TranslatedDDL(f"ALTER TABLE {tbl} ALTER COLUMN {old} TYPE {spark_type}"))
-            else:
-                out.append(TranslatedDDL(f"ALTER TABLE {tbl} RENAME COLUMN {old} TO {new}"))
-            continue
-        m = _MODIFY_RE.match(s)
-        if m:
-            tbl, col, typ = m.groups()
-            typ = _ATTR_STRIP.sub("", typ).strip()
-            out.append(TranslatedDDL(f"ALTER TABLE {tbl} ALTER COLUMN {col} TYPE {translate_mysql_type(typ)}"))
-            continue
-        out.append(TranslatedDDL(None, reason=f"unsupported DDL form: {s[:80]}"))
+    for stmt in _split(ddl, ";"):
+        m = _ALTER.fullmatch(stmt)
+        out += (
+            [_translate_clause(m[1], c) for c in _split(m[2], ",")] if m
+            else [TranslatedDDL(None, reason=f"unsupported DDL form: {stmt[:80]}")]
+        )
     return out
 
 
@@ -149,14 +226,11 @@ def apply_ddl_batch(spark: SparkSession, ddl_rows: list[str]) -> list[Translated
     foreachBatch — serialized before DML batches per SURVEY §4). Returns the
     per-statement outcomes; skip markers are the caller's dead letters."""
     results: list[TranslatedDDL] = []
-    for ddl in ddl_rows:
-        for t in translate_mysql_ddl(ddl):
-            if t.statement is None:
-                results.append(t)
-                continue
-            try:
+    for t in (t for ddl in ddl_rows for t in translate_mysql_ddl(ddl)):
+        try:
+            if t.statement is not None:
                 spark.sql(t.statement)
-                results.append(t)
-            except Exception as exc:  # noqa: BLE001 - dead-letter, don't fail the batch
-                results.append(TranslatedDDL(None, reason=f"{t.statement}: {exc}"))
+            results.append(t)
+        except Exception as exc:  # noqa: BLE001 - dead-letter, don't fail the batch
+            results.append(TranslatedDDL(None, reason=f"{t.statement}: {exc}"))
     return results

@@ -44,6 +44,7 @@ from pyspark.sql import SparkSession
 
 from etl_consumer_spark.client.debezium import DebeziumAPI
 from etl_consumer_spark.config import Config
+from etl_consumer_spark.session import get_spark
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 from etl_consumer_spark.sources.envelope import WireField, wire_fields_from_connect_schema
 from etl_consumer_spark.sources.kafka import file_envelope_stream, kafka_stream
@@ -118,13 +119,8 @@ def build_pipeline(spark: SparkSession, cfg: Config | None = None) -> tuple[CDCP
 
 def main() -> None:
     cfg = Config()
-    spark = (
-        SparkSession.builder.appName("etl_consumer_spark")
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    # the launcher picks the master (spark-submit --master, else local[*])
+    spark = get_spark(master="", shuffle_partitions=cfg.shuffle_partitions)
     pipe, transport = build_pipeline(spark, cfg)
     once = os.environ.get("RUN_ONCE", "0") in ("1", "true")
     query = pipe.start(transport, trigger_available_now=once)

@@ -14,7 +14,29 @@ available through :func:`envelope_schema_for_table`.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import types as T
+
+# Debezium/Kafka-Connect logical type names (reference main.go:224-297)
+DECIMAL = "org.apache.kafka.connect.data.Decimal"
+DATE = "io.debezium.time.Date"
+TIMESTAMP = "io.debezium.time.Timestamp"
+MICROTIME = "io.debezium.time.MicroTime"
+ZONEDTS = "io.debezium.time.ZonedTimestamp"
+
+
+@dataclass
+class WireField:
+    """One column of a table's Debezium wire schema: the build-time
+    equivalent of the reference's per-row Field lookup (data/model.go:38-53)."""
+
+    name: str
+    type: str = "string"           # connect primitive: boolean/int32/int64/float32/float64/string
+    logical: str | None = None     # connect `name` (logical type), e.g. Decimal
+    scale: int = 0                 # parameters.scale for Decimal
+    precision: int = 18            # connect.decimal.precision for Decimal
+
 
 # reference: data/model.go:18-31 (Source struct)
 SOURCE_SCHEMA = T.StructType(

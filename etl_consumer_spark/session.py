@@ -7,9 +7,27 @@ doing runtime re-planning at the 100 TB scale target.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_max: str = "/sys/fs/cgroup/memory.max"
+) -> str:
+    """``SPARK_DRIVER_MEMORY`` when set; else half of the memory this process
+    may use, capped at 48g: the smaller of the cgroup limit (when one is
+    set) and ``MemTotal``. A heap sized past physical memory lets the JVM
+    grow until the kernel kills it."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    limits = [96 * 2**30]  # the 48g cap, before halving
+    with contextlib.suppress(OSError), open(meminfo) as fh:
+        limits += [int(line.split()[1]) * 1024 for line in fh if line.startswith("MemTotal:")]
+    with contextlib.suppress(OSError), open(cgroup_max) as fh:
+        limits += [int(raw) for raw in [fh.read().strip()] if raw.isdigit()]  # "max": no limit
+    return f"{min(limits) // 2 // 2**20}m"
 
 
 def get_spark(
@@ -27,14 +45,21 @@ def get_spark(
     - Arrow on (pandas_udf fast path for the one non-expression decoder)
     - shuffle partitions sized to cores locally; on a cluster, AQE's
       coalescePartitions makes the initial number non-critical.
+    - driver heap from :func:`driver_memory`.
+
+    ``master=None`` takes ``SPARK_MASTER``, else ``local[SPARK_GRAFT_CPUS]``
+    (32 when unset); ``master=""`` sets none and leaves it to the launcher
+    (spark-submit's ``--master``, else pyspark's ``local[*]``).
     """
-    master = master or os.environ.get("SPARK_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    if master is None:
+        master = os.environ.get("SPARK_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
     shuffle_partitions = shuffle_partitions or int(os.environ.get("SHUFFLE_PARTITIONS", "32"))
 
+    builder = SparkSession.builder.appName(app_name)
+    if master:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -42,7 +67,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

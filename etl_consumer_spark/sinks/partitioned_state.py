@@ -65,7 +65,25 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_consumer_spark.operators.apply import apply_cdc
-from etl_consumer_spark.sinks.state import evolve_frame, parse_rename_column
+from etl_consumer_spark.operators.ddl import parse_statement, state_type
+
+
+def evolve_frame(df: DataFrame, statement: str) -> DataFrame:
+    """Apply one translated DDL statement (``operators.ddl`` output) to a
+    state DataFrame — the parquet equivalent of the reference's
+    db.Exec(ddl) (main.go:88). ADD COLUMNS (null for existing rows), DROP
+    COLUMN, RENAME COLUMN and ALTER COLUMN TYPE; a column takes the
+    :func:`operators.ddl.state_type` of the statement's type."""
+    change = parse_statement(statement)
+    if change is None:
+        raise ValueError(f"unsupported evolved DDL: {statement}")
+    col = change.column
+    if change.op == "drop":
+        return df.drop(col)
+    if change.op == "rename":
+        return df.withColumnRenamed(col, change.new_name)
+    typed = F.lit(None) if change.op == "add" else F.col(col)
+    return df.withColumn(col, typed.cast(state_type(change.spark_type)))
 
 
 class PartitionedParquetStateStore:
@@ -370,11 +388,11 @@ class PartitionedParquetStateStore:
         reference pauses the connector around it, main.go:70-121), so a
         full rewrite here is acceptable; per-batch DML stays partial."""
         df = evolve_frame(self.read(table), statement)
-        pk = self._pk_cols(table) or [df.columns[0]]
-        renamed = parse_rename_column(statement)
-        if renamed:
-            _, old, new = renamed
-            pk = [new if c == old else c for c in pk]
+        change = parse_statement(statement)
+        pk = [
+            change.new_name if change.op == "rename" and c == change.column else c
+            for c in self._pk_cols(table) or [df.columns[0]]
+        ]
         # the table's PERSISTED layout survives evolution — a store instance
         # constructed with different bucket settings must not silently
         # re-bucket someone else's table

@@ -10,33 +10,14 @@ whole decode is a single vectorized projection (SURVEY §1.1 row 3).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_consumer_spark import functions as EF
 from etl_consumer_spark.operators.routing import passthrough_query
 from etl_consumer_spark.schemas import DDL_ENVELOPE_SCHEMA, envelope_schema
-
-# Debezium/Kafka-Connect logical type names (reference main.go:224-297)
-DECIMAL = "org.apache.kafka.connect.data.Decimal"
-DATE = "io.debezium.time.Date"
-TIMESTAMP = "io.debezium.time.Timestamp"
-MICROTIME = "io.debezium.time.MicroTime"
-ZONEDTS = "io.debezium.time.ZonedTimestamp"
-
-
-@dataclass
-class WireField:
-    """One column of a table's Debezium wire schema: the build-time
-    equivalent of the reference's per-row Field lookup (data/model.go:38-53)."""
-
-    name: str
-    type: str = "string"           # connect primitive: boolean/int32/int64/float32/float64/string
-    logical: str | None = None     # connect `name` (logical type), e.g. Decimal
-    scale: int = 0                 # parameters.scale for Decimal
-    precision: int = 18            # connect.decimal.precision for Decimal
+# re-exported: the wire binding and its logical type names
+from etl_consumer_spark.schemas import DATE, DECIMAL, MICROTIME, TIMESTAMP, ZONEDTS, WireField  # noqa: F401
 
 
 def parse_dml_envelope(df: DataFrame, value_col: str = "value") -> DataFrame:

@@ -35,32 +35,25 @@ from __future__ import annotations
 
 import glob
 import os
-import re as _re
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_consumer_spark.client.debezium import DebeziumAPI
 from etl_consumer_spark.config import Config
-from etl_consumer_spark.operators.ddl import translate_mysql_ddl
-from etl_consumer_spark.operators.routing import (
-    drop_blocked_ddl,
-    drop_instance_events,
-    is_empty_ddl,
-    is_schema_topic,
-    is_tombstone,
-    passthrough_query,
-    table_whitelist,
+from etl_consumer_spark.operators.ddl import (
+    TranslatedDDL,
+    ddl_pipeline,
+    parse_statement,
+    translate_mysql_ddl,
 )
+from etl_consumer_spark.operators.routing import is_schema_topic, is_tombstone, passthrough_query
 from etl_consumer_spark.sinks.dead_letter import dead_letter_rows, write_dead_letters
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 from etl_consumer_spark.sinks.republish import republish_frame, split_due
 from etl_consumer_spark.sources.envelope import (
-    DATE,
-    DECIMAL,
-    TIMESTAMP,
     WireField,
     decode_envelope,
     parse_ddl_envelope,
@@ -108,30 +101,6 @@ class BatchResult:
     # because the base-table slice WAS committed — replaying it would
     # double-apply; the history can be rebuilt from the base + later batches
     scd2_errors: list[str] = field(default_factory=list)
-
-
-def _wire_field_for(col: str, spark_type: str) -> WireField:
-    """Inverse of operators.ddl's MySQL→Spark type map: the Debezium wire
-    decoder binding for a column whose *state* type is ``spark_type``. Used
-    to refresh TableSpec.fields after schema evolution — the reference needs
-    no such step because it re-reads the per-message schema block every row
-    (data/model.go:56-73)."""
-    t = spark_type.strip().upper()
-    m = _re.match(r"DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)", t)
-    if m:
-        return WireField(col, "bytes", DECIMAL, scale=int(m.group(2)), precision=int(m.group(1)))
-    if t == "TIMESTAMP":
-        return WireField(col, "int64", TIMESTAMP)
-    if t == "DATE":
-        return WireField(col, "int32", DATE)
-    if t == "BOOLEAN":
-        # wire carries true/false; state stores int (F6, main.go:259-265)
-        return WireField(col, "boolean")
-    if t in ("TINYINT", "SMALLINT", "INT", "BIGINT"):
-        return WireField(col, "int64")
-    if t in ("FLOAT", "DOUBLE"):
-        return WireField(col, "float64")
-    return WireField(col, "string")
 
 
 def metrics_rows(result: BatchResult) -> list[tuple]:
@@ -229,120 +198,86 @@ class CDCPipeline:
         self.results: list[BatchResult] = []
 
     def _evolve_state_schema(self, statement: str) -> None:
-        m = _re.match(r"(?i)ALTER TABLE (\w+)", statement)
-        if not m or m.group(1) not in self.tables:
-            return  # not a managed table -> nothing to evolve
-        # F6 parity: the reference stores MySQL tinyint(1) booleans as ints
-        # (bool_to_int, main.go:259-265); keep the state column INT so the
-        # decoded int image unions cleanly with state.
-        statement = _re.sub(r"(?i)\bBOOLEAN\b", "INT", statement)
-        name = m.group(1)
+        change = parse_statement(statement)
+        if change is None or change.table not in self.tables:
+            # raised, so the DDL is reported skipped rather than applied
+            raise ValueError("not a managed table: nothing to evolve")
+        name = change.table
         self.store.evolve(name, statement)
-        # SCD2 history evolves in LOCKSTEP with its base table: without this
-        # the cached maintainer keeps its first-batch payload list (new
-        # column silently omitted), and a restarted maintainer would bind
-        # the new column against the stale on-disk __history schema and
-        # dead-letter slices already applied to the base
+        # SCD2 history evolves in LOCKSTEP with its base table, and the next
+        # batch rebuilds the cached maintainer from the refreshed
+        # spec.fields; else its payload list omits a new column, or binds it
+        # against a stale __history schema and dead-letters applied slices
         if name in self.scd2_tables and self.store.exists(f"{name}__history"):
             self.store.evolve(f"{name}__history", statement)
-        # drop the cached maintainer so the next batch rebuilds it from the
-        # refreshed spec.fields (payload list includes/excludes the column)
         self._scd2_maintainers.pop(name, None)
 
-    def _refresh_fields(self, statement: str) -> None:
-        """Keep TableSpec.fields/pk_cols in lockstep with the evolved state
-        schema. Without this, the first DML batch after a DDL selects
-        ``_after.<newcol>`` (from state.columns) against structs decoded from
-        the stale WireField list — FIELD_NOT_FOUND, and the whole table slice
-        dead-letters. The reference never hits this because it re-reads the
-        per-message schema block on every row (data/model.go:56-73); our
-        bind-once design must re-bind here."""
-        m = _re.match(r"(?i)ALTER TABLE (\w+)\s+(.*)$", statement.strip())
-        if not m or m.group(1) not in self.tables:
+    def _refresh_fields(self, change: TranslatedDDL) -> None:
+        """Rebind TableSpec.fields/pk_cols to the evolved schema with the wire
+        binding the translation decided, or the next DML batch decodes
+        against a stale field list and its table slice dead-letters. The
+        reference re-reads the per-message schema block on every row
+        (data/model.go:56-73); a bind-once design must re-bind here. The
+        list is rebuilt, never mutated: WireField objects are often shared
+        between TableSpecs."""
+        spec = self.tables.get(change.table)
+        if spec is None:
             return
-        spec = self.tables[m.group(1)]
-        rest = m.group(2)
-        m2 = _re.match(r"(?i)ADD COLUMNS \((\w+) (.+)\)$", rest)
-        if m2:
-            col, typ = m2.groups()
-            spec.fields = [f for f in spec.fields if f.name != col] + [_wire_field_for(col, typ)]
-            return
-        m2 = _re.match(r"(?i)DROP COLUMN (\w+)$", rest)
-        if m2:
-            spec.fields = [f for f in spec.fields if f.name != m2.group(1)]
-            return
-        m2 = _re.match(r"(?i)RENAME COLUMN (\w+) TO (\w+)$", rest)
-        if m2:
-            old, new = m2.groups()
-            # REBUILD the list with replaced field objects (like the other
-            # branches) instead of mutating f.name in place: WireField
-            # instances are commonly shared between TableSpecs (callers pass
-            # a module-level field list), and an in-place rename would leak
-            # into every other pipeline holding the same objects
-            import dataclasses as _dc
-
-            spec.fields = [
-                _dc.replace(f, name=new) if f.name == old else f for f in spec.fields
-            ]
-            spec.pk_cols = [new if c == old else c for c in spec.pk_cols]
-            return
-        m2 = _re.match(r"(?i)ALTER COLUMN (\w+) TYPE (.+)$", rest)
-        if m2:
-            col, typ = m2.groups()
-            old_field = next((f for f in spec.fields if f.name == col), None)
-            spec.fields = [
-                _wire_field_for(col, typ) if f.name == col else f for f in spec.fields
-            ]
-            if old_field is None:
-                spec.fields.append(_wire_field_for(col, typ))
+        col, new = change.column, change.new_name
+        if change.op == "drop":
+            spec.fields = [f for f in spec.fields if f.name != col]
+        elif change.op == "rename":
+            spec.fields = [replace(f, name=new) if f.name == col else f for f in spec.fields]
+            spec.pk_cols = [new if c == col else c for c in spec.pk_cols]
+        elif any(f.name == col for f in spec.fields):
+            spec.fields = [change.field if f.name == col else f for f in spec.fields]
+        else:
+            spec.fields = [*spec.fields, change.field]
 
     # -- DDL path (reference main.go:70-121, 382-424) ----------------------
 
     def _process_ddl(self, batch: DataFrame, result: BatchResult) -> None:
         """``batch`` holds the schema-topic envelopes of the cached batch."""
-        parsed = parse_ddl_envelope(batch).select(
-            "value",
-            F.col("ddl_envelope.payload.databaseName").alias("database_name"),
-            F.col("ddl_envelope.payload.source.table").alias("source_table"),
-            F.col("ddl_envelope.payload.ddl").alias("ddl"),
+        events = ddl_pipeline(                                     # P4 P3 P6 P5 C7
+            parse_ddl_envelope(batch).select(
+                "value",
+                F.col("ddl_envelope.payload.databaseName").alias("database_name"),
+                F.col("ddl_envelope.payload.source.table").alias("source_table"),
+                F.col("ddl_envelope.payload.ddl").alias("ddl"),
+            ),
+            list(self.tables),
+            self.cfg.replace_all_scheme,
+            self.cfg.reclaim,
         )
-        parsed = drop_instance_events(parsed)                                  # P4
-        parsed = table_whitelist(                                              # P3
-            parsed, list(self.tables), self.cfg.replace_all_scheme, "source_table"
-        )
-        errors = parsed.filter(is_empty_ddl("ddl"))                            # P6
-        dead = dead_letter_rows(
-            errors.withColumn("err", F.lit("unexpected ddl")),
-            "err",
-            ",".join(self.tables),
-            self.cfg.db_name,
-        )
-        n_err = dead.count()
+        rows = events.select("is_error", "ddl_clean").collect()
+        ddl_rows = [r["ddl_clean"] for r in rows if not r["is_error"]]
+        n_err = len(rows) - len(ddl_rows)
         if n_err and self.dead_letter_path:
-            write_dead_letters(dead, self.dead_letter_path)
+            errors = events.filter("is_error").withColumn("err", F.lit("unexpected ddl"))
+            tables = ",".join(self.tables)
+            write_dead_letters(
+                dead_letter_rows(errors, "err", tables, self.cfg.db_name), self.dead_letter_path
+            )
         result.dead_letters += n_err
-
-        good = drop_blocked_ddl(parsed.filter(~is_empty_ddl("ddl")), self.cfg.reclaim)  # P5
-        ddl_rows = [r["ddl"] for r in good.select("ddl").collect()]
         if not ddl_rows:
             return
         if self.api is not None:
             self.api.pause()                                                   # X1
         try:
             for ddl in ddl_rows:
-                stripped = ddl.replace(f"`{self.cfg.db_name}`.", "")           # C7/F12
-                for t in translate_mysql_ddl(stripped):
+                for t in translate_mysql_ddl(ddl):
                     if t.statement is None:
                         result.ddl_skipped.append(t.reason or "")
                         continue
                     try:
                         self.ddl_executor(t.statement)
-                        result.ddl_applied.append(t.statement)
-                        # re-bind decoders to the evolved schema, or the next
-                        # DML batch for this table dead-letters wholesale
-                        self._refresh_fields(t.statement)
                     except Exception as exc:  # noqa: BLE001 — dead-letter path (E5)
                         result.ddl_skipped.append(f"{t.statement}: {exc}")
+                        continue
+                    result.ddl_applied.append(t.statement)
+                    # re-bind decoders to the evolved schema, or the next
+                    # DML batch for this table dead-letters wholesale
+                    self._refresh_fields(t)
         finally:
             if self.api is not None:
                 self.api.resume(max_attempts=30)                               # X2/E6

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_consumer_spark.operators.apply import compact_events
+from etl_consumer_spark.operators.ddl import translate_mysql_ddl
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 from etl_consumer_spark.sources.envelope import WireField
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
@@ -131,7 +132,7 @@ def test_rename_does_not_mutate_shared_wirefields(spark, tmp_path):
     cfg.server, cfg.db_name, cfg.tables = "srv", "db0", ["t"]
     pipe_a = CDCPipeline(spark, cfg, [TableSpec("t", shared, ["id"])], store)
     spec_b = TableSpec("t", shared, ["id"])
-    pipe_a._refresh_fields("ALTER TABLE t RENAME COLUMN v TO w")
+    pipe_a._refresh_fields(translate_mysql_ddl("ALTER TABLE t CHANGE COLUMN v w BIGINT")[0])
     assert [f.name for f in pipe_a.tables["t"].fields] == ["id", "w"]
     assert [f.name for f in spec_b.fields] == ["id", "v"], (
         "rename leaked into the shared WireField objects"

@@ -5,8 +5,14 @@
 # driver bench's data, errors and >12x scale ratios flagged.
 set -e
 cd "$(dirname "$0")/.."
+# the Tier-1 environment: cores for the local master, a scratch dir for
+# Spark's shuffle and spill files
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 echo "=== pytest ==="
 python -m pytest tests/ -q
+echo "=== perfbench unit tests ==="
+python3 -m pytest perfbench/tests -q
 echo "=== oracle gate (engine session) ==="
 python tools/check_oracle.py
 echo "=== oracle gate (vanilla session) ==="
