@@ -27,34 +27,45 @@ from etl_consumer_spark.operators.routing import (
 from etl_consumer_spark.schemas import DATE, DECIMAL, MICROTIME, TIMESTAMP, ZONEDTS, WireField
 
 # MySQL column type -> (Spark SQL type, Connect primitive, logical type) of
-# the column as the Debezium MySQL connector emits it. First full match
-# wins; DECIMAL is handled apart (its precision and scale bind the decoder).
+# the column as the Debezium MySQL connector emits it in its default
+# adaptive time mode. First full match wins; DECIMAL is handled apart (its
+# precision and scale bind the decoder). DATETIME(4)-(6) arrives as
+# MicroTimestamp, which the engine does not decode: it stays unmatched and
+# the change is reported skipped.
 _TYPES = [
-    (r"TINYINT\s*\(\s*1\s*\)", "BOOLEAN", "boolean", None),
+    (r"TINYINT\s*\(\s*1\s*\)|BOOL(?:EAN)?|BIT(?:\s*\(\s*1\s*\))?", "BOOLEAN", "boolean", None),
     (r"TINYINT(?:\s*\(\d+\))?", "TINYINT", "int16", None),
     (r"SMALLINT(?:\s*\(\d+\))?", "SMALLINT", "int16", None),
     (r"MEDIUMINT(?:\s*\(\d+\))?", "INT", "int32", None),
     (r"BIGINT(?:\s*\(\d+\))?", "BIGINT", "int64", None),
     (r"INT(?:EGER)?(?:\s*\(\d+\))?", "INT", "int32", None),
-    (r"DOUBLE(?:\s*\(\d+\s*,\s*\d+\))?", "DOUBLE", "float64", None),
+    (r"(?:DOUBLE(?:\s+PRECISION)?|REAL)(?:\s*\(\d+\s*,\s*\d+\))?", "DOUBLE", "float64", None),
     (r"FLOAT(?:\s*\(\d+\s*,\s*\d+\))?", "FLOAT", "float32", None),
-    (r"DATETIME(?:\s*\(\d+\))?", "TIMESTAMP", "int64", TIMESTAMP),
+    (r"DATETIME(?:\s*\(\s*[0-3]\s*\))?", "TIMESTAMP", "int64", TIMESTAMP),
     (r"TIMESTAMP(?:\s*\(\d+\))?", "TIMESTAMP", "string", ZONEDTS),
     (r"DATE", "DATE", "int32", DATE),
+    (r"YEAR(?:\s*\(\s*4\s*\))?", "INT", "int32", None),
     # the decoder stores MicroTime as an H:M:S string (F4)
     (r"TIME(?:\s*\(\d+\))?", "STRING", "int64", MICROTIME),
-    (r"(?:VAR)?CHAR\s*\(\d+\)|(?:TINY|MEDIUM|LONG)?TEXT|JSON", "STRING", "string", None),
-    (r"ENUM\s*\(.*\)", "STRING", "string", None),
+    (r"(?:VAR)?CHAR\s*\(\d+\)|CHAR|(?:TINY|MEDIUM|LONG)?TEXT|JSON", "STRING", "string", None),
+    (r"(?:ENUM|SET)\s*\(.*\)", "STRING", "string", None),
     (r"(?:TINY|MEDIUM|LONG)?BLOB|(?:VAR)?BINARY\s*\(\d+\)", "BINARY", "bytes", None),
 ]
-_DECIMAL_TYPE = re.compile(r"(?is)DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)")
+# MySQL's DECIMAL and its synonyms; precision defaults to 10, scale to 0
+_DECIMAL_TYPE = re.compile(
+    r"(?is)(?:DECIMAL|NUMERIC|DEC|FIXED)(?:\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?"
+)
+# UNSIGNED integer columns take a wider type so their whole range fits
+# (BIGINT UNSIGNED arrives as int64, Debezium's default, and stays BIGINT)
+_UNSIGNED = {"TINYINT": ("SMALLINT", "int16"), "SMALLINT": ("INT", "int32"),
+             "INT": ("BIGINT", "int64")}
 
 # MySQL column attributes and placement that Spark SQL doesn't take in
 # ALTER ... ADD/CHANGE, and that do not change the column's type
 _ATTR_STRIP = re.compile(
     r"(?is)\s+(COMMENT\s+(?:'(?:[^'\\]|\\.|'')*'|\"[^\"]*\")|NOT\s+NULL|NULL|AUTO_INCREMENT|"
     r"DEFAULT\s+(?:'[^']*'|\S+)|CHARACTER\s+SET\s+\S+|COLLATE\s+\S+|"
-    r"UNSIGNED|ON\s+UPDATE\s+\S+(?:\(\))?|FIRST\b|AFTER\s+`?[\w$]+`?)"
+    r"(?:UN)?SIGNED|ZEROFILL|ON\s+UPDATE\s+\S+(?:\(\))?|FIRST\b|AFTER\s+`?[\w$]+`?)"
 )
 
 
@@ -62,13 +73,16 @@ def _column_type(column: str, mysql_type: str) -> tuple[str, WireField] | None:
     """(Spark SQL type, wire binding) for a MySQL column type, or None when
     the type is not one the engine decodes."""
     t = _ATTR_STRIP.sub("", " " + mysql_type).strip()
+    unsigned = any(a.upper() == "UNSIGNED" for a in _ATTR_STRIP.findall(" " + mysql_type))
     m = _DECIMAL_TYPE.fullmatch(t)
     if m:
-        precision, scale = int(m[1]), int(m[2])
+        precision, scale = int(m[1] or 10), int(m[2] or 0)
         field = WireField(column, "bytes", DECIMAL, scale=scale, precision=precision)
         return f"DECIMAL({precision},{scale})", field
     for pattern, spark_type, wire_type, logical in _TYPES:
         if re.fullmatch(pattern, t, re.I | re.S):
+            if unsigned and spark_type in _UNSIGNED:
+                spark_type, wire_type = _UNSIGNED[spark_type]
             return spark_type, WireField(column, wire_type, logical)
     return None
 
@@ -82,7 +96,7 @@ def state_type(spark_type: str) -> str:
 
 @dataclass(frozen=True)
 class TranslatedDDL:
-    """One schema change decided from one ALTER clause, or a skip marker.
+    """One schema change decided from an ALTER clause, or a skip marker.
     ``field`` is the column's wire binding after an ADD or a type change
     (None for DROP, and for RENAME, which keeps the column's binding)."""
 
@@ -167,25 +181,31 @@ _CLAUSES = [
 ]
 
 
-def _translate_clause(table: str, clause: str) -> TranslatedDDL:
+def _translate_clause(table: str, clause: str) -> list[TranslatedDDL]:
+    """The changes one ALTER clause makes. A CHANGE that renames the column
+    makes two: the rename, then the type change under the new name (the
+    store skips it when the type is the column's current one)."""
+    skipped = TranslatedDDL(None, reason=f"unsupported DDL form: {clause[:80]}")
     for op, pattern in _CLAUSES:
         m = pattern.fullmatch(clause)
         if not m:
             continue
         if op == "drop":
-            return _change(op, table, m[1])
+            return [_change(op, table, m[1])]
+        column, changes = m[1], []
         if op == "change" and m[1].lower() != m[2].lower():
-            return _change("rename", table, m[1], new_name=m[2])
-        typed = _column_type(m[1], m[m.lastindex])
-        if typed:
-            op = "add" if op == "add" else "type"
-            return _change(op, table, m[1], spark_type=typed[0], field=typed[1])
-    return TranslatedDDL(None, reason=f"unsupported DDL form: {clause[:80]}")
+            column, changes = m[2], [_change("rename", table, m[1], new_name=m[2])]
+        typed = _column_type(column, m[m.lastindex])
+        if typed is None:
+            return [*changes, skipped]
+        op = "add" if op == "add" else "type"
+        return [*changes, _change(op, table, column, spark_type=typed[0], field=typed[1])]
+    return [skipped]
 
 
 def translate_mysql_ddl(ddl: str) -> list[TranslatedDDL]:
-    """Translate MySQL DDL into one :class:`TranslatedDDL` per ALTER TABLE
-    clause. The table may be bare, quoted or db-qualified; column placement
+    """Translate MySQL DDL into one :class:`TranslatedDDL` per schema change
+    of its ALTER TABLE clauses. The table may be bare, quoted or db-qualified; column placement
     (AFTER/FIRST) and comments are dropped. Unsupported statements and
     clauses come back as skip markers so the caller can dead-letter them
     rather than fail the batch."""
@@ -193,7 +213,7 @@ def translate_mysql_ddl(ddl: str) -> list[TranslatedDDL]:
     for stmt in _split(ddl, ";"):
         m = _ALTER.fullmatch(stmt)
         out += (
-            [_translate_clause(m[1], c) for c in _split(m[2], ",")] if m
+            [t for c in _split(m[2], ",") for t in _translate_clause(m[1], c)] if m
             else [TranslatedDDL(None, reason=f"unsupported DDL form: {stmt[:80]}")]
         )
     return out

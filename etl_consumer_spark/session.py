@@ -45,11 +45,12 @@ def get_spark(
     - Arrow on (pandas_udf fast path for the one non-expression decoder)
     - shuffle partitions sized to cores locally; on a cluster, AQE's
       coalescePartitions makes the initial number non-critical.
-    - driver heap from :func:`driver_memory`.
+    - UI off and the driver heap from :func:`driver_memory`.
 
     ``master=None`` takes ``SPARK_MASTER``, else ``local[SPARK_GRAFT_CPUS]``
-    (32 when unset); ``master=""`` sets none and leaves it to the launcher
-    (spark-submit's ``--master``, else pyspark's ``local[*]``).
+    (32 when unset); ``master=""`` sets none and leaves the master, the UI
+    and the driver heap to the launcher (spark-submit's ``--master`` and
+    ``--driver-memory``, else pyspark's ``local[*]`` with its UI and 1g).
     """
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
@@ -57,7 +58,12 @@ def get_spark(
 
     builder = SparkSession.builder.appName(app_name)
     if master:
-        builder = builder.master(master)
+        # the driver runs in this process: no UI, a heap sized to the machine
+        builder = (
+            builder.master(master)
+            .config("spark.ui.enabled", "false")
+            .config("spark.driver.memory", driver_memory())
+        )
     builder = (
         builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -66,8 +72,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

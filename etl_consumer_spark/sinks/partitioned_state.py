@@ -387,7 +387,12 @@ class PartitionedParquetStateStore:
         rewriting the table with the evolved schema. DDL is rare (the
         reference pauses the connector around it, main.go:70-121), so a
         full rewrite here is acceptable; per-batch DML stays partial."""
-        df = evolve_frame(self.read(table), statement)
+        current = self.read(table)
+        df = evolve_frame(current, statement)
+        if df.schema == current.schema:
+            # nothing to rewrite: a type change to the column's current
+            # type, or a change replayed after a restart
+            return
         change = parse_statement(statement)
         pk = [
             change.new_name if change.op == "rename" and c == change.column else c

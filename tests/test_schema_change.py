@@ -11,8 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_consumer_spark.config import Config
+from etl_consumer_spark.operators.ddl import translate_mysql_ddl
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-from etl_consumer_spark.sources.envelope import WireField
+from etl_consumer_spark.sources.envelope import TIMESTAMP, WireField
 from etl_consumer_spark.sources.kafka import TRANSPORT_SCHEMA
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
 from tests.test_decoders import py_encode
@@ -81,6 +82,13 @@ CASES = {
     "unquoted_db_qualifier": (
         "ALTER TABLE shop.orders ADD COLUMN q BIGINT", {"q": 9}, {"q": "9"},
     ),
+    "bool_column": (
+        "ALTER TABLE `shop`.`orders` ADD COLUMN flag BOOLEAN", {"flag": True}, {"flag": "1"},
+    ),
+    "unsigned_int_widens": (
+        "ALTER TABLE `shop`.`orders` ADD COLUMN u INT UNSIGNED",
+        {"u": 3_000_000_000}, {"u": "3000000000"},
+    ),
     "multi_clause": (
         "ALTER TABLE `shop`.`orders` ADD COLUMN a INT, ADD COLUMN b VARCHAR(4)",
         {"a": 1, "b": "x"}, {"a": "1", "b": "x"},
@@ -107,6 +115,48 @@ def test_schema_change_then_dml(spark, tmp_path, case):
     assert set(rows) == {seeded, touched}  # the whole table reads back
     assert {c: rows[touched][c] for c in expected} == expected
     assert all(rows[seeded][c] is None for c in expected)
+
+
+def test_renaming_change_also_changes_the_type(spark, tmp_path):
+    """CHANGE COLUMN with a new name and a new type renames the column, then
+    changes its type and wire binding; the untouched bucket is cast too."""
+    seeded, touched = keys_in_two_buckets(spark)
+    pipe = make_pipe(spark, tmp_path, seeded)
+    statement = "ALTER TABLE `shop`.`orders` CHANGE COLUMN amount price DECIMAL(10,2)"
+    first = pipe.process_batch(transport(spark, [(SERVER, ddl(statement))]), 0)
+    assert first.ddl_applied == [
+        "ALTER TABLE orders RENAME COLUMN amount TO price",
+        "ALTER TABLE orders ALTER COLUMN price TYPE DECIMAL(10,2)",
+    ]
+    result = pipe.process_batch(
+        transport(spark, [(TOPIC, dml({"id": touched, "price": py_encode(12345)}, 10))]), 1
+    )
+    assert result.dead_letters == 0 and result.applied == {TABLE: 1}
+    state = pipe.store.read(TABLE)
+    assert dict(state.dtypes)["price"] == "decimal(10,2)"
+    assert {r["id"]: str(r["price"]) for r in state.collect()} == {
+        seeded: "1.00", touched: "123.45"
+    }
+
+
+def test_mysql_type_bindings():
+    """The wire binding each MySQL type gets; a type the engine does not
+    decode leaves the change skipped instead of misreading its values."""
+
+    def binding(mysql_type):
+        t = translate_mysql_ddl(f"ALTER TABLE t ADD COLUMN c {mysql_type}")[0]
+        return t.field and (t.spark_type, t.field.type, t.field.logical)
+
+    assert binding("DATETIME") == binding("DATETIME(3)") == ("TIMESTAMP", "int64", TIMESTAMP)
+    # DATETIME(4)-(6) arrives as MicroTimestamp (microseconds), not Timestamp
+    assert binding("DATETIME(6)") is None
+    assert binding("BOOLEAN") == binding("bool") == binding("TINYINT(1)") == (
+        "BOOLEAN", "boolean", None
+    )
+    assert binding("INT UNSIGNED") == ("BIGINT", "int64", None)
+    assert binding("INT COMMENT 'unsigned'") == ("INT", "int32", None)
+    assert binding("NUMERIC(8)")[:2] == ("DECIMAL(8,0)", "bytes")
+    assert binding("GEOMETRY") is None
 
 
 def test_benchmark_ddl_fates(spark, tmp_path):
