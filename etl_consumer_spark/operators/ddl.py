@@ -12,6 +12,7 @@ Spark-SQL statement and the Debezium wire binding of its MySQL type, and
 from __future__ import annotations
 
 import re
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,9 +37,8 @@ _TYPES = [
     (r"TINYINT\s*\(\s*1\s*\)|BOOL(?:EAN)?|BIT(?:\s*\(\s*1\s*\))?", "BOOLEAN", "boolean", None),
     (r"TINYINT(?:\s*\(\d+\))?", "TINYINT", "int16", None),
     (r"SMALLINT(?:\s*\(\d+\))?", "SMALLINT", "int16", None),
-    (r"MEDIUMINT(?:\s*\(\d+\))?", "INT", "int32", None),
     (r"BIGINT(?:\s*\(\d+\))?", "BIGINT", "int64", None),
-    (r"INT(?:EGER)?(?:\s*\(\d+\))?", "INT", "int32", None),
+    (r"(?:MEDIUM)?INT(?:EGER)?(?:\s*\(\d+\))?", "INT", "int32", None),
     (r"(?:DOUBLE(?:\s+PRECISION)?|REAL)(?:\s*\(\d+\s*,\s*\d+\))?", "DOUBLE", "float64", None),
     (r"FLOAT(?:\s*\(\d+\s*,\s*\d+\))?", "FLOAT", "float32", None),
     (r"DATETIME(?:\s*\(\s*[0-3]\s*\))?", "TIMESTAMP", "int64", TIMESTAMP),
@@ -114,22 +114,19 @@ class TranslatedDDL:
 _TBL = r"`?(?:[\w$]+`?\s*\.\s*`?)?([\w$]+)`?"
 _COL = r"`?([\w$]+)`?"
 
-# The translated statement forms: rendered by _change, read back by
-# parse_statement
+# The translated statement forms: rendered by _change, and read back by
+# parse_statement through a pattern made from the same form
 _FORMS = {
     "add": "ALTER TABLE {table} ADD COLUMNS ({column} {spark_type})",
     "drop": "ALTER TABLE {table} DROP COLUMN {column}",
     "rename": "ALTER TABLE {table} RENAME COLUMN {column} TO {new_name}",
     "type": "ALTER TABLE {table} ALTER COLUMN {column} TYPE {spark_type}",
 }
+_SLOTS = {"table": _TBL, "column": _COL, "new_name": _COL, "spark_type": r"(.+?)"}
 _STATEMENTS = {
-    op: re.compile(rf"(?is)\s*ALTER\s+TABLE\s+{_TBL}\s+{body}\s*")
-    for op, body in {
-        "add": rf"ADD\s+COLUMNS\s*\(\s*{_COL}\s+(.+?)\s*\)",
-        "drop": rf"DROP\s+COLUMN\s+{_COL}",
-        "rename": rf"RENAME\s+COLUMN\s+{_COL}\s+TO\s+{_COL}",
-        "type": rf"ALTER\s+COLUMN\s+{_COL}\s+TYPE\s+(.+?)",
-    }.items()
+    op: re.compile(r"(?is)\s*%s\s*" % re.sub(
+        r"\\ |\\\{(\w+)\\\}", lambda m: _SLOTS[m[1]] if m[1] else r"\s+", re.escape(form)))
+    for op, form in _FORMS.items()
 }
 
 
@@ -205,10 +202,9 @@ def _translate_clause(table: str, clause: str) -> list[TranslatedDDL]:
 
 def translate_mysql_ddl(ddl: str) -> list[TranslatedDDL]:
     """Translate MySQL DDL into one :class:`TranslatedDDL` per schema change
-    of its ALTER TABLE clauses. The table may be bare, quoted or db-qualified; column placement
-    (AFTER/FIRST) and comments are dropped. Unsupported statements and
-    clauses come back as skip markers so the caller can dead-letter them
-    rather than fail the batch."""
+    of its ALTER TABLE clauses. The table may be bare, quoted or
+    db-qualified; column placement (AFTER/FIRST) and comments are dropped.
+    Unsupported statements and clauses come back as skip markers."""
     out: list[TranslatedDDL] = []
     for stmt in _split(ddl, ";"):
         m = _ALTER.fullmatch(stmt)
@@ -241,16 +237,21 @@ def ddl_pipeline(
     return out.withColumn("ddl_clean", ddl_strip_db(F.col(ddl_col), F.col(db_name_col)))
 
 
-def apply_ddl_batch(spark: SparkSession, ddl_rows: list[str]) -> list[TranslatedDDL]:
-    """Execute translated DDL against the Spark catalog (driver-side, inside
-    foreachBatch — serialized before DML batches per SURVEY §4). Returns the
-    per-statement outcomes; skip markers are the caller's dead letters."""
-    results: list[TranslatedDDL] = []
+def run_ddl(execute: Callable[[str], object], ddl_rows: list[str]) -> Iterator[TranslatedDDL]:
+    """Translate each DDL and pass its statements to ``execute`` in order,
+    yielding one outcome per change; a skip marker carries the reason (an
+    unsupported form or the executor's error), for the caller to report
+    rather than fail the batch."""
     for t in (t for ddl in ddl_rows for t in translate_mysql_ddl(ddl)):
         try:
             if t.statement is not None:
-                spark.sql(t.statement)
-            results.append(t)
+                execute(t.statement)
+            yield t
         except Exception as exc:  # noqa: BLE001 - dead-letter, don't fail the batch
-            results.append(TranslatedDDL(None, reason=f"{t.statement}: {exc}"))
-    return results
+            yield TranslatedDDL(None, reason=f"{t.statement}: {exc}")
+
+
+def apply_ddl_batch(spark: SparkSession, ddl_rows: list[str]) -> list[TranslatedDDL]:
+    """Execute translated DDL against the Spark catalog (driver-side, inside
+    foreachBatch — serialized before DML batches per SURVEY §4)."""
+    return list(run_ddl(spark.sql, ddl_rows))

@@ -8,8 +8,7 @@ per-row lookup (reference does the lookup per row: data/model.go:56-73).
 
 ``before``/``after`` are modeled as ``MapType(string, string)`` at the parse
 layer (Debezium values arrive as JSON scalars; the typed decode happens via
-the §1.2 decoder expressions bound per table), with a per-table typed variant
-available through :func:`envelope_schema_for_table`.
+the §1.2 decoder expressions bound per table).
 """
 
 from __future__ import annotations
@@ -107,13 +106,6 @@ def envelope_schema(value_type: T.DataType | None = None) -> T.StructType:
     )
 
 
-def envelope_schema_for_table(columns: list[tuple[str, T.DataType]]) -> T.StructType:
-    """Typed envelope for a known table: before/after become structs with the
-    table's wire-level columns (Debezium wire types, pre-decode)."""
-    row = T.StructType([T.StructField(name, dtype) for name, dtype in columns])
-    return envelope_schema(row)
-
-
 # Schema-change envelope (reference: scheme/model.go:4-13; fixture collection.json:103-122)
 DDL_ENVELOPE_SCHEMA = T.StructType(
     [
@@ -127,15 +119,5 @@ DDL_ENVELOPE_SCHEMA = T.StructType(
                 ]
             ),
         ),
-    ]
-)
-
-# Dead-letter table (reference: main.go:76,92,143 — data_err)
-DEAD_LETTER_SCHEMA = T.StructType(
-    [
-        T.StructField("data", T.StringType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("table_name", T.StringType()),
-        T.StructField("db_name", T.StringType()),
     ]
 )

@@ -48,9 +48,8 @@ def get_spark(
     - UI off and the driver heap from :func:`driver_memory`.
 
     ``master=None`` takes ``SPARK_MASTER``, else ``local[SPARK_GRAFT_CPUS]``
-    (32 when unset); ``master=""`` sets none and leaves the master, the UI
-    and the driver heap to the launcher (spark-submit's ``--master`` and
-    ``--driver-memory``, else pyspark's ``local[*]`` with its UI and 1g).
+    (32 when unset); ``master=""`` leaves the master, UI and driver heap to
+    the launcher (spark-submit's flags, else pyspark's ``local[*]``, UI, 1g).
     """
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")

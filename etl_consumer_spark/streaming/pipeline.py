@@ -47,7 +47,7 @@ from etl_consumer_spark.operators.ddl import (
     TranslatedDDL,
     ddl_pipeline,
     parse_statement,
-    translate_mysql_ddl,
+    run_ddl,
 )
 from etl_consumer_spark.operators.routing import is_schema_topic, is_tombstone, passthrough_query
 from etl_consumer_spark.sinks.dead_letter import dead_letter_rows, write_dead_letters
@@ -213,13 +213,10 @@ class CDCPipeline:
         self._scd2_maintainers.pop(name, None)
 
     def _refresh_fields(self, change: TranslatedDDL) -> None:
-        """Rebind TableSpec.fields/pk_cols to the evolved schema with the wire
-        binding the translation decided, or the next DML batch decodes
-        against a stale field list and its table slice dead-letters. The
-        reference re-reads the per-message schema block on every row
-        (data/model.go:56-73); a bind-once design must re-bind here. The
-        list is rebuilt, never mutated: WireField objects are often shared
-        between TableSpecs."""
+        """Rebind TableSpec.fields/pk_cols to the wire binding the translation
+        decided, or the next DML batch decodes against a stale field list
+        (the reference re-reads the schema block per row, data/model.go:56-73).
+        Rebuilt, never mutated: TableSpecs often share WireField objects."""
         spec = self.tables.get(change.table)
         if spec is None:
             return
@@ -264,20 +261,14 @@ class CDCPipeline:
         if self.api is not None:
             self.api.pause()                                                   # X1
         try:
-            for ddl in ddl_rows:
-                for t in translate_mysql_ddl(ddl):
-                    if t.statement is None:
-                        result.ddl_skipped.append(t.reason or "")
-                        continue
-                    try:
-                        self.ddl_executor(t.statement)
-                    except Exception as exc:  # noqa: BLE001 — dead-letter path (E5)
-                        result.ddl_skipped.append(f"{t.statement}: {exc}")
-                        continue
-                    result.ddl_applied.append(t.statement)
-                    # re-bind decoders to the evolved schema, or the next
-                    # DML batch for this table dead-letters wholesale
-                    self._refresh_fields(t)
+            for t in run_ddl(self.ddl_executor, ddl_rows):                # E5
+                if t.statement is None:
+                    result.ddl_skipped.append(t.reason or "")
+                    continue
+                result.ddl_applied.append(t.statement)
+                # re-bind decoders to the evolved schema, or the next DML
+                # batch for this table dead-letters wholesale
+                self._refresh_fields(t)
         finally:
             if self.api is not None:
                 self.api.resume(max_attempts=30)                               # X2/E6

@@ -1,8 +1,12 @@
-"""The default driver heap is derived from the machine, without starting
+"""The default driver heap is derived from the machine, and ``get_spark``
+applies it only to a driver it starts itself; checked without starting
 Spark."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+from etl_consumer_spark import session
 from etl_consumer_spark.session import driver_memory
 
 GIB = 2**30
@@ -46,3 +50,38 @@ def test_explicit_env_wins(tmp_path, monkeypatch):
     assert driver_memory(*files(tmp_path, 16 * GIB)) == "2g"
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "")
     assert driver_memory(*files(tmp_path, 16 * GIB)) == "8192m"
+
+
+class _Builder:
+    """Records what ``get_spark`` sets, in place of ``SparkSession.builder``."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        self.conf["master"] = master
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+
+def test_local_tuning_only_when_a_master_is_set(monkeypatch):
+    """A master set here runs the driver in this process: UI off and a heap
+    from ``driver_memory``. ``master=""`` (the runner) leaves the master,
+    the UI and the heap to the launcher."""
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    for master, expected in [("local[2]", {"master": "local[2]", "spark.ui.enabled": "false",
+                                           "spark.driver.memory": "3g"}), ("", {})]:
+        builder = _Builder()
+        monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=builder))
+        session.get_spark(master=master)
+        keys = ("master", "spark.ui.enabled", "spark.driver.memory")
+        assert {k: v for k, v in builder.conf.items() if k in keys} == expected
