@@ -112,7 +112,7 @@ def minhash_signatures(
         F.min((F.lit(MINHASH_A[j]) * F.col("_h") + F.lit(MINHASH_B[j])) % MINHASH_P).alias(f"mh{j}")
         for j in range(num_hashes)
     ]
-    # lazily materialized: one signature row per doc (bounded), and the
+    # materialized: one signature row per doc (bounded), and the
     # audit queries consume signatures 2-3x (both pair sides + banding) —
     # without this each consumer re-runs the shingle explode + md5 + the
     # groupBy from the raw corpus (r13: dedup_minhash_b_bit carried 261
@@ -121,7 +121,7 @@ def minhash_signatures(
     # #5): at corpus scale a forced signature materialization is pure
     # overhead when the table is walked exactly once.
     sigs = with_h.groupBy(id_col).agg(*aggs)
-    return sigs.localCheckpoint(eager=False) if materialize else sigs
+    return sigs.localCheckpoint(eager=True) if materialize else sigs
 
 
 def lsh_buckets(
@@ -201,7 +201,7 @@ def candidate_pairs(
             .distinct()
             # pair set is cap-bounded and consumed by several audit stages
             # (estimate join, candidate-doc semi-join, exact-Jaccard join)
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
     # Uncapped path: bucket self-join (an unbounded bucket must spread over
     # tasks, not sit in one array). Pre-partition the SHARED frame on the
@@ -853,7 +853,7 @@ def semdedup_flags(
     ranked = assigned.withColumn(
         "rnk",
         F.row_number().over(Window.partitionBy("cl").orderBy("d2", "id")),
-    ).join(q, "id").localCheckpoint(eager=False)
+    ).join(q, "id").localCheckpoint(eager=True)
     # ^ three consumers (both pair sides + the final flag join) would each
     # re-run the assignment pass, the rank window and the qv join — one
     # row per vector, so materializing once is batch-bounded

@@ -111,7 +111,7 @@ def two_level_order(
     # checkpointed histograms), or cluster deployments with executor
     # churn, can keep the lineage instead.
     if materialize:
-        df = df.localCheckpoint(eager=False)
+        df = df.localCheckpoint(eager=True)
     key, tie = F.col(key_col), F.col(tie_col)
     bounds = df.agg(F.min(key).alias("_lo"), F.max(key).alias("_hi"))
     b = df.crossJoin(F.broadcast(bounds)).withColumn(

@@ -271,7 +271,7 @@ def exact_percentiles_distributed(
         .withColumn("_negv", -F.col("_v"))
         # histogram-sized; two consumers (order device + total) — without
         # this each re-runs the histogram groupBy from the base table
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     # two_level_order ranks by (key DESC, tie ASC); negating the value
     # yields ascending value order, cum = inclusive running count.
@@ -390,7 +390,7 @@ def exact_percentiles_grouped(
         .agg(F.count("*").alias("_f"))
         .withColumn("_vk", (F.col("_v") * F.lit(order_scale)).cast("long"))
         # histogram-sized; three consumers (bounds, bucketing, totals)
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     # global value bounds bucket ALL groups' histograms on one scale —
     # the bucket is a pure function of the value, so within every group

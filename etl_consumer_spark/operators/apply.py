@@ -134,7 +134,6 @@ def apply_cdc(
     ts_col: str = "ts_ms",
     missing_update: str = "noop",
     broadcast_batch: bool = True,
-    cache_handle: list | None = None,
 ) -> DataFrame:
     """Apply a batch of CDC events to a state table, returning the new state.
 
@@ -186,11 +185,6 @@ def apply_cdc(
         # A full-outer formulation would sort-merge-shuffle the entire
         # state table every batch — the difference between O(batch) and
         # O(state) network per batch at 100 TB.
-        latest = latest.cache()
-        if cache_handle is not None:
-            # long-running streams must unpersist after materializing the
-            # result, or cached micro-batches accumulate until LRU eviction
-            cache_handle.append(latest)
         if missing_update == "upsert":
             # Upsert mode collapses to ONE streamed pass over state: a state
             # row whose key carries ANY event is either replaced (insert/

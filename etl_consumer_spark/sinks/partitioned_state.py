@@ -19,31 +19,38 @@ rewritten; at local toy scale wall-time is constant-dominated, the win is
 the I/O asymptotics.
 
 Bucket count is data-dependent by default (``n_buckets=None`` → about
-``rows / target_bucket_rows`` at init, clamped to [8, 4096]) and persisted
+``rows / TARGET_BUCKET_ROWS`` at init, clamped to [8, 4096]) and persisted
 in a per-table ``_layout.json`` sidecar, so every later reader/writer —
 including a fresh store instance — agrees on the layout. A fixed k would
 either over-partition small tables (small-file storm, constant-dominated
 batches) or under-partition huge ones (per-bucket rewrite approaches
 O(state) again).
 
-Batches commit atomically via a staged-manifest protocol (the reference
-got per-statement atomicity for free from its SQL target, main.go:135;
-Delta's transaction log is the full-featured equivalent — this is the
-dependency-free version with the same pipeline protocol above it):
+Every write — ``init``, ``evolve`` and ``upsert`` — commits atomically
+through one staged-manifest protocol (the reference got per-statement
+atomicity for free from its SQL target for DML and DDL alike,
+main.go:88,135; Delta's transaction log is the full-featured equivalent —
+this is the dependency-free version with the same pipeline protocol above
+it):
 
-1. the merged slice is written to a ``_staging`` directory (never the
-   live table), partitioned by bucket;
-2. a ``_commit.json`` manifest (touched + surviving buckets) is published
-   with an atomic rename — THE commit point;
-3. bucket directories are swapped into the table one rename at a time,
+1. the new rows are written to a ``_staging`` directory (never the live
+   table), partitioned by bucket;
+2. a ``_commit.json`` manifest is published with an atomic rename — THE
+   commit point. It lists the touched buckets (an upsert's batch buckets;
+   for ``init``/``evolve``, a full rewrite, every live and every staged
+   bucket) and the staged survivors; a full rewrite also carries the
+   table's new ``_schema.json``, ``_pk.json`` and ``_layout.json``;
+3. the manifest is rolled forward: sidecars are replaced atomically, then
+   bucket directories are swapped into the table one rename at a time,
    then staging and manifest are removed.
 
 A crash before step 2 rolls BACK on the next open (staging discarded,
-table untouched = pre-batch state); a crash after step 2 rolls FORWARD
-(the swap is re-applied idempotently = post-batch state). Readers never
-observe a mix: every public entry point runs recovery first. Staging
-also means the merge plan reads files the write never touches, so no
-cache-pinning dance and one fewer collect() job per batch.
+table untouched = pre-commit state, sidecars included); a crash after
+step 2 rolls FORWARD (the sidecar writes and swaps are re-applied
+idempotently = post-commit state). Readers never observe a mix: every
+public entry point runs recovery first. Staging also means the merge (or
+the evolved plan) reads files the write never touches, so no cache-pinning
+dance and no sibling copy of the table.
 
 One writer per table, on a local filesystem: the protocol's commit point
 is an ``os.replace`` and each bucket swap an ``os.rename``, which are
@@ -86,6 +93,17 @@ def evolve_frame(df: DataFrame, statement: str) -> DataFrame:
     return df.withColumn(col, typed.cast(state_type(change.spark_type)))
 
 
+#: rows-per-bucket target of the adaptive layouts (the hash store's bucket
+#: count at init, the SCD2 history's range width at seed): per-bucket
+#: rewrite I/O stays bounded while corpus-wide batches touch
+#: O(rows/65536) buckets instead of many near-empty ones
+TARGET_BUCKET_ROWS = 65536
+
+#: an upsert batch above this many rows uses the sort-merge apply (a
+#: backfill flood must not be broadcast)
+BROADCAST_THRESHOLD = 2_000_000
+
+
 class PartitionedParquetStateStore:
     """``bucket_mode='hash'`` spreads keys uniformly — it bounds rewrite I/O
     only while distinct batch keys ≪ n_buckets (a large uniform batch
@@ -103,7 +121,6 @@ class PartitionedParquetStateStore:
         bucket_mode: str = "hash",
         range_size: int = 1_000_000,
         range_sizes: list[int] | None = None,
-        target_bucket_rows: int = 65536,
     ):
         if bucket_mode not in ("hash", "range"):
             raise ValueError(f"bucket_mode must be 'hash' or 'range', got {bucket_mode!r}")
@@ -119,11 +136,11 @@ class PartitionedParquetStateStore:
         self.bucket_mode = bucket_mode
         self.range_size = range_size
         self.range_sizes = range_sizes
-        self.target_bucket_rows = target_bucket_rows
 
     # test seam (like _swap_bucket's crash seam): when set on an instance,
-    # called after the staged merge is materialized and before the manifest
-    # publish — the window the concurrent-writer tests interleave into
+    # called after a commit's staged write and before its manifest publish
+    # (init, evolve and upsert alike) — the window the concurrent-writer
+    # and crash tests interleave into
     _post_stage_hook = None
 
     def _path(self, table: str) -> str:
@@ -172,11 +189,14 @@ class PartitionedParquetStateStore:
         return self._bucket_of([F.col(c) for c in pk_cols], layout)
 
     def init(self, table: str, df: DataFrame, pk_cols: list[str], layout: dict | None = None) -> None:
+        """Seed (or replace) a table: a full rewrite whose commit also
+        publishes the schema (read() of an emptied table), pk and layout
+        sidecars every later writer agrees on."""
         if layout is None:
             k = self.n_buckets
             if k is None and self.bucket_mode == "hash":
                 # data-dependent bucket count: one count() per table lifetime
-                k = max(8, min(4096, -(-df.count() // self.target_bucket_rows)))
+                k = max(8, min(4096, -(-df.count() // TARGET_BUCKET_ROWS)))
             layout = {
                 "bucket_mode": self.bucket_mode,
                 "n_buckets": k or 64,
@@ -191,21 +211,8 @@ class PartitionedParquetStateStore:
                         f"range_sizes width {len(sizes)} != pk width {len(pk_cols)}"
                     )
                 layout["range_sizes"] = list(sizes)
-        (
-            df.withColumn("_bucket", self._bucket(pk_cols, layout))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(self._path(table))
-        )
-        # sidecars: read() must survive a fully-emptied table (no parquet
-        # files left to infer schema from), and every writer must agree on
-        # the bucket layout and pk
-        with open(f"{self._path(table)}/_schema.json", "w") as fh:
-            fh.write(df.schema.json())
-        with open(f"{self._path(table)}/_pk.json", "w") as fh:
-            fh.write(json.dumps(pk_cols))
-        with open(f"{self._path(table)}/_layout.json", "w") as fh:
-            fh.write(json.dumps(layout))
+        self._recover(table)
+        self._commit(table, df, pk_cols, layout)
 
     # -- staged-commit protocol (atomic multi-bucket batches) --------------
 
@@ -224,12 +231,71 @@ class PartitionedParquetStateStore:
         shutil.rmtree(dst, ignore_errors=True)
         os.rename(f"{self._staging(table)}/{bucket_dir}", dst)
 
+    @staticmethod
+    def _write_atomic(path: str, text: str) -> None:
+        tmp = f"{path}.tmp"
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, path)
+
+    @staticmethod
+    def _bucket_dirs(path: str) -> list[str]:
+        # bucket values as their directory-name strings
+        return sorted(d.split("=", 1)[1] for d in os.listdir(path) if d.startswith("_bucket="))
+
+    def _commit(
+        self, table: str, frame: DataFrame, pk_cols: list[str], layout: dict,
+        touched: list | None = None,
+    ) -> None:
+        """THE write path (module docstring): stage ``frame``, publish the
+        manifest, roll it forward. ``touched`` lists the buckets an upsert
+        rewrites; None is a full rewrite (init, evolve) — every live and
+        every staged bucket is touched and the manifest carries ``frame``'s
+        schema, ``pk_cols`` and ``layout`` as the table's new sidecars."""
+        staging = self._staging(table)
+        # repartition(k, "_bucket") puts ALL rows of a bucket in one task
+        # for ANY k: one file per bucket per rewrite, not tasks x buckets
+        # small files. k is clamped to the session's parallelism (r12
+        # sweep: 1465 near-empty write tasks per SCD2 staged write at
+        # sf1.0). The plan reads only LIVE files, never staging.
+        width = self.spark.sparkContext.defaultParallelism
+        if touched is not None:
+            width = max(1, min(len(touched), width))
+        (
+            frame.withColumn("_bucket", self._bucket(pk_cols, layout))
+            .repartition(width, "_bucket")
+            .write.mode("overwrite")
+            .partitionBy("_bucket")
+            .parquet(staging)
+        )
+        if self._post_stage_hook is not None:
+            self._post_stage_hook(table)
+        # surviving buckets come from the staging directory listing — no
+        # extra Spark job (a touched bucket whose rows were ALL deleted
+        # writes no partition directory)
+        surviving = self._bucket_dirs(staging)
+        full = touched is None
+        if full:
+            touched = {*self._bucket_dirs(self._path(table)), *surviving}
+        manifest: dict = {"touched": sorted(str(b) for b in touched), "surviving": surviving}
+        if full:
+            manifest["sidecars"] = {
+                "_schema.json": frame.schema.json(),
+                "_pk.json": json.dumps(pk_cols),
+                "_layout.json": json.dumps(layout),
+            }
+        # publish the manifest with an atomic rename — THE commit point
+        self._write_atomic(self._manifest(table), json.dumps(manifest))
+        self._apply_commit(table)
+
     def _apply_commit(self, table: str) -> None:
-        """Roll a published manifest forward. Idempotent: a bucket already
-        swapped is absent from staging and skipped; dead-bucket removal
-        re-runs harmlessly."""
+        """Roll a published manifest forward. Idempotent: sidecars are
+        rewritten whole, a bucket already swapped is absent from staging
+        and skipped, and dead-bucket removal re-runs harmlessly."""
         with open(self._manifest(table)) as fh:
             manifest = json.loads(fh.read())
+        for name, text in manifest.get("sidecars", {}).items():
+            self._write_atomic(f"{self._path(table)}/{name}", text)
         staging = self._staging(table)
         for b in manifest["touched"]:
             bucket_dir = f"_bucket={b}"
@@ -255,7 +321,7 @@ class PartitionedParquetStateStore:
             shutil.rmtree(self._staging(table), ignore_errors=True)
 
     def _has_parts(self, table: str) -> bool:
-        return any(d.startswith("_bucket=") for d in os.listdir(self._path(table)))
+        return bool(self._bucket_dirs(self._path(table)))
 
     def _empty(self, table: str) -> DataFrame:
         with open(f"{self._path(table)}/_schema.json") as fh:
@@ -265,6 +331,7 @@ class PartitionedParquetStateStore:
     def exists(self, table: str) -> bool:
         """Whether the table has ever been initialized (sidecars present) —
         lets restart-safe callers seed-if-absent instead of wiping state."""
+        self._recover(table)
         return os.path.exists(f"{self._path(table)}/_schema.json")
 
     def read(self, table: str) -> DataFrame:
@@ -320,24 +387,23 @@ class PartitionedParquetStateStore:
             .join(F.broadcast(key_df), pk, "left_semi")
         )
 
-    def read_leading_range(self, table: str, leading_values: list) -> DataFrame:
+    def read_leading_range(self, table: str, leading_values: DataFrame) -> DataFrame:
         """Bucket-pruned read of every row whose LEADING pk column takes one
-        of ``leading_values`` — the prefix lookup ``read_keys`` cannot do
-        (it needs full composite keys). Only valid for single-size range
-        layouts, where the bucket id is determined by the leading column
-        alone; raises otherwise rather than silently full-scanning.
+        of the values in the one-column DataFrame ``leading_values`` — the
+        prefix lookup ``read_keys`` cannot do (it needs full composite
+        keys). Only valid for single-size range layouts, where the bucket
+        id is determined by the leading column alone; raises otherwise
+        rather than silently full-scanning.
 
         This is the history-table access path: an SCD2 store keyed by
         (business_key, valid_from) and range-bucketed on business_key reads
         a key's whole version chain from exactly one bucket directory.
 
-        ``leading_values`` is a list of values, or a one-column DataFrame —
-        the DataFrame form keeps the keys DISTRIBUTED: only the DISTINCT
-        TOUCHED bucket ids reach the driver. In range mode bucket id is
-        key div range_size, so that count is bounded by the key spread of
-        the batch (one id per range_size-wide span the batch touches), not
-        by the layout's n_buckets hint — a batch touching k distinct spans
-        collects k ids."""
+        The keys stay DISTRIBUTED: only the DISTINCT TOUCHED bucket ids
+        reach the driver. In range mode bucket id is key div range_size, so
+        that count is bounded by the key spread of the batch (one id per
+        range_size-wide span the batch touches), not by the layout's
+        n_buckets hint — a batch touching k distinct spans collects k ids."""
         self._recover(table)
         layout = self._layout(table)
         if layout["bucket_mode"] != "range" or layout.get("range_sizes"):
@@ -347,25 +413,14 @@ class PartitionedParquetStateStore:
             )
         if not self._has_parts(table):
             return self._empty(table)
-        size = layout["range_size"]
-        pk = self._pk_cols(table)
-        lead = pk[0]
-        if isinstance(leading_values, DataFrame):
-            key_df = leading_values.toDF(lead)
-            buckets = sorted(
-                r["_b"]
-                for r in key_df.select(
-                    self._floor_div(F.col(lead), size).alias("_b")
-                ).distinct().collect()
-            )
-        else:
-            if not leading_values:
-                return self._empty(table)
-            buckets = sorted({int(v) // size for v in leading_values})
-            key_df = self.spark.createDataFrame(
-                [(v,) for v in leading_values],
-                T.StructType([self._empty(table).schema[lead]]),
-            )
+        lead = self._pk_cols(table)[0]
+        key_df = leading_values.toDF(lead)
+        buckets = sorted(
+            r["_b"]
+            for r in key_df.select(
+                self._floor_div(F.col(lead), layout["range_size"]).alias("_b")
+            ).distinct().collect()
+        )
         if not buckets:
             return self._empty(table)
         return (
@@ -384,9 +439,10 @@ class PartitionedParquetStateStore:
 
     def evolve(self, table: str, statement: str) -> None:
         """Apply one translated DDL statement (operators.ddl output) by
-        rewriting the table with the evolved schema. DDL is rare (the
-        reference pauses the connector around it, main.go:70-121), so a
-        full rewrite here is acceptable; per-batch DML stays partial."""
+        rewriting the table with the evolved schema through the commit
+        step. DDL is rare (the reference pauses the connector around it,
+        main.go:70-121), so a full rewrite here is acceptable; per-batch DML
+        stays partial."""
         current = self.read(table)
         df = evolve_frame(current, statement)
         if df.schema == current.schema:
@@ -401,30 +457,15 @@ class PartitionedParquetStateStore:
         # the table's PERSISTED layout survives evolution — a store instance
         # constructed with different bucket settings must not silently
         # re-bucket someone else's table
-        layout = self._layout(table)
-        # stage to a sibling dir first: init() overwrites the path the
-        # evolved plan still reads from
-        tmp = f"{self._path(table)}__evolving"
-        df.write.mode("overwrite").parquet(tmp)
-        try:
-            staged = self.spark.read.parquet(tmp)
-        except Exception:  # noqa: BLE001 — zero-row stage leaves no files to infer from
-            staged = self.spark.createDataFrame([], df.schema)
-        self.init(table, staged, pk, layout=layout)
-        shutil.rmtree(tmp, ignore_errors=True)
+        self._commit(table, df, pk, self._layout(table))
 
-    def upsert(
-        self,
-        table: str,
-        events: DataFrame,
-        pk_cols: list[str],
-        missing_update: str = "upsert",
-        broadcast_threshold: int | None = 2_000_000,
-    ) -> int:
-        """Apply one micro-batch; returns the number of rewritten buckets.
+    def upsert(self, table: str, events: DataFrame, pk_cols: list[str]) -> int:
+        """Apply one micro-batch in upsert mode (``operators.apply``: the
+        latest event's after-image wins); returns the number of rewritten
+        buckets.
 
-        Batches above ``broadcast_threshold`` rows use the sort-merge apply
-        (a backfill flood must not be broadcast); None skips the count.
+        Batches above ``BROADCAST_THRESHOLD`` rows use the sort-merge apply
+        (a backfill flood must not be broadcast).
 
         Commit is atomic via the staged-manifest protocol (module
         docstring): merge → write staging → publish manifest (the commit
@@ -451,52 +492,10 @@ class PartitionedParquetStateStore:
         else:
             # fully-emptied (or never-seeded) table: only the sidecar is left
             state_slice = self._empty(table)
-        broadcast = True
-        if broadcast_threshold is not None:
-            batch_rows = sum(r["count"] for r in bucket_counts)
-            broadcast = batch_rows <= broadcast_threshold
-        handle: list = []
+        batch_rows = sum(r["count"] for r in bucket_counts)
         new_slice = apply_cdc(
-            state_slice, events, pk_cols, missing_update=missing_update,
-            broadcast_batch=broadcast, cache_handle=handle,
+            state_slice, events, pk_cols, missing_update="upsert",
+            broadcast_batch=batch_rows <= BROADCAST_THRESHOLD,
         )
-        staging = self._staging(table)
-        # hash-cluster on the bucket before the write: repartition(k,
-        # "_bucket") puts ALL rows of a bucket in one task for ANY k, so
-        # each touched bucket still lands in exactly ONE file per rewrite
-        # (vs tasks x buckets small files — CDC batches are small, so
-        # compact files beat intra-bucket parallelism). The task count is
-        # clamped to the session's parallelism: a corpus-wide batch that
-        # touches thousands of buckets must not schedule thousands of
-        # near-empty write tasks (r12 sweep: 1465 sub-second tasks per
-        # SCD2 staged write at sf1.0 — pure scheduler overhead; guide
-        # §2.2/§6 — fewer, larger tasks). The merge plan reads only LIVE
-        # table files, never staging, so no cache pinning is needed
-        # around this write.
-        width = max(1, min(len(touched), self.spark.sparkContext.defaultParallelism))
-        (
-            new_slice.withColumn("_bucket", self._bucket(pk_cols, layout))
-            .repartition(width, "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(staging)
-        )
-        for df in handle:
-            df.unpersist()
-        if self._post_stage_hook is not None:
-            self._post_stage_hook(table)
-        # surviving buckets come from the staging directory listing — no
-        # extra Spark job (a touched bucket whose rows were ALL deleted
-        # writes no partition directory)
-        surviving = sorted(
-            d.split("=", 1)[1] for d in os.listdir(staging) if d.startswith("_bucket=")
-        )
-        # publish the manifest with an atomic rename — THE commit point;
-        # bucket values are stored as their directory-name strings
-        manifest = {"touched": sorted(str(b) for b in touched), "surviving": surviving}
-        tmp = f"{self._manifest(table)}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(manifest))
-        os.replace(tmp, self._manifest(table))
-        self._apply_commit(table)
+        self._commit(table, new_slice, pk_cols, layout, touched)
         return len(touched)

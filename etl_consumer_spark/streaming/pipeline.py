@@ -385,35 +385,31 @@ class CDCPipeline:
             decoded.filter(F.col("passthrough").isNotNull())
             .select("passthrough")
             .withColumn("_ptid", F.monotonically_increasing_id())
-            .cache()
         )
-        try:
-            head = pt.orderBy("_ptid").limit(limit).collect()
-            for r in head:
-                result.passthrough.append(r["passthrough"])
-                self.passthrough_executor(r["passthrough"])
-            if n_passthrough <= limit:
-                return
-            overflow = (
-                pt.filter(~F.col("_ptid").isin([r["_ptid"] for r in head]))
-                .withColumnRenamed("passthrough", "value")
-                .withColumn("err", F.lit(f"passthrough limit {limit} exceeded"))
+        head = pt.orderBy("_ptid").limit(limit).collect()
+        for r in head:
+            result.passthrough.append(r["passthrough"])
+            self.passthrough_executor(r["passthrough"])
+        if n_passthrough <= limit:
+            return
+        overflow = (
+            pt.filter(~F.col("_ptid").isin([r["_ptid"] for r in head]))
+            .withColumnRenamed("passthrough", "value")
+            .withColumn("err", F.lit(f"passthrough limit {limit} exceeded"))
+        )
+        if self.dead_letter_path:
+            write_dead_letters(
+                dead_letter_rows(overflow, "err", name, self.cfg.db_name),
+                self.dead_letter_path,
             )
-            if self.dead_letter_path:
-                write_dead_letters(
-                    dead_letter_rows(overflow, "err", name, self.cfg.db_name),
-                    self.dead_letter_path,
-                )
-            else:
-                # no dead-letter sink configured: keep a bounded window of
-                # the overflow statements replayable in the batch result
-                # (anything past the window is still counted in dead_letters)
-                result.passthrough_overflow.extend(
-                    r["value"] for r in overflow.select("value").limit(limit).collect()
-                )
-            result.dead_letters += n_passthrough - limit
-        finally:
-            pt.unpersist()
+        else:
+            # no dead-letter sink configured: keep a bounded window of
+            # the overflow statements replayable in the batch result
+            # (anything past the window is still counted in dead_letters)
+            result.passthrough_overflow.extend(
+                r["value"] for r in overflow.select("value").limit(limit).collect()
+            )
+        result.dead_letters += n_passthrough - limit
 
     # -- foreachBatch entry point ------------------------------------------
 

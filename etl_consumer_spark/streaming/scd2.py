@@ -33,7 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
+from etl_consumer_spark.sinks.partitioned_state import (
+    TARGET_BUCKET_ROWS,
+    PartitionedParquetStateStore,
+)
 
 
 class SCD2StreamMaintainer:
@@ -46,12 +49,6 @@ class SCD2StreamMaintainer:
     list (composite business keys); the history store range-buckets on the
     LEADING key column, which is what the pruned current-row read uses.
     """
-
-    #: rows-per-bucket target for the adaptive layout (matches the hash
-    #: store's ``target_bucket_rows``): per-bucket rewrite I/O stays
-    #: bounded while corpus-wide batches touch O(rows/65536) buckets
-    #: instead of O(key_span/1024) near-empty ones
-    TARGET_BUCKET_ROWS = 65536
 
     def __init__(
         self,
@@ -112,7 +109,7 @@ class SCD2StreamMaintainer:
             return 1024
         span = max(1, row["hi"] - row["lo"] + 1)
         density = row["n"] / span  # rows per key-unit
-        return max(1024, int(self.TARGET_BUCKET_ROWS / density))
+        return max(1024, int(TARGET_BUCKET_ROWS / density))
 
     def seed(self, template: DataFrame) -> None:
         """Initialize an empty history table from an event-batch template
@@ -210,7 +207,7 @@ class SCD2StreamMaintainer:
         # broadcast joins + the interval window). Batch-sized, like the
         # events checkpoint above.
         ).localCheckpoint(eager=True)
-        self.store.upsert(self.table, events, self.pk, missing_update="upsert")
+        self.store.upsert(self.table, events, self.pk)
 
     def foreach_batch(self):
         return lambda df, bid: self.apply_batch(df, bid)

@@ -1,6 +1,8 @@
 """The full oracle gate as a test: every registry query runs on Spark at
 sf0.001 and must match its DuckDB oracle (row count, columns, sorted
-values) — the same comparison the driver makes at sf0.01."""
+values) — the same comparison `tools/check_oracle.py` makes at sf0.01.
+A query may cache inside its plan but must release it: the gate starts
+each query with an empty cache and requires one after it."""
 
 from __future__ import annotations
 
@@ -37,7 +39,9 @@ def normalize(df: pd.DataFrame) -> list[list[str]]:
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     q = QUERIES[name]
+    spark.catalog.clearCache()
     sdf = q.fn(spark, SF_DIR).toPandas()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), "query leaks a cache"
     if q.oracle is None:
         assert len(sdf) >= 0  # rows-only contract: runs and yields a frame
         return

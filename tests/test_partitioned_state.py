@@ -92,6 +92,57 @@ def test_evolve_preserves_persisted_layout(spark, tmp_path):
     assert os.path.isdir(str(tmp_path / "t" / "_bucket=1"))
 
 
+class Killed(BaseException):
+    """A process kill inside the store, past any ``except Exception``."""
+
+
+@pytest.mark.parametrize("point", ["staged", "published"])
+def test_killed_evolve_keeps_table_layout_and_unique_keys(spark, tmp_path, point):
+    """Kill an ADD COLUMN evolve after its staged rewrite (before the
+    manifest publish) or right after the publish (before any sidecar or
+    bucket moves). A fresh store with default settings must still see the
+    table, bucket it with the persisted layout (8 buckets, not the
+    constructor's fallback of 64), keep every pk unique across an update,
+    and find the evolve rolled back or forward — never a half-written
+    table or a sibling copy of it."""
+    import json
+
+    seeded = PartitionedParquetStateStore(spark, str(tmp_path))
+    seeded.init("t", spark.range(200).selectExpr("id", "id * 10 AS v"), ["id"])
+    with open(f"{tmp_path}/t/_layout.json") as fh:
+        layout = json.loads(fh.read())
+    assert layout["n_buckets"] == 8
+
+    def kill(*_):
+        raise Killed(point)
+
+    if point == "staged":
+        seeded._post_stage_hook = kill
+    else:
+        seeded._apply_commit = kill
+    with pytest.raises(Killed):
+        seeded.evolve("t", "ALTER TABLE t ADD COLUMNS (note STRING)")
+
+    fresh = PartitionedParquetStateStore(spark, str(tmp_path))
+    assert fresh.exists("t")
+    with open(f"{tmp_path}/t/_layout.json") as fh:
+        assert json.loads(fh.read()) == layout
+    rolled_forward = point == "published"
+    assert ("note" in fresh.read("t").columns) == rolled_forward
+    img = "struct<id:long,v:long" + (",note:string>" if rolled_forward else ">")
+    old, new = ((5, 50, None), (5, 51, None)) if rolled_forward else ((5, 50), (5, 51))
+    fresh.upsert("t", spark.createDataFrame(
+        [(old, new, 1, 0)], f"before {img}, after {img}, pos long, ts_ms long"
+    ), ["id"])
+    state = fresh.read("t")
+    assert state.count() == 200 and state.select("id").distinct().count() == 200
+    assert state.filter("id = 5").first()["v"] == 51
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert {d for d in os.listdir(tmp_path / "t") if not d.startswith("_bucket=")} == {
+        "_layout.json", "_pk.json", "_schema.json"
+    }
+
+
 def test_read_keys_pruned_lookup(spark, tmp_path):
     """read_keys returns exactly the requested rows and its plan prunes to
     the keys' bucket partitions."""

@@ -237,7 +237,7 @@ def test_scd2_stream_read_prunes_buckets(spark, tmp_path):
         "t", df, ["k", "v"],
         layout={"bucket_mode": "range", "range_size": 4, "n_buckets": 64},
     )
-    out = store.read_leading_range("t", [5])
+    out = store.read_leading_range("t", spark.createDataFrame([(5,)], "k: long"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "_bucket" in plan
 
@@ -558,3 +558,24 @@ def test_stream_harness_plumbing_has_one_site_each():
     assert owners("CDCPipeline(") == ["_cdc_stream"]
     assert set(owners("_pin_batch_order(")) <= {"_write_batches"}
     assert "def env(" not in src
+
+
+def test_every_local_checkpoint_is_eager():
+    """Source-level lint: a lazy ``localCheckpoint(eager=False)`` is marked
+    by whichever job reaches it first, and when that is an AQE broadcast
+    beside a shuffle-map stage submission over the same RDD, Spark
+    deadlocks (``DAGScheduler.getCacheLocs`` holding the RDD and waiting on
+    ``RDDCheckpointData``, ``RDD.markCheckpointed`` the other way round —
+    seen as a hung full test run). Every checkpoint in the package must
+    materialize eagerly."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_consumer_spark"
+    lazy = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"[cC]heckpoint\([^)]*eager\s*=\s*False", line)
+    ]
+    assert not lazy, f"lazy checkpoints: {lazy}"

@@ -3,14 +3,20 @@ boundary of a micro-batch, restart from the same checkpoint with a fresh
 pipeline and a fresh store instance, and check that the base state and its
 SCD2 history equal a serial apply of the same envelopes.
 
-The four kill points, in the order a batch reaches them:
+The kill points, in the order a batch reaches them:
 
-1. ``staged``   — after the staged bucket write, before the manifest
+1. ``evolve_staged``   — an ``ADD COLUMN`` rides in the killed epoch; the
+   base table's evolve is killed after its staged rewrite, before its
+   manifest publish (``_post_stage_hook``): recovery rolls it back;
+2. ``evolve_manifest`` — the same DDL, killed after the evolve's manifest
+   publish, between two bucket swaps (``_swap_bucket``): recovery rolls
+   the new schema forward;
+3. ``staged``   — after the staged bucket write, before the manifest
    publish (``_post_stage_hook``); recovery must roll the batch back;
-2. ``manifest`` — after the manifest publish, between two bucket swaps
+4. ``manifest`` — after the manifest publish, between two bucket swaps
    (``_swap_bucket``); recovery must roll the batch forward;
-3. ``history``  — after the SCD2 history upsert;
-4. ``offsets``  — after the whole batch, before Structured Streaming
+5. ``history``  — after the SCD2 history upsert;
+6. ``offsets``  — after the whole batch, before Structured Streaming
    commits its offsets.
 
 In every case the offset log replays the killed epoch, and the idempotent
@@ -30,12 +36,13 @@ from etl_consumer_spark.sources.kafka import file_envelope_stream
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
 from etl_consumer_spark.streaming.scd2 import SCD2StreamMaintainer
 
-from tests.test_streaming import DB, SERVER, TOPIC, envelope, make_transport
+from tests.test_streaming import DB, SERVER, TOPIC, ddl_envelope, envelope, make_transport
 
 TABLE = "batch_seq"
 FIELDS = [WireField("id", "int64"), WireField("seq", "int32"), WireField("name", "string")]
 PK = ["id"]
 KILLED_EPOCH = 1
+ADD_COLUMN = f"ALTER TABLE `{DB}`.`{TABLE}` ADD COLUMN note VARCHAR(8)"
 
 
 class Crash(BaseException):
@@ -124,10 +131,16 @@ def _install_fault(point, pipe, monkeypatch, fired):
     """Arm one kill point; it fires once, in the killed epoch."""
     store = pipe.store
     upserts = {"n": 0}
+    evolving: list[str] = []
 
     def killed_epoch(table):
+        if fired or table != TABLE:
+            return False
+        if point.startswith("evolve_"):
+            # the one DDL rides in the killed epoch
+            return evolving == [TABLE]
         # the base table's upserts run one per epoch, in epoch order
-        return table == TABLE and upserts["n"] == KILLED_EPOCH + 1 and not fired
+        return upserts["n"] == KILLED_EPOCH + 1
 
     real_upsert = store.upsert
 
@@ -137,15 +150,25 @@ def _install_fault(point, pipe, monkeypatch, fired):
         return real_upsert(table, *a, **kw)
 
     store.upsert = counting_upsert
+    real_evolve = store.evolve
 
-    if point == "staged":
+    def flagged_evolve(table, *a, **kw):
+        evolving.append(table)
+        try:
+            return real_evolve(table, *a, **kw)
+        finally:
+            evolving.remove(table)
+
+    store.evolve = flagged_evolve
+
+    if point in ("staged", "evolve_staged"):
         def after_stage(table):
             if killed_epoch(table):
                 fired.append(point)
                 raise Crash(point)
 
         store._post_stage_hook = after_stage
-    elif point == "manifest":
+    elif point in ("manifest", "evolve_manifest"):
         real_swap = PartitionedParquetStateStore._swap_bucket
         swaps = {"n": 0}
 
@@ -181,14 +204,18 @@ def _install_fault(point, pipe, monkeypatch, fired):
         pipe.process_batch = process_batch
 
 
-@pytest.mark.parametrize("point", ["staged", "manifest", "history", "offsets"])
+@pytest.mark.parametrize(
+    "point", ["evolve_staged", "evolve_manifest", "staged", "manifest", "history", "offsets"]
+)
 def test_kill_and_restart_equals_serial_apply(spark, tmp_path, monkeypatch, point):
     root = str(tmp_path)
     batches = _batches()
-    for batch in batches:
-        make_transport(
-            spark, [(TOPIC, envelope(b, a, pos=p)) for b, a, p in batch], f"{root}/transport"
-        )
+    ddl = point.startswith("evolve_")
+    for epoch, batch in enumerate(batches):
+        msgs = [(TOPIC, envelope(b, a, pos=p)) for b, a, p in batch]
+        if ddl and epoch == KILLED_EPOCH:
+            msgs.insert(0, (SERVER, ddl_envelope(DB, TABLE, ADD_COLUMN)))
+        make_transport(spark, msgs, f"{root}/transport")
 
     crashed = _pipeline(spark, root)
     fired: list[str] = []
@@ -217,3 +244,7 @@ def test_kill_and_restart_equals_serial_apply(spark, tmp_path, monkeypatch, poin
         .collect()
     }
     assert got_history == history
+    if ddl:
+        # the column was added once, in both tables, and no image carries it
+        for t in (TABLE, f"{TABLE}__history"):
+            assert store.read(t).filter("note IS NOT NULL").count() == 0

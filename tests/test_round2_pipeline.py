@@ -282,10 +282,12 @@ def test_range_bucket_exact_above_2_53(spark, tmp_path):
     assert store.read("t").collect()[0]["id"] == big
 
 
-def test_upsert_backfill_takes_sort_merge_path(spark, tmp_path):
-    """A batch above broadcast_threshold must still apply correctly through
+def test_upsert_backfill_takes_sort_merge_path(spark, tmp_path, monkeypatch):
+    """A batch above BROADCAST_THRESHOLD must still apply correctly through
     the full-outer sort-merge path."""
     from pyspark.sql import functions as F
+
+    from etl_consumer_spark.sinks import partitioned_state
 
     img = "struct<id:long,province_id:long,seq:long,amount:double,created_day:date>"
     seed = spark.createDataFrame([(i, 0, 0, 1.0, None) for i in range(1, 21)], STATE_DDL)
@@ -301,7 +303,8 @@ def test_upsert_backfill_takes_sort_merge_path(spark, tmp_path):
     store = PartitionedParquetStateStore(spark, str(tmp_path / "p"))
     store.init("t", seed, ["id"])
     # threshold 5 < 30 events -> sort-merge branch
-    store.upsert("t", events, ["id"], broadcast_threshold=5)
+    monkeypatch.setattr(partitioned_state, "BROADCAST_THRESHOLD", 5)
+    store.upsert("t", events, ["id"])
     out = {r["id"]: r["amount"] for r in store.read("t").collect()}
     assert len(out) == 40  # 20 seed + 20 new (ids 21..40); 11..20 upserted
     assert out[15] == 2.0 and out[5] == 1.0 and out[40] == 2.0

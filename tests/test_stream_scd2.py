@@ -78,14 +78,10 @@ def test_read_leading_range_prunes_and_filters(spark, tmp_path):
         "t", df, ["k", "v"],
         layout={"bucket_mode": "range", "range_size": 4, "n_buckets": 64},
     )
-    got = sorted(
-        (r.k, r.v) for r in store.read_leading_range("t", [3, 17]).collect()
-    )
-    assert got == [(3, 0), (3, 1), (17, 0), (17, 1)]
-    # DataFrame form: same result, keys never collected
+    # the keys stay a DataFrame: never collected to the driver
     kdf = spark.createDataFrame([(3,), (17,)], "k: long")
-    got_df = sorted((r.k, r.v) for r in store.read_leading_range("t", kdf).collect())
-    assert got_df == got
+    got = sorted((r.k, r.v) for r in store.read_leading_range("t", kdf).collect())
+    assert got == [(3, 0), (3, 1), (17, 0), (17, 1)]
 
 
 def test_read_leading_range_rejects_hash_layout(spark, tmp_path):
@@ -93,7 +89,7 @@ def test_read_leading_range_rejects_hash_layout(spark, tmp_path):
     df = spark.createDataFrame([(1, 2, 3)], "k: long, v: long, p: long")
     store.init("t", df, ["k", "v"], layout={"bucket_mode": "hash", "n_buckets": 8})
     with pytest.raises(ValueError, match="range layout"):
-        store.read_leading_range("t", [1])
+        store.read_leading_range("t", spark.createDataFrame([(1,)], "k: long"))
 
 
 def _events_d(spark, rows):
