@@ -10,6 +10,7 @@ from etl_consumer_spark.functions.decoders import (
     decimal_encode_b64,
     decimal_unscaled,
     epoch_day_to_date,
+    epoch_micros_to_timestamp,
     epoch_ms_to_timestamp,
     micros_to_time,
     quote_strip,
@@ -34,6 +35,7 @@ __all__ = [
     "decimal_encode_b64",
     "decimal_unscaled",
     "epoch_day_to_date",
+    "epoch_micros_to_timestamp",
     "epoch_ms_to_timestamp",
     "micros_to_time",
     "quote_strip",

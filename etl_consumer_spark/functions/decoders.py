@@ -175,10 +175,23 @@ def epoch_ms_to_timestamp(
     (reference: main.go:265-276). ``with_timezone`` applies the reference's
     hardcoded −7 h read shift (main.go:271), parameterized per SURVEY §7
     hard-part 4."""
-    ts = F.timestamp_millis(_col(ms).cast("long"))
-    if with_timezone:
-        ts = ts - F.make_interval(hours=F.lit(tz_hours))
-    return ts
+    return _shift(F.timestamp_millis(_col(ms).cast("long")), with_timezone, tz_hours)
+
+
+def epoch_micros_to_timestamp(
+    micros: ColumnOrName,
+    *,
+    with_timezone: bool = False,
+    tz_hours: int = 7,
+) -> Column:
+    """``io.debezium.time.MicroTimestamp`` (µs since epoch: a MySQL
+    ``DATETIME(4)``-``(6)`` column in Debezium's default adaptive time mode)
+    → TimestampType, with F3's ``with_timezone`` shift."""
+    return _shift(F.timestamp_micros(_col(micros).cast("long")), with_timezone, tz_hours)
+
+
+def _shift(ts: Column, with_timezone: bool, tz_hours: int) -> Column:
+    return ts - F.make_interval(hours=F.lit(tz_hours)) if with_timezone else ts
 
 
 def micros_to_time(micros: ColumnOrName) -> Column:

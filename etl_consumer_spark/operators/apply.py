@@ -173,9 +173,11 @@ def apply_cdc(
     op = F.col("_op")
 
     def image(c: str) -> Column:
-        # the state schema decides column types, so a rewritten slice never
-        # disagrees with untouched rows (Catalyst drops a same-type cast)
-        return F.col(f"_after.{c}").cast(state.schema[c].dataType)
+        # the state schema decides column types, pk columns included, so a
+        # rewritten slice never disagrees with untouched rows (a decoded
+        # long key of an INT pk would otherwise widen the whole slice;
+        # Catalyst drops a same-type cast)
+        return (F.col(c) if c in pk_cols else F.col(f"_after.{c}")).cast(state.schema[c].dataType)
 
     if broadcast_batch:
         # Scale path (micro-batch ≪ state): state is only STREAMED, never
@@ -202,7 +204,7 @@ def apply_cdc(
                 F.broadcast(latest.select(*pk_cols)), on=pk_cols, how="left_anti"
             )
             replacements = latest.filter(op.isin(OP_INSERT, OP_UPDATE)).select(
-                *[c if c in pk_cols else image(c).alias(c) for c in cols]
+                *[image(c).alias(c) for c in cols]
             )
             return survivors.unionByName(replacements)
         joined = state.alias("s").join(F.broadcast(latest.alias("e")), on=pk_cols, how="left")
@@ -221,7 +223,7 @@ def apply_cdc(
             .join(F.broadcast(candidates.select(*pk_cols)), on=pk_cols, how="left_semi")
         )
         new_rows = candidates.join(F.broadcast(matched_keys), on=pk_cols, how="left_anti").select(
-            *[c if c in pk_cols else image(c).alias(c) for c in cols]
+            *[image(c).alias(c) for c in cols]
         )
         return survivors.unionByName(new_rows)
 
@@ -236,15 +238,13 @@ def apply_cdc(
     else:
         keep = op.isNull() | op.isin(OP_INSERT, OP_UPDATE)
         use_state = op.isNull()
-    out_cols = []
-    for c in cols:
-        if c in pk_cols:
-            out_cols.append(F.col(c).alias(c))
-        else:
-            out_cols.append(
-                F.when(use_state, F.col(f"s.{c}")).otherwise(image(c)).alias(c)
-            )
-    return joined.filter(keep).select(*out_cols)
+    return joined.filter(keep).select(
+        *[
+            image(c).alias(c) if c in pk_cols
+            else F.when(use_state, F.col(f"s.{c}")).otherwise(image(c)).alias(c)
+            for c in cols
+        ]
+    )
 
 
 def apply_cdc_full_row(

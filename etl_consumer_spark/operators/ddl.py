@@ -25,14 +25,15 @@ from etl_consumer_spark.operators.routing import (
     is_empty_ddl,
     table_whitelist,
 )
-from etl_consumer_spark.schemas import DATE, DECIMAL, MICROTIME, TIMESTAMP, ZONEDTS, WireField
+from etl_consumer_spark.schemas import (
+    DATE, DECIMAL, MICROTIME, MICROTIMESTAMP, TIMESTAMP, ZONEDTS, WireField,
+)
 
 # MySQL column type -> (Spark SQL type, Connect primitive, logical type) of
 # the column as the Debezium MySQL connector emits it in its default
 # adaptive time mode. First full match wins; DECIMAL is handled apart (its
 # precision and scale bind the decoder). DATETIME(4)-(6) arrives as
-# MicroTimestamp, which the engine does not decode: it stays unmatched and
-# the change is reported skipped.
+# MicroTimestamp (microseconds), DATETIME(0)-(3) as Timestamp (milliseconds).
 _TYPES = [
     (r"TINYINT\s*\(\s*1\s*\)|BOOL(?:EAN)?|BIT(?:\s*\(\s*1\s*\))?", "BOOLEAN", "boolean", None),
     (r"TINYINT(?:\s*\(\d+\))?", "TINYINT", "int16", None),
@@ -42,6 +43,7 @@ _TYPES = [
     (r"(?:DOUBLE(?:\s+PRECISION)?|REAL)(?:\s*\(\d+\s*,\s*\d+\))?", "DOUBLE", "float64", None),
     (r"FLOAT(?:\s*\(\d+\s*,\s*\d+\))?", "FLOAT", "float32", None),
     (r"DATETIME(?:\s*\(\s*[0-3]\s*\))?", "TIMESTAMP", "int64", TIMESTAMP),
+    (r"DATETIME\s*\(\s*[4-6]\s*\)", "TIMESTAMP", "int64", MICROTIMESTAMP),
     (r"TIMESTAMP(?:\s*\(\d+\))?", "TIMESTAMP", "string", ZONEDTS),
     (r"DATE", "DATE", "int32", DATE),
     (r"YEAR(?:\s*\(\s*4\s*\))?", "INT", "int32", None),

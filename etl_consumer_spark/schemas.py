@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 DECIMAL = "org.apache.kafka.connect.data.Decimal"
 DATE = "io.debezium.time.Date"
 TIMESTAMP = "io.debezium.time.Timestamp"
+MICROTIMESTAMP = "io.debezium.time.MicroTimestamp"
 MICROTIME = "io.debezium.time.MicroTime"
 ZONEDTS = "io.debezium.time.ZonedTimestamp"
 

@@ -3,14 +3,13 @@ reference's MySQL target, main.go:135), bucket-partitioned with
 partial-partition rewrite.
 
 Rewriting the whole table every batch costs O(state) I/O per batch. This
-store partitions state by ``bucket = pmod(hash(pk), n_buckets)`` and each
-upsert:
+store partitions state into buckets and each upsert:
 
 1. derives the micro-batch's touched buckets (a tiny distinct list),
 2. reads ONLY those partitions (directory-partition pruning — verify with
    ``.explain``: the scan's PartitionFilters carry the bucket list),
 3. applies the CDC merge to that slice,
-4. rewrites only those partitions via dynamic partition overwrite.
+4. rewrites only those partitions.
 
 Per-batch I/O is O(touched partitions), independent of total state size —
 the property that makes per-batch upserts viable at 100 TB. Measured on a
@@ -18,13 +17,20 @@ the property that makes per-batch upserts viable at 100 TB. Measured on a
 rewritten; at local toy scale wall-time is constant-dominated, the win is
 the I/O asymptotics.
 
-Bucket count is data-dependent by default (``n_buckets=None`` → about
-``rows / TARGET_BUCKET_ROWS`` at init, clamped to [8, 4096]) and persisted
-in a per-table ``_layout.json`` sidecar, so every later reader/writer —
-including a fresh store instance — agrees on the layout. A fixed k would
-either over-partition small tables (small-file storm, constant-dominated
-batches) or under-partition huge ones (per-bucket rewrite approaches
-O(state) again).
+A table's layout is decided once, by the commit that creates it (``init``,
+or the first ``upsert`` into a table the store has never committed), and
+persisted in its ``_layout.json`` sidecar, so every later reader and writer
+— a fresh store instance included — agrees on it; the store itself has no
+layout setting. The default is a hash layout, ``bucket = pmod(hash(pk),
+n_buckets)``, whose bucket count is data-dependent (about ``rows /
+TARGET_BUCKET_ROWS`` at the first commit, clamped to [8, 4096]): a fixed k
+would either over-partition small tables (small-file storm,
+constant-dominated batches) or under-partition huge ones (per-bucket
+rewrite approaches O(state) again). ``init(layout=...)`` may pick a range
+layout on the leading pk column instead (the SCD2 history does). One rule
+maps keys to buckets (``_bucket_of``), applied to key columns cast to the
+table's persisted pk types, for the staged write, upsert's touched buckets
+and the one keyed read, ``read_keys``.
 
 Every write — ``init``, ``evolve`` and ``upsert`` — commits atomically
 through one staged-manifest protocol (the reference got per-statement
@@ -93,9 +99,9 @@ def evolve_frame(df: DataFrame, statement: str) -> DataFrame:
     return df.withColumn(col, typed.cast(state_type(change.spark_type)))
 
 
-#: rows-per-bucket target of the adaptive layouts (the hash store's bucket
-#: count at init, the SCD2 history's range width at seed): per-bucket
-#: rewrite I/O stays bounded while corpus-wide batches touch
+#: rows-per-bucket target of the adaptive layouts (the hash layout's bucket
+#: count at a table's first commit, the SCD2 history's range width at seed):
+#: per-bucket rewrite I/O stays bounded while corpus-wide batches touch
 #: O(rows/65536) buckets instead of many near-empty ones
 TARGET_BUCKET_ROWS = 65536
 
@@ -105,25 +111,18 @@ BROADCAST_THRESHOLD = 2_000_000
 
 
 class PartitionedParquetStateStore:
-    """``bucket_mode='hash'`` spreads keys uniformly — it bounds rewrite I/O
-    only while distinct batch keys ≪ n_buckets (a large uniform batch
-    touches every bucket: coupon collector). ``bucket_mode='range'``
-    (bucket = pk div range_size) exploits key locality instead: CDC
-    batches that cluster on recent/hot keys (the common case — inserts at
-    the key tail, updates to recent rows) touch only the few ranges they
-    live in, independent of batch size."""
+    """A table's layout is fixed by the commit that creates it and read from
+    its ``_layout.json`` ever after:
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_path: str,
-        n_buckets: int | None = None,
-        bucket_mode: str = "hash",
-        range_size: int = 1_000_000,
-        range_sizes: list[int] | None = None,
-    ):
-        if bucket_mode not in ("hash", "range"):
-            raise ValueError(f"bucket_mode must be 'hash' or 'range', got {bucket_mode!r}")
+    - ``{"bucket_mode": "hash", "n_buckets": k}`` (the default) spreads keys
+      uniformly. It bounds rewrite I/O only while distinct batch keys ≪ k
+      (a large uniform batch touches every bucket: coupon collector).
+    - ``{"bucket_mode": "range", "range_size": s}`` (bucket = leading pk
+      div s) exploits key locality instead: CDC batches that cluster on
+      recent/hot keys (inserts at the key tail, updates to recent rows)
+      touch only the few ranges they live in, independent of batch size."""
+
+    def __init__(self, spark: SparkSession, base_path: str):
         if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", base_path):
             raise ValueError(
                 f"state path {base_path!r} carries a URI scheme: the state store "
@@ -132,10 +131,6 @@ class PartitionedParquetStateStore:
             )
         self.spark = spark
         self.base = base_path.rstrip("/")
-        self.n_buckets = n_buckets
-        self.bucket_mode = bucket_mode
-        self.range_size = range_size
-        self.range_sizes = range_sizes
 
     # test seam (like _swap_bucket's crash seam): when set on an instance,
     # called after a commit's staged write and before its manifest publish
@@ -146,18 +141,25 @@ class PartitionedParquetStateStore:
     def _path(self, table: str) -> str:
         return f"{self.base}/{table}"
 
-    # -- per-table layout (persisted so re-instantiated stores agree) ------
+    # -- the table's sidecars, written only by the commit that publishes them
+
+    def _sidecar(self, table: str, name: str):
+        with open(f"{self._path(table)}/_{name}.json") as fh:
+            return json.loads(fh.read())
 
     def _layout(self, table: str) -> dict:
-        try:
-            with open(f"{self._path(table)}/_layout.json") as fh:
-                return json.loads(fh.read())
-        except FileNotFoundError:
-            return {
-                "bucket_mode": self.bucket_mode,
-                "n_buckets": self.n_buckets or 64,
-                "range_size": self.range_size,
-            }
+        return self._sidecar(table, "layout")
+
+    def _pk_cols(self, table: str) -> list[str]:
+        return self._sidecar(table, "pk")
+
+    def _schema(self, table: str) -> T.StructType:
+        return T.StructType.fromJson(self._sidecar(table, "schema"))
+
+    @staticmethod
+    def _hash_layout(rows: int) -> dict:
+        # the default layout (module docstring), sized by the first commit
+        return {"bucket_mode": "hash", "n_buckets": max(8, min(4096, -(-rows // TARGET_BUCKET_ROWS)))}
 
     @staticmethod
     def _floor_div(col, divisor: int):
@@ -170,47 +172,27 @@ class PartitionedParquetStateStore:
         q = F.call_function("div", c, F.lit(divisor))
         return F.when((c % divisor != 0) & (c < 0), q - 1).otherwise(q)
 
-    def _bucket_of(self, cols: list, layout: dict):
+    @classmethod
+    def _bucket_of(cls, keys: list, types: list, layout: dict):
+        """THE key-to-bucket rule, for the staged write, upsert's touched
+        buckets and ``read_keys`` alike. ``keys`` are the leading pk columns
+        (all of them under hash, at least the first under range), each cast
+        to its persisted pk type first: a decoded ``long`` key of an ``INT``
+        pk column must hash like the stored int."""
+        typed = [k.cast(t) for k, t in zip(keys, types)]
         if layout["bucket_mode"] == "range":
-            sizes = layout.get("range_sizes") or [layout["range_size"]]
-            if len(sizes) > 1:
-                # composite-pk range layout: one range id per pk column,
-                # concatenated into a single partition value — lookups on
-                # the full composite key still prune to one directory
-                parts = [
-                    self._floor_div(c, s).cast("string")
-                    for c, s in zip(cols, sizes)
-                ]
-                return F.concat_ws("_", *parts)
-            return self._floor_div(cols[0], sizes[0])
-        return F.pmod(F.hash(*cols), F.lit(layout["n_buckets"]))
-
-    def _bucket(self, pk_cols: list[str], layout: dict):
-        return self._bucket_of([F.col(c) for c in pk_cols], layout)
+            return cls._floor_div(typed[0], layout["range_size"])
+        return F.pmod(F.hash(*typed), F.lit(layout["n_buckets"]))
 
     def init(self, table: str, df: DataFrame, pk_cols: list[str], layout: dict | None = None) -> None:
         """Seed (or replace) a table: a full rewrite whose commit also
         publishes the schema (read() of an emptied table), pk and layout
-        sidecars every later writer agrees on."""
+        sidecars every later writer agrees on. ``layout`` defaults to the
+        hash layout sized by one ``count()`` of ``df``."""
         if layout is None:
-            k = self.n_buckets
-            if k is None and self.bucket_mode == "hash":
-                # data-dependent bucket count: one count() per table lifetime
-                k = max(8, min(4096, -(-df.count() // TARGET_BUCKET_ROWS)))
-            layout = {
-                "bucket_mode": self.bucket_mode,
-                "n_buckets": k or 64,
-                "range_size": self.range_size,
-            }
-            if self.bucket_mode == "range" and (self.range_sizes or len(pk_cols) > 1):
-                # composite-pk range spec: one range size per pk column,
-                # persisted so every later reader agrees on the layout
-                sizes = self.range_sizes or [self.range_size] * len(pk_cols)
-                if len(sizes) != len(pk_cols):
-                    raise ValueError(
-                        f"range_sizes width {len(sizes)} != pk width {len(pk_cols)}"
-                    )
-                layout["range_sizes"] = list(sizes)
+            layout = self._hash_layout(df.count())
+        elif layout.get("bucket_mode") not in ("hash", "range"):
+            raise ValueError(f"bucket_mode must be 'hash' or 'range', got {layout!r}")
         self._recover(table)
         self._commit(table, df, pk_cols, layout)
 
@@ -246,12 +228,15 @@ class PartitionedParquetStateStore:
     def _commit(
         self, table: str, frame: DataFrame, pk_cols: list[str], layout: dict,
         touched: list | None = None,
-    ) -> None:
+    ) -> int:
         """THE write path (module docstring): stage ``frame``, publish the
-        manifest, roll it forward. ``touched`` lists the buckets an upsert
-        rewrites; None is a full rewrite (init, evolve) — every live and
+        manifest, roll it forward; returns the number of touched buckets.
+        ``touched`` lists the buckets an upsert rewrites; None is a full
+        rewrite (init, evolve, a table's first upsert) — every live and
         every staged bucket is touched and the manifest carries ``frame``'s
-        schema, ``pk_cols`` and ``layout`` as the table's new sidecars."""
+        schema, ``pk_cols`` and ``layout`` as the table's new sidecars.
+        ``frame``'s pk columns carry the table's pk types (an upsert's merge
+        casts to the state schema)."""
         staging = self._staging(table)
         # repartition(k, "_bucket") puts ALL rows of a bucket in one task
         # for ANY k: one file per bucket per rewrite, not tasks x buckets
@@ -261,8 +246,11 @@ class PartitionedParquetStateStore:
         width = self.spark.sparkContext.defaultParallelism
         if touched is not None:
             width = max(1, min(len(touched), width))
+        bucket = self._bucket_of(
+            [F.col(c) for c in pk_cols], [frame.schema[c].dataType for c in pk_cols], layout
+        )
         (
-            frame.withColumn("_bucket", self._bucket(pk_cols, layout))
+            frame.withColumn("_bucket", bucket)
             .repartition(width, "_bucket")
             .write.mode("overwrite")
             .partitionBy("_bucket")
@@ -287,6 +275,7 @@ class PartitionedParquetStateStore:
         # publish the manifest with an atomic rename — THE commit point
         self._write_atomic(self._manifest(table), json.dumps(manifest))
         self._apply_commit(table)
+        return len(manifest["touched"])
 
     def _apply_commit(self, table: str) -> None:
         """Roll a published manifest forward. Idempotent: sidecars are
@@ -324,125 +313,64 @@ class PartitionedParquetStateStore:
         return bool(self._bucket_dirs(self._path(table)))
 
     def _empty(self, table: str) -> DataFrame:
-        with open(f"{self._path(table)}/_schema.json") as fh:
-            schema = T.StructType.fromJson(json.loads(fh.read()))
-        return self.spark.createDataFrame([], schema)
+        return self.spark.createDataFrame([], self._schema(table))
+
+    def _read_buckets(self, table: str, buckets: list | None = None) -> DataFrame:
+        """The table's rows, or only those of ``buckets``: the scan's
+        PartitionFilters carry the bucket list (directory pruning)."""
+        if not self._has_parts(table):
+            # a fully-emptied table: only the sidecars are left
+            return self._empty(table)
+        rows = self.spark.read.parquet(self._path(table))
+        if buckets is not None:
+            rows = rows.filter(F.col("_bucket").isin(buckets))
+        return rows.drop("_bucket")
 
     def exists(self, table: str) -> bool:
-        """Whether the table has ever been initialized (sidecars present) —
+        """Whether the table has ever been committed (sidecars present) —
         lets restart-safe callers seed-if-absent instead of wiping state."""
         self._recover(table)
         return os.path.exists(f"{self._path(table)}/_schema.json")
 
     def read(self, table: str) -> DataFrame:
         self._recover(table)
-        if not self._has_parts(table):
-            return self._empty(table)
-        return self.spark.read.parquet(self._path(table)).drop("_bucket")
+        return self._read_buckets(table)
 
-    def read_keys(self, table: str, keys: list, pk_cols: list[str] | None = None) -> DataFrame:
-        """Point/batch lookup: read ONLY the buckets the requested primary
-        keys hash into (directory-partition pruning — the scan's
-        PartitionFilters carry the bucket list), then filter exactly.
-        O(|keys|/n_buckets · state) I/O instead of a full scan — the
-        equivalent of the reference target's indexed SELECT.
+    def read_keys(self, table: str, keys: DataFrame) -> DataFrame:
+        """Keyed read, the equivalent of the reference target's indexed
+        SELECT: every row whose leading pk columns take one of the value
+        tuples in ``keys``, reading ONLY the buckets those keys map to.
 
-        ``keys``: list of values for a single-column pk, or list of tuples
-        for a composite pk. Hash layouts bucket on the full key; range
-        layouts bucket on per-column range ids when the layout carries a
-        ``range_sizes`` spec (composite), else on the leading column."""
+        ``keys``' columns must be the leading pk columns that fix the
+        bucket, in pk order: the full pk under hash, the leading column or
+        more under range (the SCD2 history reads a business key's whole
+        version chain this way). Any other column set raises ValueError
+        before any Spark job runs, rather than silently full-scanning. The
+        keys stay distributed: only their distinct bucket ids reach the
+        driver, at most one per range span or hash bucket they touch."""
         self._recover(table)
-        persisted = self._pk_cols(table)
-        pk = pk_cols or persisted
-        if not pk:
-            raise ValueError("unknown primary key; pass pk_cols")
-        if pk_cols and persisted and list(pk_cols) != list(persisted):
-            # order matters: composite keys hash/bucket tuples positionally,
-            # so a reordered pk list would silently return empty results
+        pk, layout, schema = self._pk_cols(table), self._layout(table), self._schema(table)
+        cols = keys.columns
+        fixed = len(pk) if layout["bucket_mode"] == "hash" else 1
+        if not fixed <= len(cols) <= len(pk) or cols != pk[: len(cols)]:
             raise ValueError(
-                f"pk_cols {list(pk_cols)} do not match persisted pk {persisted} "
-                f"for table {table!r} (names and order must agree)"
+                f"key columns {cols} of table {table!r} are not a leading prefix of its "
+                f"pk {pk} that fixes the {layout['bucket_mode']} bucket (first {fixed})"
             )
-        if not keys:
-            return self._empty(table)
-        key_rows = [k if isinstance(k, tuple) else (k,) for k in keys]
-        if len(key_rows[0]) != len(pk):
-            raise ValueError(f"key width {len(key_rows[0])} != pk width {len(pk)}")
-        layout = self._layout(table)
-        state = self._empty(table)
-        key_df = self.spark.createDataFrame(
-            key_rows,
-            T.StructType([state.schema[c] for c in pk]),
+        typed = keys.select(*[F.col(c).cast(schema[c].dataType) for c in cols]).distinct()
+        buckets = typed.select(
+            self._bucket_of([F.col(c) for c in cols], [schema[c].dataType for c in cols], layout)
+        ).distinct().collect()
+        return self._read_buckets(table, sorted(r[0] for r in buckets)).join(
+            F.broadcast(typed), cols, "left_semi"
         )
-        buckets = {
-            r["_b"]
-            for r in key_df.select(self._bucket(pk, layout).alias("_b")).distinct().collect()
-        }
-        if not self._has_parts(table):
-            return self._empty(table)
-        return (
-            self.spark.read.parquet(self._path(table))
-            .filter(F.col("_bucket").isin(list(buckets)))
-            .drop("_bucket")
-            .join(F.broadcast(key_df), pk, "left_semi")
-        )
-
-    def read_leading_range(self, table: str, leading_values: DataFrame) -> DataFrame:
-        """Bucket-pruned read of every row whose LEADING pk column takes one
-        of the values in the one-column DataFrame ``leading_values`` — the
-        prefix lookup ``read_keys`` cannot do (it needs full composite
-        keys). Only valid for single-size range layouts, where the bucket
-        id is determined by the leading column alone; raises otherwise
-        rather than silently full-scanning.
-
-        This is the history-table access path: an SCD2 store keyed by
-        (business_key, valid_from) and range-bucketed on business_key reads
-        a key's whole version chain from exactly one bucket directory.
-
-        The keys stay DISTRIBUTED: only the DISTINCT TOUCHED bucket ids
-        reach the driver. In range mode bucket id is key div range_size, so
-        that count is bounded by the key spread of the batch (one id per
-        range_size-wide span the batch touches), not by the layout's
-        n_buckets hint — a batch touching k distinct spans collects k ids."""
-        self._recover(table)
-        layout = self._layout(table)
-        if layout["bucket_mode"] != "range" or layout.get("range_sizes"):
-            raise ValueError(
-                "read_leading_range requires a single-size range layout "
-                "(bucket determined by the leading pk column)"
-            )
-        if not self._has_parts(table):
-            return self._empty(table)
-        lead = self._pk_cols(table)[0]
-        key_df = leading_values.toDF(lead)
-        buckets = sorted(
-            r["_b"]
-            for r in key_df.select(
-                self._floor_div(F.col(lead), layout["range_size"]).alias("_b")
-            ).distinct().collect()
-        )
-        if not buckets:
-            return self._empty(table)
-        return (
-            self.spark.read.parquet(self._path(table))
-            .filter(F.col("_bucket").isin(buckets))
-            .drop("_bucket")
-            .join(F.broadcast(key_df.distinct()), lead, "left_semi")
-        )
-
-    def _pk_cols(self, table: str) -> list[str]:
-        try:
-            with open(f"{self._path(table)}/_pk.json") as fh:
-                return json.loads(fh.read())
-        except FileNotFoundError:
-            return []
 
     def evolve(self, table: str, statement: str) -> None:
         """Apply one translated DDL statement (operators.ddl output) by
         rewriting the table with the evolved schema through the commit
         step. DDL is rare (the reference pauses the connector around it,
         main.go:70-121), so a full rewrite here is acceptable; per-batch DML
-        stays partial."""
+        stays partial. The table keeps its persisted layout."""
         current = self.read(table)
         df = evolve_frame(current, statement)
         if df.schema == current.schema:
@@ -452,11 +380,8 @@ class PartitionedParquetStateStore:
         change = parse_statement(statement)
         pk = [
             change.new_name if change.op == "rename" and c == change.column else c
-            for c in self._pk_cols(table) or [df.columns[0]]
+            for c in self._pk_cols(table)
         ]
-        # the table's PERSISTED layout survives evolution — a store instance
-        # constructed with different bucket settings must not silently
-        # re-bucket someone else's table
         self._commit(table, df, pk, self._layout(table))
 
     def upsert(self, table: str, events: DataFrame, pk_cols: list[str]) -> int:
@@ -464,38 +389,39 @@ class PartitionedParquetStateStore:
         latest event's after-image wins); returns the number of rewritten
         buckets.
 
-        Batches above ``BROADCAST_THRESHOLD`` rows use the sort-merge apply
-        (a backfill flood must not be broadcast).
+        A table the store has never committed is created by this upsert:
+        a full commit with the hash layout sized by the batch, whose
+        sidecars take the after-image schema. Batches above
+        ``BROADCAST_THRESHOLD`` rows use the sort-merge apply (a backfill
+        flood must not be broadcast).
 
         Commit is atomic via the staged-manifest protocol (module
         docstring): merge → write staging → publish manifest (the commit
         point) → swap bucket dirs → clean up."""
-        self._recover(table)
-        layout = self._layout(table)
-        key_cols = [
-            F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")) for k in pk_cols
-        ]
-        # ONE job yields both the touched-bucket list and the batch size
-        # (per-bucket counts sum to the total) — the broadcast-vs-sort-merge
-        # decision used to cost a second count() job per batch per table
-        bucket_counts = (
-            events.groupBy(self._bucket_of(key_cols, layout).alias("_bucket"))
-            .count()
-            .collect()
-        )
-        touched = [r["_bucket"] for r in bucket_counts]
-        if not touched:
-            return 0
-        if self._has_parts(table):
-            full = self.spark.read.parquet(self._path(table))
-            state_slice = full.filter(F.col("_bucket").isin(touched)).drop("_bucket")
+        if self.exists(table):
+            layout, schema = self._layout(table), self._schema(table)
+            keys = [F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")) for k in pk_cols]
+            # ONE job yields both the touched-bucket list and the batch size
+            # (per-bucket counts sum to the total) — the broadcast-vs-sort-merge
+            # decision used to cost a second count() job per batch per table
+            bucket_counts = (
+                events.groupBy(
+                    self._bucket_of(keys, [schema[k].dataType for k in pk_cols], layout).alias("_bucket")
+                )
+                .count()
+                .collect()
+            )
+            touched = [r["_bucket"] for r in bucket_counts]
+            if not touched:
+                return 0
+            batch_rows = sum(r["count"] for r in bucket_counts)
+            state_slice = self._read_buckets(table, touched)
         else:
-            # fully-emptied (or never-seeded) table: only the sidecar is left
-            state_slice = self._empty(table)
-        batch_rows = sum(r["count"] for r in bucket_counts)
+            batch_rows, touched = events.count(), None
+            layout = self._hash_layout(batch_rows)
+            state_slice = self.spark.createDataFrame([], events.schema["after"].dataType)
         new_slice = apply_cdc(
             state_slice, events, pk_cols, missing_update="upsert",
             broadcast_batch=batch_rows <= BROADCAST_THRESHOLD,
         )
-        self._commit(table, new_slice, pk_cols, layout, touched)
-        return len(touched)
+        return self._commit(table, new_slice, pk_cols, layout, touched)

@@ -17,7 +17,9 @@ from etl_consumer_spark import functions as EF
 from etl_consumer_spark.operators.routing import passthrough_query
 from etl_consumer_spark.schemas import DDL_ENVELOPE_SCHEMA, envelope_schema
 # re-exported: the wire binding and its logical type names
-from etl_consumer_spark.schemas import DATE, DECIMAL, MICROTIME, TIMESTAMP, ZONEDTS, WireField  # noqa: F401
+from etl_consumer_spark.schemas import (  # noqa: F401
+    DATE, DECIMAL, MICROTIME, MICROTIMESTAMP, TIMESTAMP, ZONEDTS, WireField,
+)
 
 
 def parse_dml_envelope(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -49,6 +51,8 @@ def bind_decoder(field: WireField, raw: Column, *, with_timezone: bool = False, 
         return EF.epoch_day_to_date(raw.cast("long"))
     if field.logical == TIMESTAMP:
         return EF.epoch_ms_to_timestamp(raw.cast("long"), with_timezone=with_timezone, tz_hours=tz_hours)
+    if field.logical == MICROTIMESTAMP:
+        return EF.epoch_micros_to_timestamp(raw.cast("long"), with_timezone=with_timezone, tz_hours=tz_hours)
     if field.logical == MICROTIME:
         return EF.micros_to_time(raw.cast("long"))
     if field.logical == ZONEDTS:

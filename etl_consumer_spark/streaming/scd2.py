@@ -20,10 +20,12 @@ rewrite identical values, and replayed closings find no remaining current
 row (min-valid_from guard), so a crash between store commit and
 checkpoint commit converges to the same history.
 
-Scale shape: the history store is range-bucketed on the BUSINESS KEY
-(single-size range layout), so step 2 reads each touched key's version
-chain from exactly one bucket directory (``read_leading_range`` — bucket
-list pruned, O(touched buckets) I/O, never a history scan), and the
+Scale shape: ``seed`` creates the history with a range layout on the
+leading BUSINESS KEY column (the store fixes a table's layout at its first
+commit), so step 2 reads each touched key's version chain from exactly one
+bucket directory (the store's keyed read, ``read_keys``, with the business
+key columns: a leading prefix of the history pk (*keys, valid_from) —
+bucket list pruned, O(touched buckets) I/O, never a history scan), and the
 staged upsert rewrites only touched buckets. Per-batch cost is
 proportional to the batch, not the history.
 """
@@ -125,14 +127,8 @@ class SCD2StreamMaintainer:
             F.lit(True).alias("is_current"),
         )
         self.store.init(
-            self.table,
-            hist,
-            self.pk,
-            layout={
-                "bucket_mode": "range",
-                "range_size": self.range_size,
-                "n_buckets": 64,
-            },
+            self.table, hist, self.pk,
+            layout={"bucket_mode": "range", "range_size": self.range_size},
         )
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -168,12 +164,10 @@ class SCD2StreamMaintainer:
 
         # touched keys and closing timestamps come from ALL events (a
         # delete-only batch must still close its key's current row); keys
-        # stay DISTRIBUTED — only the distinct bucket ids (at most
-        # n_buckets values) reach the driver inside read_leading_range
-        cur = (
-            self.store.read_leading_range(
-                self.table, events.select(self.keys[0])
-            ).filter(F.col("is_current"))
+        # stay DISTRIBUTED — only the distinct bucket ids reach the driver
+        # inside read_keys
+        cur = self.store.read_keys(self.table, events.select(*self.keys)).filter(
+            F.col("is_current")
         )
         mins = events.groupBy(*self.keys).agg(
             F.min("_ts").alias("_new_from")

@@ -103,6 +103,19 @@ def test_epoch_ms_to_timestamp(spark):
         assert r["t7"] == expect - dt.timedelta(hours=7)  # main.go:271
 
 
+def test_epoch_micros_to_timestamp(spark):
+    us = [0, 1587202401764123, -1_000_001, 4102444800000000]
+    df = spark.createDataFrame([(u,) for u in us], "u long")
+    out = df.select(
+        EF.epoch_micros_to_timestamp("u").alias("t"),
+        EF.epoch_micros_to_timestamp("u", with_timezone=True).alias("t7"),
+    ).collect()
+    for u, r in zip(us, out):
+        expect = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=u)
+        assert r["t"] == expect
+        assert r["t7"] == expect - dt.timedelta(hours=7)  # F3's shift
+
+
 def test_micros_to_time_unpadded(spark):
     cases = {0: "0:0:0", 3661000000: "1:1:1", 86399999999: "23:59:59", 45296789012: "12:34:56"}
     df = spark.createDataFrame([(m,) for m in cases], "m long")

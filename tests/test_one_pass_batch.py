@@ -11,6 +11,7 @@ from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateSt
 from etl_consumer_spark.sources.envelope import WireField
 from etl_consumer_spark.sources.kafka import TRANSPORT_SCHEMA, file_envelope_stream
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
+from tests.test_partitioned_state import hash_layout
 
 SERVER, DB, TABLE = "srv", "shop", "orders"
 TOPIC = f"{SERVER}.{DB}.{TABLE}"
@@ -37,8 +38,9 @@ def transport(spark, msgs):
 def make_pipe(spark, tmp_path):
     cfg = Config()
     cfg.server, cfg.db_name, cfg.tables = SERVER, DB, [TABLE]
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"), n_buckets=2)
-    store.init(TABLE, spark.createDataFrame([(1, 1.0)], "id long, amount double"), ["id"])
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    store.init(TABLE, spark.createDataFrame([(1, 1.0)], "id long, amount double"), ["id"],
+               layout=hash_layout(2))
     return CDCPipeline(
         spark, cfg, [TableSpec(TABLE, [WireField("id", "int64"), WireField("amount", "float64")], ["id"])],
         store,

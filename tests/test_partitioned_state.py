@@ -12,6 +12,14 @@ from pyspark.sql import Row
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 
 
+def hash_layout(n_buckets: int) -> dict:
+    return {"bucket_mode": "hash", "n_buckets": n_buckets}
+
+
+def range_layout(range_size: int) -> dict:
+    return {"bucket_mode": "range", "range_size": range_size}
+
+
 def ev_rows(spark, rows):
     return spark.createDataFrame(
         rows,
@@ -20,9 +28,9 @@ def ev_rows(spark, rows):
 
 
 def test_partitioned_upsert_matrix(spark, tmp_path):
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=8)
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     state = spark.createDataFrame([(i, i * 10) for i in range(1, 9)], "id long, v long")
-    store.init("t", state, ["id"])
+    store.init("t", state, ["id"], layout=hash_layout(8))
     events = ev_rows(
         spark,
         [
@@ -39,9 +47,9 @@ def test_partitioned_upsert_matrix(spark, tmp_path):
 
 
 def test_partitioned_untouched_buckets_not_rewritten(spark, tmp_path):
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=16)
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     state = spark.createDataFrame([(i, i) for i in range(200)], "id long, v long")
-    store.init("t", state, ["id"])
+    store.init("t", state, ["id"], layout=hash_layout(16))
     mtimes_before = {
         d: os.path.getmtime(os.path.join(str(tmp_path), "t", d))
         for d in os.listdir(str(tmp_path / "t"))
@@ -60,27 +68,24 @@ def test_partitioned_untouched_buckets_not_rewritten(spark, tmp_path):
 
 
 def test_partitioned_delete_empties_bucket(spark, tmp_path):
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=4)
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     state = spark.createDataFrame([(1, 10)], "id long, v long")
-    store.init("t", state, ["id"])
+    store.init("t", state, ["id"], layout=hash_layout(4))
     events = ev_rows(spark, [(Row(id=1, v=10), None, 1, 0)])
     store.upsert("t", events, ["id"])
     assert store.read("t").count() == 0
 
 
 def test_evolve_preserves_persisted_layout(spark, tmp_path):
-    """evolve() must keep the table's persisted bucket layout even when the
-    acting store instance was constructed with different settings."""
+    """evolve() must keep the table's persisted bucket layout, also when
+    another store instance than the one that created the table evolves it."""
     import json
 
-    from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-
-    writer = PartitionedParquetStateStore(
-        spark, str(tmp_path), bucket_mode="range", range_size=10
-    )
-    writer.init("t", spark.createDataFrame([(15, "a")], "id long, v string"), ["id"])
-    # a differently-configured instance evolves the same table
-    other = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=4)
+    writer = PartitionedParquetStateStore(spark, str(tmp_path))
+    writer.init("t", spark.createDataFrame([(15, "a")], "id long, v string"), ["id"],
+                layout=range_layout(10))
+    # another instance evolves the same table
+    other = PartitionedParquetStateStore(spark, str(tmp_path))
     other.evolve("t", "ALTER TABLE t ADD COLUMNS (extra INT)")
     with open(f"{tmp_path}/t/_layout.json") as fh:
         layout = json.loads(fh.read())
@@ -100,9 +105,8 @@ class Killed(BaseException):
 def test_killed_evolve_keeps_table_layout_and_unique_keys(spark, tmp_path, point):
     """Kill an ADD COLUMN evolve after its staged rewrite (before the
     manifest publish) or right after the publish (before any sidecar or
-    bucket moves). A fresh store with default settings must still see the
-    table, bucket it with the persisted layout (8 buckets, not the
-    constructor's fallback of 64), keep every pk unique across an update,
+    bucket moves). A fresh store must still see the table, bucket it with
+    the persisted layout (8 buckets), keep every pk unique across an update,
     and find the evolve rolled back or forward — never a half-written
     table or a sibling copy of it."""
     import json
@@ -146,31 +150,25 @@ def test_killed_evolve_keeps_table_layout_and_unique_keys(spark, tmp_path, point
 def test_read_keys_pruned_lookup(spark, tmp_path):
     """read_keys returns exactly the requested rows and its plan prunes to
     the keys' bucket partitions."""
-    from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-
-    store = PartitionedParquetStateStore(
-        spark, str(tmp_path), bucket_mode="range", range_size=10
-    )
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     seed = spark.createDataFrame([(i, f"v{i}") for i in range(1, 101)], "id long, v string")
-    store.init("t", seed, ["id"])
-    out = store.read_keys("t", [15, 16, 55])
+    store.init("t", seed, ["id"], layout=range_layout(10))
+    out = store.read_keys("t", spark.createDataFrame([(15,), (16,), (55,)], "id long"))
     rows = {r["id"]: r["v"] for r in out.collect()}
     assert rows == {15: "v15", 16: "v16", 55: "v55"}
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
-    assert store.read_keys("t", []).count() == 0
+    assert store.read_keys("t", spark.createDataFrame([], "id long")).count() == 0
 
 
 def test_read_keys_composite_pk(spark, tmp_path):
-    from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=8)
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     seed = spark.createDataFrame(
         [(i, j, i * 100 + j) for i in range(10) for j in range(5)],
         "a long, b long, v long",
     )
-    store.init("t", seed, ["a", "b"])
-    out = store.read_keys("t", [(3, 1), (7, 4)])
+    store.init("t", seed, ["a", "b"], layout=hash_layout(8))
+    out = store.read_keys("t", spark.createDataFrame([(3, 1), (7, 4)], "a long, b long"))
     assert {(r["a"], r["b"], r["v"]) for r in out.collect()} == {(3, 1, 301), (7, 4, 704)}
 
 
@@ -187,10 +185,10 @@ def test_two_writers_serialized_disjoint_buckets(spark, tmp_path):
     """SERIALIZED batches from two distinct store instances are safe in any
     bucket pattern: the persisted _layout.json sidecar makes both agree on
     the bucketing, so each upsert is an independent atomic commit."""
-    a = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=8)
-    b = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=8)
+    a = PartitionedParquetStateStore(spark, str(tmp_path))
+    b = PartitionedParquetStateStore(spark, str(tmp_path))
     state = spark.createDataFrame([(i, i * 10) for i in range(1, 9)], "id long, v long")
-    a.init("t", state, ["id"])
+    a.init("t", state, ["id"], layout=hash_layout(8))
     a.upsert("t", ev_rows(spark, [(None, Row(id=100, v=1), 1, 0)]), ["id"])
     b.upsert("t", ev_rows(spark, [(None, Row(id=200, v=2), 2, 0)]), ["id"])
     got = {(r["id"], r["v"]) for r in a.read("t").collect()}
@@ -200,10 +198,10 @@ def test_two_writers_serialized_disjoint_buckets(spark, tmp_path):
 def _interleave(spark, tmp_path, ids_a, ids_b):
     """Writer A stages its merge; before A publishes its manifest, writer B
     runs a FULL upsert on the same table; then A resumes."""
-    a = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=8)
-    b = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=8)
+    a = PartitionedParquetStateStore(spark, str(tmp_path))
+    b = PartitionedParquetStateStore(spark, str(tmp_path))
     state = spark.createDataFrame([(i, i * 10) for i in range(1, 9)], "id long, v long")
-    a.init("t", state, ["id"])
+    a.init("t", state, ["id"], layout=hash_layout(8))
     batch_a = ev_rows(spark, [(None, Row(id=i, v=1), i, 0) for i in ids_a])
     batch_b = ev_rows(spark, [(None, Row(id=i, v=2), i, 0) for i in ids_b])
 
@@ -263,10 +261,10 @@ def test_two_pipelines_partitioned_store_interleave_fails_loud_retry_converges(
     server, db, tbl = "dbserver2", "batch", "batch_seq"
     topic = f"{server}.{db}.{tbl}"
     store_root = str(tmp_path / "state")
-    store_a = PartitionedParquetStateStore(spark, store_root, n_buckets=4)
-    store_b = PartitionedParquetStateStore(spark, store_root, n_buckets=4)
+    store_a = PartitionedParquetStateStore(spark, store_root)
+    store_b = PartitionedParquetStateStore(spark, store_root)
     store_a.init(
-        tbl, spark.createDataFrame([(0, 0)], "id long, seq long"), ["id"]
+        tbl, spark.createDataFrame([(0, 0)], "id long, seq long"), ["id"], layout=hash_layout(4)
     )
 
     def envelope(id_):
@@ -383,3 +381,80 @@ def test_uri_base_path_rejected_before_any_write(spark, tmp_path, scheme):
         PartitionedParquetStateStore(spark, path)
     assert path in str(exc.value)
     assert os.listdir(tmp_path) == []
+
+
+def test_int_pk_update_with_long_key_keeps_one_row_per_id(spark, tmp_path):
+    """A decoded key is a long whatever the pk column's type. Bucketing it
+    uncast sends an update of an INT pk to another bucket than the stored
+    row, and writing it uncast puts an INT64 file into an INT32 table, which
+    the next read rejects."""
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    store.init("t", spark.createDataFrame([(i, i * 10) for i in range(40)], "id int, v long"),
+               ["id"])
+    store.upsert("t", ev_rows(spark, [(Row(id=5, v=50), Row(id=5, v=51), 1, 0)]), ["id"])
+    state = store.read("t")
+    assert dict(state.dtypes)["id"] == "int"
+    rows = state.collect()
+    assert len(rows) == 40 and len({r["id"] for r in rows}) == 40
+    assert [r["v"] for r in rows if r["id"] == 5] == [51]
+
+
+def test_first_upsert_creates_table_with_sidecars_in_its_manifest(spark, tmp_path):
+    """An upsert into a table the store has never committed creates it
+    through the same commit: its manifest carries the schema (the after
+    image's), pk and default hash layout sidecars beside the staged rows,
+    so a kill after the publish rolls the whole table forward."""
+    import json
+
+    class Killed(BaseException):
+        pass
+
+    def kill(*_):
+        raise Killed()
+
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    store._apply_commit = kill
+    events = ev_rows(spark, [
+        (None, Row(id=1, v=10), 1, 0),
+        (None, Row(id=2, v=20), 2, 0),
+        (Row(id=1, v=10), Row(id=1, v=11), 3, 0),
+        (Row(id=2, v=20), None, 4, 0),
+    ])
+    with pytest.raises(Killed):
+        store.upsert("t", events, ["id"])
+    with open(f"{tmp_path}/t/_commit.json") as fh:
+        manifest = json.loads(fh.read())
+    assert set(manifest["sidecars"]) == {"_schema.json", "_pk.json", "_layout.json"}
+    assert json.loads(manifest["sidecars"]["_layout.json"]) == hash_layout(8)
+    assert manifest["surviving"] and os.path.isdir(f"{tmp_path}/t/_staging")
+
+    fresh = PartitionedParquetStateStore(spark, str(tmp_path))
+    assert fresh.exists("t") and fresh._pk_cols("t") == ["id"]
+    assert fresh.read("t").dtypes == [("id", "bigint"), ("v", "bigint")]
+    assert [tuple(r) for r in fresh.read("t").collect()] == [(1, 11)]
+    assert fresh.upsert("t", ev_rows(spark, [(None, Row(id=3, v=30), 5, 0)]), ["id"]) == 1
+    assert {tuple(r) for r in fresh.read("t").collect()} == {(1, 11), (3, 30)}
+
+
+@pytest.mark.parametrize("layout,columns", [
+    (hash_layout(8), "a long"),             # a partial key under hash
+    (range_layout(10), "b long"),           # not a pk prefix
+    (range_layout(10), "b long, a long"),   # the pk out of order
+    (hash_layout(8), "a long, b long, v long"),  # wider than the pk
+])
+def test_read_keys_rejects_keys_that_do_not_fix_the_bucket(spark, tmp_path, layout, columns):
+    """Key columns that are not the pk prefix fixing the bucket raise
+    ValueError before any Spark job runs."""
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    seed = spark.createDataFrame([(1, 2, 3)], "a long, b long, v long")
+    store.init("t", seed, ["a", "b"], layout=layout)
+    keys = spark.createDataFrame([tuple(range(len(columns.split(","))))], columns)
+    sc = spark.sparkContext
+    sc.setJobGroup("read_keys_probe", "read_keys input check")
+    try:
+        with pytest.raises(ValueError, match="not a leading prefix"):
+            store.read_keys("t", keys)
+        assert list(sc.statusTracker().getJobIdsForGroup("read_keys_probe")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

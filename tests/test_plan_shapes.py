@@ -223,9 +223,15 @@ def test_kmeans_assignment_is_map_only(spark):
     assert "Join" not in plan, "assignment must be map-only over literals"
 
 
+def _partition_filters(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+
+
 def test_scd2_stream_read_prunes_buckets(spark, tmp_path):
-    """read_leading_range must plan a partition-pruned scan: the _bucket
-    partition filter has to reach the parquet read."""
+    """The SCD2 history read — read_keys with only the leading pk column of
+    a range layout — must plan a partition-pruned scan: the key's bucket
+    (5 div 4 = 1) has to reach the parquet read's PartitionFilters."""
     from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 
     store = PartitionedParquetStateStore(spark, str(tmp_path / "pp"))
@@ -233,13 +239,35 @@ def test_scd2_stream_read_prunes_buckets(spark, tmp_path):
         [(k, v, k) for k in range(40) for v in range(2)],
         "k: long, v: long, p: long",
     )
-    store.init(
-        "t", df, ["k", "v"],
-        layout={"bucket_mode": "range", "range_size": 4, "n_buckets": 64},
+    store.init("t", df, ["k", "v"], layout={"bucket_mode": "range", "range_size": 4})
+    out = store.read_keys("t", spark.createDataFrame([(5,)], "k: long"))
+    filters = _partition_filters(out)
+    assert "_bucket" in filters and "= 1)" in filters, filters
+    assert sorted(r.v for r in out.collect()) == [0, 1]
+
+
+def test_read_keys_full_hash_key_prunes_buckets(spark, tmp_path):
+    """Under a hash layout, read_keys with the full pk plans a scan whose
+    PartitionFilters carry exactly the keys' bucket list."""
+    from pyspark.sql import functions as F
+
+    from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
+
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "ph"))
+    df = spark.createDataFrame(
+        [(k, v, k) for k in range(40) for v in range(2)],
+        "k: int, v: long, p: long",
     )
-    out = store.read_leading_range("t", spark.createDataFrame([(5,)], "k: long"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "_bucket" in plan
+    store.init("t", df, ["k", "v"], layout={"bucket_mode": "hash", "n_buckets": 16})
+    # long-typed keys of an INT pk column: bucketed as the stored ints
+    keys = spark.createDataFrame([(5, 1), (33, 0)], "k: long, v: long")
+    out = store.read_keys("t", keys)
+    want = sorted({r.b for r in df.filter("(k = 5 AND v = 1) OR (k = 33 AND v = 0)").select(
+        F.pmod(F.hash("k", "v"), F.lit(16)).alias("b")).collect()})
+    assert len(want) == 2
+    filters = _partition_filters(out)
+    assert "_bucket" in filters and f"IN ({want[0]},{want[1]})" in filters, (want, filters)
+    assert sorted((r.k, r.v) for r in out.collect()) == [(5, 1), (33, 0)]
 
 
 def test_grouping_sets_single_expand_single_exchange(spark):

@@ -20,6 +20,7 @@ from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateSt
 from etl_consumer_spark.sources.envelope import WireField
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
 from etl_consumer_spark.streaming.scd2 import SCD2StreamMaintainer
+from tests.test_partitioned_state import hash_layout
 
 
 def _events(spark, rows):
@@ -63,9 +64,9 @@ def test_upsert_staged_write_one_file_per_bucket_under_clamp(spark, tmp_path):
     bucket in exactly ONE parquet file — the clamp bounds tasks, not the
     one-file-per-bucket layout (hash clustering keeps a bucket whole)."""
     n_buckets = 64  # far above local parallelism -> the clamp binds
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"), n_buckets=n_buckets)
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"))
     seed = spark.createDataFrame([(i, i) for i in range(2000)], "k long, v long")
-    store.init("t", seed, ["k"])
+    store.init("t", seed, ["k"], layout=hash_layout(n_buckets))
     img = F.struct(F.col("k"), (F.col("v") + 1).alias("v"))
     events = seed.select(
         img.alias("before"),
@@ -124,8 +125,8 @@ def test_rename_does_not_mutate_shared_wirefields(spark, tmp_path):
     WireField objects — two pipelines built from one module-level field
     list must not see each other's renames (the round-13 ordering bug)."""
     shared = [WireField("id", "int64"), WireField("v", "int64")]
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"), n_buckets=2)
-    store.init("t", spark.createDataFrame([(1, 2)], "id long, v long"), ["id"])
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"))
+    store.init("t", spark.createDataFrame([(1, 2)], "id long, v long"), ["id"], layout=hash_layout(2))
     from etl_consumer_spark.config import Config
 
     cfg = Config()

@@ -21,6 +21,7 @@ from etl_consumer_spark.sources.envelope import WireField
 from etl_consumer_spark.sources.kafka import file_envelope_stream
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
 
+from tests.test_partitioned_state import hash_layout, range_layout
 from tests.test_streaming import (
     DB,
     FIELDS,
@@ -48,11 +49,12 @@ def test_ddl_then_dml_rebinds_decoders(spark, tmp_path):
     state schema, DML for that table must decode with the REFRESHED field
     list — previously every post-DDL DML batch dead-lettered wholesale."""
     cfg = _cfg()
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"), n_buckets=4)
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
     store.init(
         "batch_seq",
         spark.createDataFrame([(1, 10, 0, 1.0, None)], STATE_DDL),
         PK,
+        layout=hash_layout(4),
     )
     spec = TableSpec("batch_seq", list(FIELDS), list(PK))
     pipe = CDCPipeline(
@@ -130,8 +132,8 @@ def test_partitioned_store_matches_apply_cdc(spark, tmp_path):
         F.lit(1).cast("long").alias("ts_ms"),
     )
 
-    pstore = PartitionedParquetStateStore(spark, str(tmp_path / "p"), n_buckets=8)
-    pstore.init("t", seed, ["id"])
+    pstore = PartitionedParquetStateStore(spark, str(tmp_path / "p"))
+    pstore.init("t", seed, ["id"], layout=hash_layout(8))
     pstore.upsert("t", ev, ["id"])
 
     a = {tuple(r) for r in apply_cdc(seed, ev, ["id"]).collect()}
@@ -143,12 +145,11 @@ def test_partitioned_store_matches_apply_cdc(spark, tmp_path):
 def test_untouched_buckets_not_rewritten(spark, tmp_path):
     """Partial-rewrite guarantee: a batch touching one bucket leaves every
     other bucket's files byte-identical (same content, same mtime)."""
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=8,
-                                         bucket_mode="range", range_size=10)
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     seed = spark.createDataFrame(
         [(i, i % 7, 0, float(i), None) for i in range(1, 81)], STATE_DDL
     )
-    store.init("t", seed, ["id"])
+    store.init("t", seed, ["id"], layout=range_layout(10))
 
     def snapshot():
         out = {}
@@ -195,8 +196,9 @@ def test_partitioned_store_survives_full_emptying(spark, tmp_path):
     parquet-less directory."""
     from pyspark.sql import functions as F
 
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=4)
-    store.init("t", spark.createDataFrame([(1, 0, 0, 1.0, None)], STATE_DDL), ["id"])
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    store.init("t", spark.createDataFrame([(1, 0, 0, 1.0, None)], STATE_DDL), ["id"],
+               layout=hash_layout(4))
     img = "struct<id:long,province_id:long,seq:long,amount:double,created_day:date>"
 
     def ev(before_id, after_id):
@@ -224,8 +226,8 @@ def test_passthrough_flood_is_bounded(spark, tmp_path):
     the overflow dead-letters in K2 shape."""
     cfg = _cfg()
     cfg.passthrough_limit = 2
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"), n_buckets=4)
-    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK)
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK, layout=hash_layout(4))
     executed = []
     pipe = CDCPipeline(
         spark, cfg, [TableSpec("batch_seq", FIELDS, PK)], store,
@@ -256,8 +258,8 @@ def test_passthrough_flood_is_bounded(spark, tmp_path):
 def test_results_ring_buffer(spark, tmp_path):
     cfg = _cfg()
     cfg.max_results = 3
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"), n_buckets=2)
-    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK)
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"))
+    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK, layout=hash_layout(2))
     pipe = CDCPipeline(spark, cfg, [TableSpec("batch_seq", FIELDS, PK)], store)
     empty = spark.createDataFrame(
         [], "topic string, value binary, headers array<struct<key:string,value:binary>>, timestamp timestamp"
@@ -272,11 +274,9 @@ def test_range_bucket_exact_above_2_53(spark, tmp_path):
     """Range buckets must use integer division: double round-trips drift the
     boundary for pks above 2^53."""
     big = (1 << 55) + 3  # not representable exactly as double
-    store = PartitionedParquetStateStore(
-        spark, str(tmp_path), bucket_mode="range", range_size=10
-    )
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     seed = spark.createDataFrame([(big, 0, 0, 1.0, None)], STATE_DDL)
-    store.init("t", seed, ["id"])
+    store.init("t", seed, ["id"], layout=range_layout(10))
     expected = big // 10
     assert os.path.isdir(str(tmp_path / "t" / f"_bucket={expected}"))
     assert store.read("t").collect()[0]["id"] == big
@@ -313,8 +313,8 @@ def test_upsert_backfill_takes_sort_merge_path(spark, tmp_path, monkeypatch):
 def test_metrics_sink_rows(spark, tmp_path):
     """metrics_path appends one queryable row per applied table per batch."""
     cfg = _cfg()
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"), n_buckets=2)
-    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK)
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"))
+    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK, layout=hash_layout(2))
     pipe = CDCPipeline(
         spark, cfg, [TableSpec("batch_seq", FIELDS, PK)], store,
         metrics_path=str(tmp_path / "metrics"),

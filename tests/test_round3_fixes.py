@@ -1,6 +1,6 @@
 """Round-3 hardening tests (VERDICT/ADVICE follow-ups): floor-preserving
 range bucketing for negative keys, pk-order validation in read_keys,
-composite-pk range layout with pruned lookups, connected-components
+connected-components
 non-convergence detection plus the large-star/small-star scale path,
 bloom k>4 position derivation, and the plan-bound passthrough cap with
 overflow retention when no dead-letter sink is configured.
@@ -25,6 +25,7 @@ from etl_consumer_spark.extensions.sketches import (
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
 
+from tests.test_partitioned_state import hash_layout, range_layout
 from tests.test_round2_pipeline import STATE_DDL, _cfg
 from tests.test_streaming import (
     DB,
@@ -46,30 +47,29 @@ def test_range_bucket_floor_division_negative_keys(spark, tmp_path):
     """Range bucket ids must use FLOOR division (SQL div truncates toward
     zero): -5 div 10 would be 0 (colliding with key 5's bucket and breaking
     tables persisted by floor-based layouts); floor(-5/10) = -1."""
-    store = PartitionedParquetStateStore(
-        spark, str(tmp_path), bucket_mode="range", range_size=10
-    )
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     seed = spark.createDataFrame(
         [(-15, "a"), (-5, "b"), (5, "c"), (15, "d")], "id long, v string"
     )
-    store.init("t", seed, ["id"])
+    store.init("t", seed, ["id"], layout=range_layout(10))
     dirs = {d for d in os.listdir(str(tmp_path / "t")) if d.startswith("_bucket=")}
     assert dirs == {"_bucket=-2", "_bucket=-1", "_bucket=0", "_bucket=1"}
     # lookups agree with the persisted layout
-    out = {r["id"]: r["v"] for r in store.read_keys("t", [-15, -5, 5]).collect()}
+    keys = spark.createDataFrame([(-15,), (-5,), (5,)], "id long")
+    out = {r["id"]: r["v"] for r in store.read_keys("t", keys).collect()}
     assert out == {-15: "a", -5: "b", 5: "c"}
     # exact-multiple negatives have zero remainder: -20/10 = -2 exactly
-    store.init("t2", spark.createDataFrame([(-20, "x")], "id long, v string"), ["id"])
+    store.init("t2", spark.createDataFrame([(-20, "x")], "id long, v string"), ["id"],
+               layout=range_layout(10))
     assert os.path.isdir(str(tmp_path / "t2" / "_bucket=-2"))
 
 
 def test_range_bucket_upsert_negative_keys(spark, tmp_path):
     from pyspark.sql import Row
 
-    store = PartitionedParquetStateStore(
-        spark, str(tmp_path), bucket_mode="range", range_size=10
-    )
-    store.init("t", spark.createDataFrame([(-5, 1)], "id long, v long"), ["id"])
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    store.init("t", spark.createDataFrame([(-5, 1)], "id long, v long"), ["id"],
+               layout=range_layout(10))
     events = spark.createDataFrame(
         [(Row(id=-5, v=1), Row(id=-5, v=2), 1, 0)],
         "before struct<id:long,v:long>, after struct<id:long,v:long>, pos long, ts_ms long",
@@ -84,70 +84,22 @@ def test_range_bucket_upsert_negative_keys(spark, tmp_path):
 
 
 def test_read_keys_rejects_reordered_pk(spark, tmp_path):
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=8)
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     seed = spark.createDataFrame([(1, 2, 3)], "a long, b long, v long")
-    store.init("t", seed, ["a", "b"])
-    with pytest.raises(ValueError, match="do not match persisted pk"):
-        store.read_keys("t", [(2, 1)], pk_cols=["b", "a"])
+    store.init("t", seed, ["a", "b"], layout=hash_layout(8))
+    with pytest.raises(ValueError, match="not a leading prefix of its pk"):
+        store.read_keys("t", spark.createDataFrame([(2, 1)], "b long, a long"))
     # matching order still works
-    assert store.read_keys("t", [(1, 2)], pk_cols=["a", "b"]).count() == 1
-
-
-# -- composite-pk range layout (VERDICT next #9) ----------------------------
-
-
-def test_composite_pk_range_mode_pruned_lookup(spark, tmp_path):
-    store = PartitionedParquetStateStore(
-        spark, str(tmp_path), bucket_mode="range", range_sizes=[10, 100]
-    )
-    seed = spark.createDataFrame(
-        [(i, j, i * 1000 + j) for i in range(25) for j in (50, 150)],
-        "a long, b long, v long",
-    )
-    store.init("t", seed, ["a", "b"])
-    layout = json.loads(open(f"{tmp_path}/t/_layout.json").read())
-    assert layout["range_sizes"] == [10, 100]
-    # composite bucket value concatenates per-column range ids
-    assert os.path.isdir(str(tmp_path / "t" / "_bucket=1_0"))   # a=15,b=50
-    assert os.path.isdir(str(tmp_path / "t" / "_bucket=1_1"))   # a=15,b=150
-    out = store.read_keys("t", [(15, 50), (3, 150)])
-    assert {(r["a"], r["b"], r["v"]) for r in out.collect()} == {
-        (15, 50, 15050),
-        (3, 150, 3150),
-    }
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-
-def test_composite_pk_range_mode_upsert(spark, tmp_path):
-    from pyspark.sql import Row
-
-    store = PartitionedParquetStateStore(
-        spark, str(tmp_path), bucket_mode="range", range_sizes=[10, 10]
-    )
-    store.init(
-        "t", spark.createDataFrame([(15, 25, 1)], "a long, b long, v long"), ["a", "b"]
-    )
-    events = spark.createDataFrame(
-        [
-            (Row(a=15, b=25, v=1), Row(a=15, b=25, v=2), 1, 0),     # update
-            (None, Row(a=33, b=7, v=9), 2, 0),                      # insert
-        ],
-        "before struct<a:long,b:long,v:long>, after struct<a:long,b:long,v:long>, "
-        "pos long, ts_ms long",
-    )
-    store.upsert("t", events, ["a", "b"])
-    got = {(r["a"], r["b"], r["v"]) for r in store.read("t").collect()}
-    assert got == {(15, 25, 2), (33, 7, 9)}
+    assert store.read_keys("t", spark.createDataFrame([(1, 2)], "a long, b long")).count() == 1
 
 
 # -- atomic staged commit: crash injection (VERDICT next #2) ----------------
 
 
 def _seeded_store(spark, tmp_path, n=200):
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=16)
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
     seed = spark.createDataFrame([(i, i) for i in range(n)], "id long, v long")
-    store.init("t", seed, ["id"])
+    store.init("t", seed, ["id"], layout=hash_layout(16))
     return store, {(i, i) for i in range(n)}
 
 
@@ -184,7 +136,7 @@ def test_crash_between_bucket_swaps_rolls_forward(spark, tmp_path, monkeypatch):
 
     # disk is mid-swap now; a FRESH store instance must recover on open
     assert os.path.exists(str(tmp_path / "t" / "_commit.json"))
-    reopened = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=16)
+    reopened = PartitionedParquetStateStore(spark, str(tmp_path))
     got = {(r["id"], r["v"]) for r in reopened.read("t").collect()}
     assert got == post
     assert not os.path.exists(str(tmp_path / "t" / "_commit.json"))
@@ -207,7 +159,7 @@ def test_crash_before_manifest_rolls_back(spark, tmp_path, monkeypatch):
 
     assert os.path.isdir(str(tmp_path / "t" / "_staging"))
     assert not os.path.exists(str(tmp_path / "t" / "_commit.json"))
-    reopened = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=16)
+    reopened = PartitionedParquetStateStore(spark, str(tmp_path))
     got = {(r["id"], r["v"]) for r in reopened.read("t").collect()}
     assert got == pre
     assert not os.path.isdir(str(tmp_path / "t" / "_staging"))
@@ -218,8 +170,9 @@ def test_commit_handles_emptied_buckets(spark, tmp_path):
     commit (it writes no staging directory)."""
     from pyspark.sql import Row
 
-    store = PartitionedParquetStateStore(spark, str(tmp_path), n_buckets=4)
-    store.init("t", spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"), ["id"])
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    store.init("t", spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"), ["id"],
+               layout=hash_layout(4))
     events = spark.createDataFrame(
         [(Row(id=1, v=10), None, 1, 0)],
         "before struct<id:long,v:long>, after struct<id:long,v:long>, pos long, ts_ms long",
@@ -352,8 +305,8 @@ def test_passthrough_collect_is_plan_bounded(spark, tmp_path, monkeypatch):
     batch may ship more than limit+1 passthrough rows to the driver."""
     cfg = _cfg()
     cfg.passthrough_limit = 2
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"), n_buckets=4)
-    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK)
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"))
+    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK, layout=hash_layout(4))
     executed = []
     pipe = CDCPipeline(
         spark, cfg, [TableSpec("batch_seq", FIELDS, PK)], store,
@@ -388,8 +341,8 @@ def test_passthrough_overflow_retained_without_dead_letter_sink(spark, tmp_path)
     replayable in BatchResult instead of being silently dropped."""
     cfg = _cfg()
     cfg.passthrough_limit = 2
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"), n_buckets=4)
-    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK)
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "s"))
+    store.init("batch_seq", spark.createDataFrame([], STATE_DDL), PK, layout=hash_layout(4))
     executed = []
     pipe = CDCPipeline(
         spark, cfg, [TableSpec("batch_seq", FIELDS, PK)], store,

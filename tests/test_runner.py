@@ -164,3 +164,52 @@ def test_runner_max_files_per_trigger_env(spark, tmp_path, monkeypatch):
     assert len(epochs) >= 2, f"expected >=2 micro-batches, got {epochs}"
     state = pipe.store.read("batch_seq").collect()
     assert [(r["id"], r["province_id"], r["amount"]) for r in state] == [(7, 71, 77.00)]
+
+
+def test_runner_fresh_state_path_applies_the_stream(spark, tmp_path, monkeypatch):
+    """A fresh deployment: ``build_pipeline`` on an empty STATE_PATH and no
+    ``init`` call. Building touches no state; the first upsert creates the
+    table and later batches update and delete in it, so the state equals a
+    serial fold of the stream with nothing dead-lettered."""
+    specs_file = tmp_path / "specs.json"
+    specs_file.write_text(json.dumps(SPECS))
+    monkeypatch.setenv("TABLESPECS", str(specs_file))
+    monkeypatch.setenv("STATE_PATH", str(tmp_path / "state"))
+    monkeypatch.setenv("TRANSPORT", f"file:{tmp_path / 'transport'}")
+    monkeypatch.setenv("DEAD_LETTER_PATH", str(tmp_path / "dl"))
+    monkeypatch.setenv("SERVER", SERVER)
+    monkeypatch.setenv("DBNAME", DB)
+    monkeypatch.setenv("TABLE", "batch_seq")
+    monkeypatch.setenv("MAX_FILES_PER_TRIGGER", "1")
+
+    # (before, after, pos) with images as (id, seq, amount in cents)
+    batches = [
+        [(None, (i, 0, 100 * i), 10 + i) for i in range(1, 7)],
+        [((2, 0, 200), (2, 1, 222), 20), ((3, 0, 300), None, 21), (None, (9, 0, 900), 22)],
+        [((2, 1, 222), (2, 2, 333), 30), ((1, 0, 100), None, 31), (None, (3, 5, 999), 32)],
+    ]
+
+    def image(img):
+        return img and row(img[0], img[0] * 10, img[1], img[2], 18993)
+
+    fold = {}
+    for batch in batches:
+        make_transport(
+            spark,
+            [(TOPIC, envelope(image(b), image(a), pos=p)) for b, a, p in batch],
+            str(tmp_path / "transport"),
+        )
+        for b, a, _ in batch:
+            if a is None:
+                del fold[b[0]]
+            else:
+                fold[a[0]] = (a[1], a[2] / 100)
+
+    pipe, transport = build_pipeline(spark)
+    assert not (tmp_path / "state").exists()
+    q = pipe.start(transport, checkpoint_dir=str(tmp_path / "ck"), trigger_available_now=True)
+    q.awaitTermination(180)
+    assert len(pipe.results) >= 2
+    assert sum(res.dead_letters for res in pipe.results) == 0
+    state = {x["id"]: (x["seq"], x["amount"]) for x in pipe.store.read("batch_seq").collect()}
+    assert state == fold

@@ -13,10 +13,11 @@ from pyspark.sql import functions as F
 from etl_consumer_spark.config import Config
 from etl_consumer_spark.operators.ddl import translate_mysql_ddl
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
-from etl_consumer_spark.sources.envelope import TIMESTAMP, WireField
+from etl_consumer_spark.sources.envelope import MICROTIMESTAMP, TIMESTAMP, WireField
 from etl_consumer_spark.sources.kafka import TRANSPORT_SCHEMA
 from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
 from tests.test_decoders import py_encode
+from tests.test_partitioned_state import hash_layout
 
 SERVER, DB, TABLE = "srv", "shop", "orders"
 TOPIC = f"{SERVER}.{DB}.{TABLE}"
@@ -52,8 +53,9 @@ def keys_in_two_buckets(spark) -> tuple[int, int]:
 def make_pipe(spark, tmp_path, seeded: int, **kw):
     cfg = Config()
     cfg.server, cfg.db_name, cfg.tables = SERVER, DB, [TABLE]
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"), n_buckets=2)
-    store.init(TABLE, spark.createDataFrame([(seeded, 1.0)], "id long, amount double"), ["id"])
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    store.init(TABLE, spark.createDataFrame([(seeded, 1.0)], "id long, amount double"), ["id"],
+               layout=hash_layout(2))
     return CDCPipeline(spark, cfg, [TableSpec(TABLE, list(FIELDS), ["id"])], store,
                        dead_letter_path=str(tmp_path / "dead"),
                        republish_path=str(tmp_path / "republish"), **kw)
@@ -64,6 +66,10 @@ CASES = {
     "timestamp_is_zoned": (
         "ALTER TABLE `shop`.`orders` ADD COLUMN ts TIMESTAMP",
         {"ts": "2022-01-02T03:04:05Z"}, {"ts": "2022-01-02 10:04:05"},  # +TIMEZONE (7 h)
+    ),
+    "datetime6_is_microtimestamp": (
+        "ALTER TABLE `shop`.`orders` ADD COLUMN dt DATETIME(6)",
+        {"dt": 1641092645123456}, {"dt": "2022-01-02 03:04:05.123456"},
     ),
     "time_is_microtime": (
         "ALTER TABLE `shop`.`orders` ADD COLUMN tm TIME", {"tm": 3661000000}, {"tm": "1:1:1"},
@@ -149,7 +155,9 @@ def test_mysql_type_bindings():
 
     assert binding("DATETIME") == binding("DATETIME(3)") == ("TIMESTAMP", "int64", TIMESTAMP)
     # DATETIME(4)-(6) arrives as MicroTimestamp (microseconds), not Timestamp
-    assert binding("DATETIME(6)") is None
+    assert binding("DATETIME(6)") == binding("DATETIME(4)") == (
+        "TIMESTAMP", "int64", MICROTIMESTAMP
+    )
     assert binding("BOOLEAN") == binding("bool") == binding("TINYINT(1)") == (
         "BOOLEAN", "boolean", None
     )
@@ -157,6 +165,27 @@ def test_mysql_type_bindings():
     assert binding("INT COMMENT 'unsigned'") == ("INT", "int32", None)
     assert binding("NUMERIC(8)")[:2] == ("DECIMAL(8,0)", "bytes")
     assert binding("GEOMETRY") is None
+
+
+def test_pk_type_change_then_update(spark, tmp_path):
+    """MODIFY COLUMN makes the BIGINT pk an INT; the next update's decoded
+    key is still a long. It must land on the stored row's bucket and be
+    written as an INT, so the table reads back with one row per key."""
+    seeded, other = keys_in_two_buckets(spark)
+    pipe = make_pipe(spark, tmp_path, seeded)
+    first = pipe.process_batch(
+        transport(spark, [(SERVER, ddl("ALTER TABLE `shop`.`orders` MODIFY COLUMN id INT"))]), 0
+    )
+    assert first.ddl_applied == ["ALTER TABLE orders ALTER COLUMN id TYPE INT"]
+    update = json.loads(dml({"id": seeded, "amount": 9.5}, 10))
+    update["payload"].update(before={"id": seeded, "amount": 1.0}, op="u")
+    result = pipe.process_batch(transport(spark, [
+        (TOPIC, json.dumps(update)), (TOPIC, dml({"id": other, "amount": 2.5}, 11)),
+    ]), 1)
+    assert result.dead_letters == 0
+    state = pipe.store.read(TABLE)
+    assert dict(state.dtypes)["id"] == "int"
+    assert sorted(tuple(r) for r in state.collect()) == sorted([(seeded, 9.5), (other, 2.5)])
 
 
 def test_benchmark_ddl_fates(spark, tmp_path):

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from etl_consumer_spark.sinks.dead_letter import dead_letter_rows
 from etl_consumer_spark.sinks.republish import republish_frame
 from etl_consumer_spark.sinks.partitioned_state import PartitionedParquetStateStore
+from tests.test_partitioned_state import hash_layout
 
 
 def _headers(val: bytes | None):
@@ -61,8 +62,9 @@ def test_state_store_schema_evolution(spark, tmp_path):
 def test_state_store_pk_rename_follows_quoted_identifiers(spark, tmp_path):
     """A pk RENAME in backtick-quoted, db-qualified form moves the
     persisted pk with it, so later upserts bucket on the renamed column."""
-    store = PartitionedParquetStateStore(spark, str(tmp_path / "pk"), n_buckets=4)
-    store.init("t", spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"), ["id"])
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "pk"))
+    store.init("t", spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"), ["id"],
+               layout=hash_layout(4))
     store.evolve("t", "ALTER TABLE `db`.`t` RENAME COLUMN `id` TO `key`")
     assert store._pk_cols("t") == ["key"]
     events = spark.createDataFrame(

@@ -68,28 +68,25 @@ def test_single_batch_equals_batch_operator(spark, tmp_path):
     assert got == want
 
 
-def test_read_leading_range_prunes_and_filters(spark, tmp_path):
+def test_read_keys_leading_column_prunes_and_filters(spark, tmp_path):
     store = PartitionedParquetStateStore(spark, str(tmp_path / "s2"))
     df = spark.createDataFrame(
         [(k, v, k * 10 + v) for k in range(20) for v in range(2)],
         "k: long, v: long, payload: long",
     )
-    store.init(
-        "t", df, ["k", "v"],
-        layout={"bucket_mode": "range", "range_size": 4, "n_buckets": 64},
-    )
+    store.init("t", df, ["k", "v"], layout={"bucket_mode": "range", "range_size": 4})
     # the keys stay a DataFrame: never collected to the driver
     kdf = spark.createDataFrame([(3,), (17,)], "k: long")
-    got = sorted((r.k, r.v) for r in store.read_leading_range("t", kdf).collect())
+    got = sorted((r.k, r.v) for r in store.read_keys("t", kdf).collect())
     assert got == [(3, 0), (3, 1), (17, 0), (17, 1)]
 
 
-def test_read_leading_range_rejects_hash_layout(spark, tmp_path):
+def test_read_keys_leading_column_rejected_under_hash_layout(spark, tmp_path):
     store = PartitionedParquetStateStore(spark, str(tmp_path / "s3"))
     df = spark.createDataFrame([(1, 2, 3)], "k: long, v: long, p: long")
     store.init("t", df, ["k", "v"], layout={"bucket_mode": "hash", "n_buckets": 8})
-    with pytest.raises(ValueError, match="range layout"):
-        store.read_leading_range("t", spark.createDataFrame([(1,)], "k: long"))
+    with pytest.raises(ValueError, match="hash bucket"):
+        store.read_keys("t", spark.createDataFrame([(1,)], "k: long"))
 
 
 def _events_d(spark, rows):
