@@ -437,11 +437,11 @@ def test_first_upsert_creates_table_with_sidecars_in_its_manifest(spark, tmp_pat
 
 
 @pytest.mark.parametrize("layout,columns", [
-    (hash_layout(8), "a long"),             # a partial key under hash
-    (range_layout(10), "b long"),           # not a pk prefix
-    (range_layout(10), "b long, a long"),   # the pk out of order
-    (hash_layout(8), "a long, b long, v long"),  # wider than the pk
-])
+    (hash_layout(8), "a long"),
+    (range_layout(10), "b long"),
+    (range_layout(10), "b long, a long"),
+    (hash_layout(8), "a long, b long, v long"),
+], ids=["partial_key_under_hash", "not_a_prefix", "pk_out_of_order", "wider_than_pk"])
 def test_read_keys_rejects_keys_that_do_not_fix_the_bucket(spark, tmp_path, layout, columns):
     """Key columns that are not the pk prefix fixing the bucket raise
     ValueError before any Spark job runs."""
