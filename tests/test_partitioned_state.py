@@ -458,3 +458,11 @@ def test_read_keys_rejects_keys_that_do_not_fix_the_bucket(spark, tmp_path, layo
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_init_rejects_unknown_bucket_mode_before_writing(spark, tmp_path):
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="bucket_mode must be 'hash' or 'range'"):
+        store.init("t", spark.createDataFrame([(1, 2)], "id long, v long"), ["id"],
+                   layout={"bucket_mode": "ranged", "range_size": 10})
+    assert os.listdir(tmp_path) == []
