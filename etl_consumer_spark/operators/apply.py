@@ -19,8 +19,9 @@ Scale design: :func:`apply_cdc` broadcasts the compacted batch so state is
 only streamed, never shuffled (the batch side shuffles once for the LWW
 window — O(batch) network per batch, not O(state)); a full-outer
 sort-merge variant remains for backfills where the batch rivals state.
-State is never rewritten except for touched partitions when the sink
-supports partition overwrite.
+The pipeline's state store needs no merge in upsert mode: a key's outcome
+depends only on its latest event, so it appends the compacted images as a
+delta (``sinks/partitioned_state.py``) through :func:`image_column`.
 
 :func:`apply_cdc_sequential` is the *exact* per-key fold (insert→update→
 delete chains within one batch): seed+events hash-partitioned and sorted,
@@ -36,6 +37,7 @@ from typing import Iterable
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 OP_INSERT = "insert"
 OP_UPDATE = "update"
@@ -76,10 +78,14 @@ def compact_events(
     after_col: str = "after",
     pos_col: str = "pos",
     ts_col: str = "ts_ms",
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Project events to (pk..., _before, _after, _op) keeping only the last
     writer per key. Key is taken from the after image, falling back to the
-    before image (delete events have no after).
+    before image (delete events have no after). ``by`` names top-level
+    columns of ``events`` that are functions of the key (the state store's
+    ``_bucket``); they are grouped with it and kept in front, so an input
+    already hash-partitioned on them aggregates without a second shuffle.
 
     The per-key latest is a ``max(struct(pos, ts, before, after))``
     aggregation rather than a row_number window: same keep-the-latest
@@ -106,6 +112,7 @@ def compact_events(
         for k in pk_cols
     ]
     ev = events.select(
+        *by,
         *keys,
         F.struct(
             F.col(pos_col).alias("_pos"),
@@ -114,7 +121,8 @@ def compact_events(
             F.col(after_col).alias("_after"),
         ).alias("_evt"),
     )
-    latest = ev.groupBy(*pk_cols).agg(F.max("_evt").alias("_evt")).select(
+    latest = ev.groupBy(*by, *pk_cols).agg(F.max("_evt").alias("_evt")).select(
+        *by,
         *pk_cols,
         F.col("_evt._before").alias("_before"),
         F.col("_evt._after").alias("_after"),
@@ -122,6 +130,36 @@ def compact_events(
         F.col("_evt._ts").alias("_ts"),
     )
     return latest.withColumn("_op", classify_op(F.col("_before"), F.col("_after")))
+
+
+def image_column(latest: T.StructType, c: str, state_type: T.DataType, pk_cols: list[str]) -> Column:
+    """Column ``c`` of a compacted event's image (``latest`` is the schema
+    of :func:`compact_events`' output): the resolved key for a pk column,
+    else the after image's value, cast to the state column's type.
+
+    The state schema decides column types, pk columns included, so new
+    images never disagree with rows already stored (a decoded long key of
+    an INT pk would otherwise widen them; Catalyst drops a same-type cast).
+    One cast is refused: a decoded timestamp into an integral state column.
+    Spark would store whole epoch seconds, so a BIGINT column holding raw
+    MicroTimestamp micros (captured before that type was decoded) would
+    silently mix units. The ValueError comes while the plan is built,
+    before any job, so the pipeline's per-table boundary (K2) dead-letters
+    the slice and the state is left as it was."""
+    if c in pk_cols:
+        value, source = F.col(c), latest[c].dataType
+    else:
+        after = latest["_after"].dataType
+        value = F.col(f"_after.{c}")
+        source = after[c].dataType if c in after.names else None
+    if isinstance(source, (T.TimestampType, T.TimestampNTZType)) and isinstance(
+        state_type, T.IntegralType
+    ):
+        raise ValueError(
+            f"column {c!r}: a timestamp image does not cast to the integral state type "
+            f"{state_type.simpleString()} (whole seconds would replace the column's unit)"
+        )
+    return value.cast(state_type)
 
 
 def apply_cdc(
@@ -173,11 +211,7 @@ def apply_cdc(
     op = F.col("_op")
 
     def image(c: str) -> Column:
-        # the state schema decides column types, pk columns included, so a
-        # rewritten slice never disagrees with untouched rows (a decoded
-        # long key of an INT pk would otherwise widen the whole slice;
-        # Catalyst drops a same-type cast)
-        return (F.col(c) if c in pk_cols else F.col(f"_after.{c}")).cast(state.schema[c].dataType)
+        return image_column(latest.schema, c, state.schema[c].dataType, pk_cols)
 
     if broadcast_batch:
         # Scale path (micro-batch ≪ state): state is only STREAMED, never

@@ -15,7 +15,7 @@ loop → MySQL target).
   identical downstream columns; ``MAX_FILES_PER_TRIGGER`` bounds each
   micro-batch so backfills commit state incrementally);
 - state from ``STATE_PATH``, a local directory holding the
-  bucket-partitioned partial-rewrite store (one writer per table; a URI
+  bucket-partitioned merge-on-read store (one writer per table; a URI
   such as ``s3a://`` is rejected — object-store state needs a deploy-time
   Delta MERGE);
 - ``SCD2_TABLES=t1,t2`` additionally maintains a Type-2 history table

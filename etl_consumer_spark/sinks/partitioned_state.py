@@ -1,83 +1,79 @@
 """K1 — the engine's state store: materialized current-state tables (the
-reference's MySQL target, main.go:135), bucket-partitioned with
-partial-partition rewrite.
+reference's MySQL target, main.go:135), bucket-partitioned and merged on
+read.
 
-Rewriting the whole table every batch costs O(state) I/O per batch. This
-store partitions state into buckets and each upsert:
+An upsert reads no state. In upsert mode a key's outcome depends only on
+the batch's latest event for it (``operators.apply``: a delete removes the
+row, any other event writes its after-image), so each upsert appends one
+DELTA per touched bucket: the resolved rows with a ``_deleted`` flag and
+the commit sequence ``_seq``. Write I/O per batch is O(batch), as the
+reference's one keyed statement per event is. Readers (``read``,
+``read_keys``, and so ``evolve`` and the SCD2 maintainer) resolve base ∪
+deltas per pk: the highest ``_seq`` wins and a deleted winner drops the
+key. Once a bucket's delta rows pass ``COMPACT_FRACTION`` of its base
+rows, the writer's commit folds them into a new base (no background
+thread) — the design of Spark's own streaming state store, per-version
+deltas folded into snapshots (Structured Streaming, SIGMOD 2018). On disk::
 
-1. derives the micro-batch's touched buckets (a tiny distinct list),
-2. reads ONLY those partitions (directory-partition pruning — verify with
-   ``.explain``: the scan's PartitionFilters carry the bucket list),
-3. applies the CDC merge to that slice,
-4. rewrites only those partitions.
+    <table>/_schema.json, _pk.json, _layout.json               sidecars
+    <table>/_bucket=<b>/part-*.parquet                         base
+    <table>/_bucket=<b>/_delta/<seq>-<rows>/part-*.parquet     deltas
 
-Per-batch I/O is O(touched partitions), independent of total state size —
-the property that makes per-batch upserts viable at 100 TB. Measured on a
-1.2M-row state with a 4k hot-tail batch: 1 of 143 range partitions
-rewritten; at local toy scale wall-time is constant-dominated, the win is
-the I/O asymptotics.
+Spark's partition discovery skips a directory named ``_…`` without ``=``,
+so a plain scan reads only the base; a delta's name carries its sequence
+and row count, so neither the next sequence nor the compaction check
+needs a Spark job.
 
-A table's layout is decided once, by the commit that creates it (``init``,
-or the first ``upsert`` into a table the store has never committed), and
-persisted in its ``_layout.json`` sidecar, so every later reader and writer
-— a fresh store instance included — agrees on it; the store itself has no
-layout setting. The default is a hash layout, ``bucket = pmod(hash(pk),
-n_buckets)``, whose bucket count is data-dependent (about ``rows /
-TARGET_BUCKET_ROWS`` at the first commit, clamped to [8, 4096]): a fixed k
-would either over-partition small tables (small-file storm,
-constant-dominated batches) or under-partition huge ones (per-bucket
-rewrite approaches O(state) again). ``init(layout=...)`` may pick a range
-layout on the leading pk column instead (the SCD2 history does). One rule
-maps keys to buckets (``_bucket_of``), applied to key columns cast to the
-table's persisted pk types, for the staged write, upsert's touched buckets
-and the one keyed read, ``read_keys``.
+A table's layout is fixed by the commit that creates it (``init``, or the
+first ``upsert`` into a table never committed) and read from its
+``_layout.json`` ever after; the store has no layout setting. The default
+hashes the pk into about ``rows / TARGET_BUCKET_ROWS`` buckets at the
+first commit, clamped to [8, 4096]; ``init(layout=...)`` may pick a range
+layout on the leading pk column (the SCD2 history does). One rule,
+``_bucket_of``, maps keys cast to the persisted pk types to buckets.
 
-Every write — ``init``, ``evolve`` and ``upsert`` — commits atomically
-through one staged-manifest protocol (the reference got per-statement
-atomicity for free from its SQL target for DML and DDL alike,
-main.go:88,135; Delta's transaction log is the full-featured equivalent —
-this is the dependency-free version with the same pipeline protocol above
-it):
+Every write commits through one staged-manifest protocol (the reference
+got per-statement atomicity from its SQL target, main.go:88,135):
 
-1. the new rows are written to a ``_staging`` directory (never the live
-   table), partitioned by bucket;
-2. a ``_commit.json`` manifest is published with an atomic rename — THE
-   commit point. It lists the touched buckets (an upsert's batch buckets;
-   for ``init``/``evolve``, a full rewrite, every live and every staged
-   bucket) and the staged survivors; a full rewrite also carries the
-   table's new ``_schema.json``, ``_pk.json`` and ``_layout.json``;
-3. the manifest is rolled forward: sidecars are replaced atomically, then
-   bucket directories are swapped into the table one rename at a time,
-   then staging and manifest are removed.
+1. stage: the new files are written to ``_staging``, partitioned by bucket;
+2. publish: a ``_commit.json`` manifest, renamed into place atomically, is
+   THE commit point. It maps each staged bucket directory to its place: a
+   delta goes to ``_bucket=<b>/_delta/<seq>-<rows>``; a rewrite (``init``,
+   ``evolve``, a table's first upsert, a compaction) replaces whole bucket
+   directories, deltas included, and drops rewritten buckets that staged
+   no rows. A full rewrite also carries the new sidecars;
+3. roll forward: sidecars replaced atomically, directories moved one
+   rename at a time, staging and manifest removed.
 
-A crash before step 2 rolls BACK on the next open (staging discarded,
-table untouched = pre-commit state, sidecars included); a crash after
-step 2 rolls FORWARD (the sidecar writes and swaps are re-applied
-idempotently = post-commit state). Readers never observe a mix: every
-public entry point runs recovery first. Staging also means the merge (or
-the evolved plan) reads files the write never touches, so no cache-pinning
-dance and no sibling copy of the table.
+A writer (``init``, ``evolve``, ``upsert``) first rolls a published
+manifest forward and discards staging left without one (the commit point
+was never reached). A reader (``read``, ``read_keys``, ``exists``) never
+rolls back: at most it finishes a published commit. A roll-forward holds
+an exclusive lock on the manifest file, so callers finishing the same
+commit take turns and the later one finds it done.
 
-One writer per table, on a local filesystem: the protocol's commit point
-is an ``os.replace`` and each bucket swap an ``os.rename``, which are
-atomic only on a POSIX filesystem. Base paths with a URI scheme
-(``s3a://``, ``hdfs://``, ``file://``) are rejected. Multi-writer tables
-and object-store state take a deploy-time Delta ``MERGE`` above the same
-apply protocol (``operators.apply``).
+One writer per table, on a local filesystem: ``os.replace`` and
+``os.rename`` are atomic only there, and URI base paths are rejected. A
+delta commit only adds files; a compaction or full rewrite removes the
+files it replaces, so a read planned before it and run after fails loudly
+on a missing file. Multi-writer tables and object-store state take a
+deploy-time Delta ``MERGE`` above the same apply protocol.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import re
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_consumer_spark.operators.apply import apply_cdc
+from etl_consumer_spark.operators.apply import compact_events, image_column
 from etl_consumer_spark.operators.ddl import parse_statement, state_type
 
 
@@ -101,13 +97,15 @@ def evolve_frame(df: DataFrame, statement: str) -> DataFrame:
 
 #: rows-per-bucket target of the adaptive layouts (the hash layout's bucket
 #: count at a table's first commit, the SCD2 history's range width at seed):
-#: per-bucket rewrite I/O stays bounded while corpus-wide batches touch
+#: a compaction rewrites a bounded bucket, while corpus-wide batches touch
 #: O(rows/65536) buckets instead of many near-empty ones
 TARGET_BUCKET_ROWS = 65536
 
-#: an upsert batch above this many rows uses the sort-merge apply (a
-#: backfill flood must not be broadcast)
-BROADCAST_THRESHOLD = 2_000_000
+#: a bucket's deltas are folded into a new base once their rows pass this
+#: fraction of the base's rows. Amortized, an applied row then costs its
+#: delta row plus 1/COMPACT_FRACTION rows of compaction, and a read of a
+#: bucket scans at most (1 + COMPACT_FRACTION) times its base rows
+COMPACT_FRACTION = 0.5
 
 
 class PartitionedParquetStateStore:
@@ -115,12 +113,12 @@ class PartitionedParquetStateStore:
     its ``_layout.json`` ever after:
 
     - ``{"bucket_mode": "hash", "n_buckets": k}`` (the default) spreads keys
-      uniformly. It bounds rewrite I/O only while distinct batch keys ≪ k
-      (a large uniform batch touches every bucket: coupon collector).
+      uniformly; a batch touches up to k buckets, one delta file each.
     - ``{"bucket_mode": "range", "range_size": s}`` (bucket = leading pk
       div s) exploits key locality instead: CDC batches that cluster on
-      recent/hot keys (inserts at the key tail, updates to recent rows)
-      touch only the few ranges they live in, independent of batch size."""
+      recent/hot keys touch only the few ranges they live in, and a keyed
+      read of a leading key's rows (the SCD2 history's version chain)
+      opens one bucket."""
 
     def __init__(self, spark: SparkSession, base_path: str):
         if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", base_path):
@@ -134,8 +132,8 @@ class PartitionedParquetStateStore:
 
     # test seam (like _swap_bucket's crash seam): when set on an instance,
     # called after a commit's staged write and before its manifest publish
-    # (init, evolve and upsert alike) — the window the concurrent-writer
-    # and crash tests interleave into
+    # (a delta, a compaction, init and evolve alike) — the window the
+    # concurrent-writer and crash tests interleave into
     _post_stage_hook = None
 
     def _path(self, table: str) -> str:
@@ -174,11 +172,11 @@ class PartitionedParquetStateStore:
 
     @classmethod
     def _bucket_of(cls, keys: list, types: list, layout: dict):
-        """THE key-to-bucket rule, for the staged write, upsert's touched
-        buckets and ``read_keys`` alike. ``keys`` are the leading pk columns
-        (all of them under hash, at least the first under range), each cast
-        to its persisted pk type first: a decoded ``long`` key of an ``INT``
-        pk column must hash like the stored int."""
+        """THE key-to-bucket rule, for every staged write and ``read_keys``
+        alike. ``keys`` are the leading pk columns (all of them under hash,
+        at least the first under range), each cast to its persisted pk type
+        first: a decoded ``long`` key of an ``INT`` pk column must hash like
+        the stored int."""
         typed = [k.cast(t) for k, t in zip(keys, types)]
         if layout["bucket_mode"] == "range":
             return cls._floor_div(typed[0], layout["range_size"])
@@ -194,9 +192,9 @@ class PartitionedParquetStateStore:
         elif layout.get("bucket_mode") not in ("hash", "range"):
             raise ValueError(f"bucket_mode must be 'hash' or 'range', got {layout!r}")
         self._recover(table)
-        self._commit(table, df, pk_cols, layout)
+        self._rewrite(table, df, pk_cols, layout)
 
-    # -- staged-commit protocol (atomic multi-bucket batches) --------------
+    # -- staged-commit protocol (atomic multi-bucket commits) --------------
 
     def _staging(self, table: str) -> str:
         # leading underscore: Spark/Hadoop readers ignore it, like _SUCCESS
@@ -205,13 +203,15 @@ class PartitionedParquetStateStore:
     def _manifest(self, table: str) -> str:
         return f"{self._path(table)}/_commit.json"
 
-    def _swap_bucket(self, table: str, bucket_dir: str) -> None:
-        """Move one staged bucket directory into the live table (atomic per
-        bucket: same-filesystem rename). Separated out so crash-injection
-        tests can fail between two swaps."""
-        dst = f"{self._path(table)}/{bucket_dir}"
+    def _swap_bucket(self, table: str, staged: str, live: str) -> None:
+        """Move one staged bucket directory to ``live`` (relative to the
+        table), replacing what is there: a same-filesystem rename, atomic
+        per directory. Separated out so crash-injection tests can fail
+        between two moves."""
+        dst = f"{self._path(table)}/{live}"
         shutil.rmtree(dst, ignore_errors=True)
-        os.rename(f"{self._staging(table)}/{bucket_dir}", dst)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(f"{self._staging(table)}/{staged}", dst)
 
     @staticmethod
     def _write_atomic(path: str, text: str) -> None:
@@ -225,116 +225,184 @@ class PartitionedParquetStateStore:
         # bucket values as their directory-name strings
         return sorted(d.split("=", 1)[1] for d in os.listdir(path) if d.startswith("_bucket="))
 
-    def _commit(
-        self, table: str, frame: DataFrame, pk_cols: list[str], layout: dict,
-        touched: list | None = None,
-    ) -> int:
-        """THE write path (module docstring): stage ``frame``, publish the
-        manifest, roll it forward; returns the number of touched buckets.
-        ``touched`` lists the buckets an upsert rewrites; None is a full
-        rewrite (init, evolve, a table's first upsert) — every live and
-        every staged bucket is touched and the manifest carries ``frame``'s
-        schema, ``pk_cols`` and ``layout`` as the table's new sidecars.
-        ``frame``'s pk columns carry the table's pk types (an upsert's merge
-        casts to the state schema)."""
+    @staticmethod
+    def _rows(path: str) -> int:
+        # row count from the parquet footers of the files directly in path
+        return sum(
+            pq.read_metadata(f"{path}/{f}").num_rows for f in os.listdir(path) if f.endswith(".parquet")
+        )
+
+    def _stage(self, table: str, frame: DataFrame) -> list[str]:
+        """Write ``frame`` to staging partitioned by its ``_bucket`` column
+        (the caller hash-partitions it on ``_bucket`` first, so each bucket
+        is one file); returns the staged buckets from the directory
+        listing — no extra Spark job."""
         staging = self._staging(table)
+        frame.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
+        if self._post_stage_hook is not None:
+            self._post_stage_hook(table)
+        return self._bucket_dirs(staging)
+
+    def _publish(self, table: str, manifest: dict) -> None:
+        # an atomic rename publishes the manifest — THE commit point
+        self._write_atomic(self._manifest(table), json.dumps(manifest))
+        self._apply_commit(table)
+
+    def _rewrite(
+        self, table: str, frame: DataFrame, pk_cols: list[str], layout: dict,
+        touched: list[str] | None = None,
+    ) -> int:
+        """Replace whole bucket directories with ``frame``'s rows; returns
+        the number of rewritten buckets. ``touched`` lists a compaction's
+        buckets; None is a full rewrite (init, evolve, a table's first
+        upsert): every live and every staged bucket is rewritten and the
+        manifest carries ``frame``'s schema, ``pk_cols`` and ``layout`` as
+        the table's new sidecars. ``frame``'s pk columns carry the table's
+        pk types."""
         # repartition(k, "_bucket") puts ALL rows of a bucket in one task
-        # for ANY k: one file per bucket per rewrite, not tasks x buckets
-        # small files. k is clamped to the session's parallelism (r12
-        # sweep: 1465 near-empty write tasks per SCD2 staged write at
-        # sf1.0). The plan reads only LIVE files, never staging.
+        # for ANY k: one file per bucket, not tasks x buckets small files.
+        # k is clamped to the session's parallelism (r12 sweep: 1465
+        # near-empty write tasks per SCD2 staged write at sf1.0). The plan
+        # reads only LIVE files, never staging.
         width = self.spark.sparkContext.defaultParallelism
         if touched is not None:
             width = max(1, min(len(touched), width))
         bucket = self._bucket_of(
             [F.col(c) for c in pk_cols], [frame.schema[c].dataType for c in pk_cols], layout
         )
-        (
-            frame.withColumn("_bucket", bucket)
-            .repartition(width, "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(staging)
-        )
-        if self._post_stage_hook is not None:
-            self._post_stage_hook(table)
-        # surviving buckets come from the staging directory listing — no
-        # extra Spark job (a touched bucket whose rows were ALL deleted
-        # writes no partition directory)
-        surviving = self._bucket_dirs(staging)
-        full = touched is None
-        if full:
-            touched = {*self._bucket_dirs(self._path(table)), *surviving}
-        manifest: dict = {"touched": sorted(str(b) for b in touched), "surviving": surviving}
-        if full:
+        staged = self._stage(table, frame.withColumn("_bucket", bucket).repartition(width, "_bucket"))
+        manifest: dict = {"moves": {f"_bucket={b}": f"_bucket={b}" for b in staged}}
+        if touched is None:
+            touched = sorted({*self._bucket_dirs(self._path(table)), *staged})
             manifest["sidecars"] = {
                 "_schema.json": frame.schema.json(),
                 "_pk.json": json.dumps(pk_cols),
                 "_layout.json": json.dumps(layout),
             }
-        # publish the manifest with an atomic rename — THE commit point
-        self._write_atomic(self._manifest(table), json.dumps(manifest))
-        self._apply_commit(table)
-        return len(manifest["touched"])
+        # a rewritten bucket whose rows were ALL deleted stages no
+        # directory: its live one is dropped
+        manifest["drop"] = [f"_bucket={b}" for b in touched if b not in staged]
+        self._publish(table, manifest)
+        return len(touched)
 
     def _apply_commit(self, table: str) -> None:
         """Roll a published manifest forward. Idempotent: sidecars are
-        rewritten whole, a bucket already swapped is absent from staging
-        and skipped, and dead-bucket removal re-runs harmlessly."""
-        with open(self._manifest(table)) as fh:
-            manifest = json.loads(fh.read())
-        for name, text in manifest.get("sidecars", {}).items():
-            self._write_atomic(f"{self._path(table)}/{name}", text)
-        staging = self._staging(table)
-        for b in manifest["touched"]:
-            bucket_dir = f"_bucket={b}"
-            if b in manifest["surviving"]:
-                if os.path.isdir(f"{staging}/{bucket_dir}"):
-                    self._swap_bucket(table, bucket_dir)
-            else:
-                # a touched bucket whose rows were ALL deleted: drop the
-                # stale live directory
-                shutil.rmtree(f"{self._path(table)}/{bucket_dir}", ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
-        os.remove(self._manifest(table))
-
-    def _recover(self, table: str) -> None:
-        """Crash recovery, run before every read/write: a published manifest
-        rolls forward (post-batch state); orphaned staging with no manifest
-        rolls back (pre-batch state — the commit point was never reached)."""
-        if not os.path.isdir(self._path(table)):
+        rewritten whole, a directory already moved is absent from staging
+        and skipped, and drops re-run harmlessly. The exclusive lock on the
+        manifest file lets one caller at a time roll it forward; a caller
+        that gets the lock after the manifest was removed (or replaced by
+        the next commit's) has nothing left to do."""
+        path = self._manifest(table)
+        try:
+            fh = open(path)
+        except FileNotFoundError:
             return
+        with fh:
+            fcntl.flock(fh, fcntl.LOCK_EX)
+            try:
+                if os.stat(path).st_ino != os.fstat(fh.fileno()).st_ino:
+                    return
+            except FileNotFoundError:
+                return
+            manifest = json.loads(fh.read())
+            for name, text in manifest.get("sidecars", {}).items():
+                self._write_atomic(f"{self._path(table)}/{name}", text)
+            staging = self._staging(table)
+            for staged, live in manifest["moves"].items():
+                if os.path.isdir(f"{staging}/{staged}"):
+                    self._swap_bucket(table, staged, live)
+            for d in manifest.get("drop", []):
+                shutil.rmtree(f"{self._path(table)}/{d}", ignore_errors=True)
+            shutil.rmtree(staging, ignore_errors=True)
+            os.remove(path)
+
+    def _roll_forward(self, table: str) -> None:
+        """Reader-side recovery: finish a published commit (post-commit
+        state); never touch staging, which may be a live writer's."""
         if os.path.exists(self._manifest(table)):
             self._apply_commit(table)
-        elif os.path.isdir(self._staging(table)):
-            shutil.rmtree(self._staging(table), ignore_errors=True)
 
-    def _has_parts(self, table: str) -> bool:
-        return bool(self._bucket_dirs(self._path(table)))
+    def _recover(self, table: str) -> None:
+        """Writer-side recovery, run before every write: a published
+        manifest rolls forward; staging left without one rolls back (the
+        commit point was never reached)."""
+        self._roll_forward(table)
+        shutil.rmtree(self._staging(table), ignore_errors=True)
 
-    def _empty(self, table: str) -> DataFrame:
-        return self.spark.createDataFrame([], self._schema(table))
+    # -- merge on read -------------------------------------------------------
 
-    def _read_buckets(self, table: str, buckets: list | None = None) -> DataFrame:
-        """The table's rows, or only those of ``buckets``: the scan's
-        PartitionFilters carry the bucket list (directory pruning)."""
-        if not self._has_parts(table):
-            # a fully-emptied table: only the sidecars are left
-            return self._empty(table)
-        rows = self.spark.read.parquet(self._path(table))
+    def _deltas(self, table: str, buckets: list[str] | None = None) -> dict[str, list[str]]:
+        """Each bucket's delta directory names (``<seq>-<rows>``), for every
+        bucket or only ``buckets``, from the directory listing."""
+        path = self._path(table)
+        out = {}
+        for b in self._bucket_dirs(path) if buckets is None else buckets:
+            try:
+                names = os.listdir(f"{path}/_bucket={b}/_delta")
+            except FileNotFoundError:
+                continue
+            if names:
+                out[b] = names
+        return out
+
+    def _scan(self, table: str, buckets: list | None = None) -> DataFrame:
+        """The table's rows, or only those of ``buckets``: the base scan's
+        PartitionFilters carry the bucket list (directory pruning), and each
+        pk's latest delta row, if any, replaces its base row or, when
+        deleted, removes it."""
+        schema, path = self._schema(table), self._path(table)
+        # the sidecar schema needs no inference job and reads a table whose
+        # buckets hold no base file (emptied, or deltas only) as empty
+        base = self.spark.read.schema(
+            T.StructType([*schema.fields, T.StructField("_bucket", T.LongType())])
+        ).parquet(path)
+        names = None
         if buckets is not None:
-            rows = rows.filter(F.col("_bucket").isin(buckets))
-        return rows.drop("_bucket")
+            names = [str(b) for b in buckets]
+            base = base.filter(F.col("_bucket").isin([int(b) for b in names]))
+        base = base.drop("_bucket")
+        deltas = self._deltas(table, names)
+        if not deltas:
+            return base
+        pk = self._pk_cols(table)
+        delta_schema = T.StructType([
+            *schema.fields, T.StructField("_deleted", T.BooleanType()), T.StructField("_seq", T.LongType()),
+        ])
+        rows = self.spark.read.schema(delta_schema).parquet(
+            *[f"{path}/_bucket={b}/_delta/{n}" for b, ns in deltas.items() for n in ns]
+        )
+        values = [c for c in schema.names if c not in pk]
+        latest = rows.groupBy(*pk).agg(
+            F.max_by(F.struct(*values, "_deleted"), "_seq").alias("_r")
+        ).select(*pk, *[F.col(f"_r.{c}").alias(c) for c in [*values, "_deleted"]])
+        return base.join(latest.select(*pk), pk, "left_anti").unionByName(
+            latest.filter(~F.col("_deleted")).select(*schema.names)
+        )
+
+    def _compact(self, table: str, pk_cols: list[str], layout: dict, buckets: list[str]) -> None:
+        """Fold the deltas of each of ``buckets`` whose delta rows pass
+        ``COMPACT_FRACTION`` of its base rows into a new base: a rewrite of
+        those buckets through the commit step. Row counts come from delta
+        directory names and base footers, not from a Spark job."""
+        path = self._path(table)
+        due = [
+            b for b, names in self._deltas(table, buckets).items()
+            if sum(int(n.split("-")[1]) for n in names) > COMPACT_FRACTION * self._rows(f"{path}/_bucket={b}")
+        ]
+        if due:
+            self._rewrite(table, self._scan(table, due), pk_cols, layout, touched=due)
+
+    # -- public entry points -----------------------------------------------
 
     def exists(self, table: str) -> bool:
         """Whether the table has ever been committed (sidecars present) —
         lets restart-safe callers seed-if-absent instead of wiping state."""
-        self._recover(table)
+        self._roll_forward(table)
         return os.path.exists(f"{self._path(table)}/_schema.json")
 
     def read(self, table: str) -> DataFrame:
-        self._recover(table)
-        return self._read_buckets(table)
+        self._roll_forward(table)
+        return self._scan(table)
 
     def read_keys(self, table: str, keys: DataFrame) -> DataFrame:
         """Keyed read, the equivalent of the reference target's indexed
@@ -348,7 +416,7 @@ class PartitionedParquetStateStore:
         before any Spark job runs, rather than silently full-scanning. The
         keys stay distributed: only their distinct bucket ids reach the
         driver, at most one per range span or hash bucket they touch."""
-        self._recover(table)
+        self._roll_forward(table)
         pk, layout, schema = self._pk_cols(table), self._layout(table), self._schema(table)
         cols = keys.columns
         fixed = len(pk) if layout["bucket_mode"] == "hash" else 1
@@ -361,17 +429,18 @@ class PartitionedParquetStateStore:
         buckets = typed.select(
             self._bucket_of([F.col(c) for c in cols], [schema[c].dataType for c in cols], layout)
         ).distinct().collect()
-        return self._read_buckets(table, sorted(r[0] for r in buckets)).join(
+        return self._scan(table, sorted(r[0] for r in buckets)).join(
             F.broadcast(typed), cols, "left_semi"
         )
 
     def evolve(self, table: str, statement: str) -> None:
         """Apply one translated DDL statement (operators.ddl output) by
         rewriting the table with the evolved schema through the commit
-        step. DDL is rare (the reference pauses the connector around it,
-        main.go:70-121), so a full rewrite here is acceptable; per-batch DML
-        stays partial. The table keeps its persisted layout."""
-        current = self.read(table)
+        step, deltas folded in. DDL is rare (the reference pauses the
+        connector around it, main.go:70-121), so a full rewrite here is
+        acceptable. The table keeps its persisted layout."""
+        self._recover(table)
+        current = self._scan(table)
         df = evolve_frame(current, statement)
         if df.schema == current.schema:
             # nothing to rewrite: a type change to the column's current
@@ -382,46 +451,56 @@ class PartitionedParquetStateStore:
             change.new_name if change.op == "rename" and c == change.column else c
             for c in self._pk_cols(table)
         ]
-        self._commit(table, df, pk, self._layout(table))
+        self._rewrite(table, df, pk, self._layout(table))
 
     def upsert(self, table: str, events: DataFrame, pk_cols: list[str]) -> int:
         """Apply one micro-batch in upsert mode (``operators.apply``: the
-        latest event's after-image wins); returns the number of rewritten
-        buckets.
+        latest event's after-image wins, a latest delete removes the key);
+        returns the number of buckets written.
 
-        A table the store has never committed is created by this upsert:
-        a full commit with the hash layout sized by the batch, whose
-        sidecars take the after-image schema. Batches above
-        ``BROADCAST_THRESHOLD`` rows use the sort-merge apply (a backfill
-        flood must not be broadcast).
+        Into an existing table: one staged write of the batch's resolved
+        rows as a delta per touched bucket (``compact_events`` over the
+        batch, images cast to the state schema; no read of the table), the
+        commit, then a compaction of any touched bucket whose deltas are due
+        (module docstring).
 
-        Commit is atomic via the staged-manifest protocol (module
-        docstring): merge → write staging → publish manifest (the commit
-        point) → swap bucket dirs → clean up."""
-        if self.exists(table):
-            layout, schema = self._layout(table), self._schema(table)
-            keys = [F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")) for k in pk_cols]
-            # ONE job yields both the touched-bucket list and the batch size
-            # (per-bucket counts sum to the total) — the broadcast-vs-sort-merge
-            # decision used to cost a second count() job per batch per table
-            bucket_counts = (
-                events.groupBy(
-                    self._bucket_of(keys, [schema[k].dataType for k in pk_cols], layout).alias("_bucket")
-                )
-                .count()
-                .collect()
+        A table the store has never committed is created by this upsert: a
+        full commit of the batch's surviving images with the hash layout
+        sized by the batch, whose sidecars take the after-image schema."""
+        self._recover(table)
+        path = self._path(table)
+        if not os.path.exists(f"{path}/_schema.json"):
+            layout = self._hash_layout(events.count())
+            latest = compact_events(events, pk_cols)
+            after = latest.schema["_after"].dataType
+            rows = latest.filter(F.col("_after").isNotNull()).select(
+                *[image_column(latest.schema, c, after[c].dataType, pk_cols).alias(c) for c in after.names]
             )
-            touched = [r["_bucket"] for r in bucket_counts]
-            if not touched:
-                return 0
-            batch_rows = sum(r["count"] for r in bucket_counts)
-            state_slice = self._read_buckets(table, touched)
-        else:
-            batch_rows, touched = events.count(), None
-            layout = self._hash_layout(batch_rows)
-            state_slice = self.spark.createDataFrame([], events.schema["after"].dataType)
-        new_slice = apply_cdc(
-            state_slice, events, pk_cols, missing_update="upsert",
-            broadcast_batch=batch_rows <= BROADCAST_THRESHOLD,
+            return self._rewrite(table, rows, pk_cols, layout)
+        layout, schema = self._layout(table), self._schema(table)
+        # above every live delta's sequence: within a bucket, later wins
+        seq = 1 + max((int(n.split("-")[0]) for ns in self._deltas(table).values() for n in ns), default=0)
+        keys = [F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")) for k in pk_cols]
+        bucket = self._bucket_of(keys, [schema[k].dataType for k in pk_cols], layout)
+        # one shuffle: hash-partitioned on the bucket, the per-key compaction
+        # needs no second exchange and each bucket's delta is one file
+        width = self.spark.sparkContext.defaultParallelism
+        if layout["bucket_mode"] == "hash":
+            width = min(width, layout["n_buckets"])
+        latest = compact_events(
+            events.withColumn("_bucket", bucket).repartition(width, "_bucket"), pk_cols, by=("_bucket",)
         )
-        return self._commit(table, new_slice, pk_cols, layout, touched)
+        delta = latest.select(
+            *[image_column(latest.schema, c, schema[c].dataType, pk_cols).alias(c) for c in schema.names],
+            F.col("_after").isNull().alias("_deleted"),
+            F.lit(seq).cast("long").alias("_seq"),
+            "_bucket",
+        )
+        staged = self._stage(table, delta)
+        staging = self._staging(table)
+        self._publish(table, {"moves": {
+            f"_bucket={b}": f"_bucket={b}/_delta/{seq}-{self._rows(f'{staging}/_bucket={b}')}"
+            for b in staged
+        }})
+        self._compact(table, pk_cols, layout, staged)
+        return len(staged)

@@ -80,7 +80,7 @@ class BatchResult:
     """Observability record for one micro-batch."""
 
     epoch_id: int
-    applied: dict[str, int] = field(default_factory=dict)      # table -> buckets rewritten
+    applied: dict[str, int] = field(default_factory=dict)      # table -> buckets written
     ddl_applied: list[str] = field(default_factory=list)
     ddl_skipped: list[str] = field(default_factory=list)
     passthrough: list[str] = field(default_factory=list)       # P7 verbatim SQL
@@ -108,7 +108,7 @@ def metrics_rows(result: BatchResult) -> list[tuple]:
     ddl_skipped, passthrough, dead_letters, republish) metric rows — one per
     applied table (or a single table-less row for apply-free batches). The
     ``version`` column keeps its persisted name; it holds the number of
-    buckets the upsert rewrote."""
+    buckets the upsert wrote (one delta each)."""
     base = (
         len(result.ddl_applied),
         len(result.ddl_skipped),
@@ -148,9 +148,10 @@ class CDCPipeline:
         self.cfg = cfg
         self.tables = {t.name: t for t in tables}
         if store is None:
-            # bucket-partitioned parquet with partial rewrite — per-batch I/O
-            # is O(touched buckets), not O(state). Any object with the
-            # store's methods may be passed instead (test doubles, proxies).
+            # bucket-partitioned parquet, merged on read: an upsert appends
+            # one delta of resolved images per touched bucket, so per-batch
+            # I/O is O(batch), not O(state). Any object with the store's
+            # methods may be passed instead (test doubles, proxies).
             if state_path is None:
                 raise ValueError("pass either a state store or state_path")
             store = PartitionedParquetStateStore(spark, state_path)

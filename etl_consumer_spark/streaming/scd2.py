@@ -26,7 +26,7 @@ commit), so step 2 reads each touched key's version chain from exactly one
 bucket directory (the store's keyed read, ``read_keys``, with the business
 key columns: a leading prefix of the history pk (*keys, valid_from) —
 bucket list pruned, O(touched buckets) I/O, never a history scan), and the
-staged upsert rewrites only touched buckets. Per-batch cost is
+upsert appends one delta per touched bucket. Per-batch cost is
 proportional to the batch, not the history.
 """
 
@@ -195,12 +195,9 @@ class SCD2StreamMaintainer:
             img.alias("after"),
             F.col("valid_from").alias("pos"),
             F.lit(int(batch_id)).cast("long").alias("ts_ms"),
-        # materialize ONCE: the store's upsert walks its events frame twice
-        # (touched-bucket count, then the merge) — without this checkpoint
-        # each walk re-runs the whole closing DAG (pruned history read +
-        # broadcast joins + the interval window). Batch-sized, like the
-        # events checkpoint above.
-        ).localCheckpoint(eager=True)
+        )
+        # the store's upsert walks its events frame once (one staged delta
+        # write), so the closing DAG runs once without a checkpoint
         self.store.upsert(self.table, events, self.pk)
 
     def foreach_batch(self):

@@ -1,6 +1,6 @@
-"""Partitioned state store: partial rewrite correctness incl. the
-empty-bucket deletion edge, concurrent-writer interleavings, and the
-local-path guard."""
+"""Partitioned state store: upsert correctness incl. the empty-bucket
+deletion edge, delta appends and their compaction, readers beside writers,
+concurrent-writer interleavings, and the local-path guard."""
 
 from __future__ import annotations
 
@@ -426,7 +426,7 @@ def test_first_upsert_creates_table_with_sidecars_in_its_manifest(spark, tmp_pat
         manifest = json.loads(fh.read())
     assert set(manifest["sidecars"]) == {"_schema.json", "_pk.json", "_layout.json"}
     assert json.loads(manifest["sidecars"]["_layout.json"]) == hash_layout(8)
-    assert manifest["surviving"] and os.path.isdir(f"{tmp_path}/t/_staging")
+    assert manifest["moves"] and os.path.isdir(f"{tmp_path}/t/_staging")
 
     fresh = PartitionedParquetStateStore(spark, str(tmp_path))
     assert fresh.exists("t") and fresh._pk_cols("t") == ["id"]
@@ -466,3 +466,231 @@ def test_init_rejects_unknown_bucket_mode_before_writing(spark, tmp_path):
         store.init("t", spark.createDataFrame([(1, 2)], "id long, v long"), ["id"],
                    layout={"bucket_mode": "ranged", "range_size": 10})
     assert os.listdir(tmp_path) == []
+
+
+# -- merge on read: deltas, compaction, readers that never delete ------------
+
+
+def _delta_dirs(root, table="t") -> list[str]:
+    path = f"{root}/{table}"
+    return sorted(
+        f"{d}/_delta/{n}"
+        for d in os.listdir(path)
+        if d.startswith("_bucket=") and os.path.isdir(f"{path}/{d}/_delta")
+        for n in os.listdir(f"{path}/{d}/_delta")
+    )
+
+
+def test_upsert_appends_a_delta_without_reading_the_table_in_at_most_three_jobs(
+    spark, tmp_path, monkeypatch
+):
+    """An upsert into an existing table with no compaction due writes one
+    delta directory per touched bucket, opens no file of the table with
+    Spark (row counts come from footers) and runs at most three jobs."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    store.init("t", spark.createDataFrame([(i, i * 10) for i in range(400)], "id long, v long"),
+               ["id"], layout=hash_layout(4))
+    events = ev_rows(spark, [
+        (Row(id=5, v=50), Row(id=5, v=51), 1, 0),
+        (None, Row(id=1000, v=1), 2, 0),
+        (Row(id=7, v=70), None, 3, 0),
+    ])
+    reads: list = []
+    real_parquet = DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet",
+                        lambda self, *paths, **kw: reads.append(paths) or real_parquet(self, *paths, **kw))
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert_probe", "one upsert")
+    try:
+        n = store.upsert("t", events, ["id"])
+        jobs = list(sc.statusTracker().getJobIdsForGroup("upsert_probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.undo()
+    assert reads == []
+    assert 1 <= len(jobs) <= 3, jobs
+    assert 1 <= n <= 3 and len(_delta_dirs(tmp_path)) == n
+    got = {(r["id"], r["v"]) for r in store.read("t").collect()}
+    assert got == {(i, i * 10) for i in range(400) if i not in (5, 7)} | {(5, 51), (1000, 1)}
+
+
+def test_deltas_fold_into_a_new_base_past_the_compaction_fraction(spark, tmp_path):
+    """Each batch adds a delta until the bucket's delta rows pass
+    COMPACT_FRACTION of its base rows; that commit folds them into one new
+    base file and the bucket holds no delta after it."""
+    from etl_consumer_spark.sinks.partitioned_state import COMPACT_FRACTION
+
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    store.init("t", spark.createDataFrame([(i, 0) for i in range(40)], "id long, v long"), ["id"],
+               layout=hash_layout(1))
+    expected = {i: 0 for i in range(40)}
+    pending, folds = 0, 0
+    for k in range(1, 7):
+        ids = [(8 * k + j) % 40 for j in range(8)]
+        store.upsert("t", ev_rows(spark, [(Row(id=i, v=expected[i]), Row(id=i, v=k), k * 100 + i, 0)
+                                           for i in ids]), ["id"])
+        expected.update((i, k) for i in ids)
+        pending += 8
+        if pending > COMPACT_FRACTION * 40:
+            pending, folds = 0, folds + 1
+        assert len(_delta_dirs(tmp_path)) == pending // 8
+        assert len([f for f in os.listdir(tmp_path / "t" / "_bucket=0") if f.endswith(".parquet")]) == 1
+        assert {(r["id"], r["v"]) for r in store.read("t").collect()} == set(expected.items())
+    assert folds >= 1
+
+
+def test_readers_leave_a_live_writers_staging_alone(spark, tmp_path):
+    """While a writer sits between its staged delta and its manifest
+    publish, a second store instance reads the table (``read``,
+    ``read_keys``, ``exists``): the reads see the pre-batch state, and the
+    writer then commits its batch. A read used to run crash recovery, which
+    deleted the live staging and failed the writer."""
+    writer = PartitionedParquetStateStore(spark, str(tmp_path))
+    writer.init("t", spark.createDataFrame([(i, i) for i in range(400)], "id long, v long"), ["id"],
+                layout=hash_layout(4))
+    reader = PartitionedParquetStateStore(spark, str(tmp_path))
+    seen: dict = {}
+
+    def reads(table):
+        if seen:
+            return
+        seen["rows"] = reader.read("t").count()
+        seen["key"] = reader.read_keys("t", spark.createDataFrame([(1000,)], "id long")).count()
+        seen["exists"] = reader.exists("t")
+
+    writer._post_stage_hook = reads
+    assert writer.upsert("t", ev_rows(spark, [(None, Row(id=1000, v=1), 1, 0)]), ["id"]) == 1
+    writer._post_stage_hook = None
+    assert seen == {"rows": 400, "key": 0, "exists": True}
+    assert {tuple(r) for r in reader.read_keys("t", spark.createDataFrame([(1000,)], "id long"))
+            .collect()} == {(1000, 1)}
+    assert reader.read("t").count() == 401
+
+
+def test_readers_and_a_writer_roll_one_manifest_forward_at_once(spark, tmp_path, monkeypatch):
+    """A delta commit killed after its manifest publish is finished by the
+    next caller. Five readers and a writer (more threads than cores, with
+    a short switch interval) arriving together take turns on the
+    manifest's lock: none fails, the killed batch lands once, and the
+    writer's own batch follows it."""
+    import sys
+    import threading
+    import time
+
+    store = PartitionedParquetStateStore(spark, str(tmp_path))
+    store.init("t", spark.createDataFrame([(i, i) for i in range(400)], "id long, v long"), ["id"],
+               layout=hash_layout(4))
+
+    def kill(*_):
+        raise Killed("published")
+
+    store._apply_commit = kill
+    with pytest.raises(Killed):
+        store.upsert("t", ev_rows(spark, [(Row(id=i, v=i), Row(id=i, v=-i), i, 0)
+                                          for i in range(1, 9)]), ["id"])
+    assert os.path.exists(f"{tmp_path}/t/_commit.json")
+
+    real_swap = PartitionedParquetStateStore._swap_bucket
+
+    def slow_swap(self, table, staged, live):
+        time.sleep(0.2)  # every caller is inside the roll-forward window
+        return real_swap(self, table, staged, live)
+
+    monkeypatch.setattr(PartitionedParquetStateStore, "_swap_bucket", slow_swap)
+    errors: list = []
+
+    def run(fn):
+        try:
+            fn(PartitionedParquetStateStore(spark, str(tmp_path)))
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    def write(s):
+        s.upsert("t", ev_rows(spark, [(Row(id=1, v=-1), Row(id=1, v=100), 50, 0)]), ["id"])
+
+    threads = [threading.Thread(target=run, args=(lambda s: s.read("t").collect(),))
+               for _ in range(5)]
+    threads.append(threading.Thread(target=run, args=(write,)))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(180)
+    finally:
+        sys.setswitchinterval(interval)
+    monkeypatch.undo()
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    got = {r["id"]: r["v"] for r in store.read("t").collect()}
+    assert len(got) == 400
+    assert got[1] == 100 and all(got[i] == -i for i in range(2, 9)) and got[9] == 9
+
+
+def test_reads_polled_during_a_live_stream_never_fail(spark, tmp_path):
+    """A second thread polls ``store.read()`` from its own store instance
+    while a file-transport stream commits one batch after another: no read
+    fails, no batch dead-letters, and the final state equals a serial
+    last-writer-wins fold of the stream."""
+    import threading
+
+    from etl_consumer_spark.config import Config
+    from etl_consumer_spark.sources.envelope import WireField
+    from etl_consumer_spark.sources.kafka import file_envelope_stream
+    from etl_consumer_spark.streaming.pipeline import CDCPipeline, TableSpec
+    from tests.test_streaming import DB, SERVER, TOPIC, envelope, make_transport
+
+    table = "batch_seq"
+    root = str(tmp_path / "state")
+    seed = {i: i for i in range(1000, 1400)}  # no bucket reaches the compaction fraction
+    store = PartitionedParquetStateStore(spark, root)
+    store.init(table, spark.createDataFrame(list(seed.items()), "id long, seq long"), ["id"],
+               layout=hash_layout(8))
+    expected, pos = dict(seed), 0
+    for b in range(4):
+        msgs = []
+        for k in range(8):
+            key, pos = (b * 3 + k) % 12, pos + 1
+            if key in expected and k % 3 == 2:
+                before, after = {"id": key, "seq": expected.pop(key)}, None
+            else:
+                before = {"id": key, "seq": expected[key]} if key in expected else None
+                after = {"id": key, "seq": pos}
+                expected[key] = pos
+            msgs.append((TOPIC, envelope(before, after, pos=pos)))
+        make_transport(spark, msgs, str(tmp_path / "transport"))
+
+    cfg = Config()
+    cfg.server, cfg.db_name, cfg.tables = SERVER, DB, [table]
+    pipe = CDCPipeline(spark, cfg, [TableSpec(table, [WireField("id", "int64"), WireField("seq", "int64")],
+                                              ["id"])],
+                       store, dead_letter_path=str(tmp_path / "dl"))
+    reader = PartitionedParquetStateStore(spark, root)
+    done = threading.Event()
+    polls: list = []
+    errors: list = []
+
+    def poll():
+        while not done.is_set():
+            try:
+                polls.append(len(reader.read(table).collect()))
+            except Exception as exc:  # noqa: BLE001
+                errors.append(exc)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        q = pipe.start(file_envelope_stream(spark, str(tmp_path / "transport"), max_files_per_trigger=1),
+                       checkpoint_dir=str(tmp_path / "ckpt"), trigger_available_now=True)
+        q.awaitTermination(300)
+    finally:
+        done.set()
+        poller.join(120)
+    assert errors == [] and len(polls) >= 2
+    assert len(pipe.results) == 4 and not any(r.dead_letters for r in pipe.results)
+    assert {(r["id"], r["seq"]) for r in store.read(table).collect()} == set(expected.items())
+    assert _delta_dirs(root, table)  # the polls resolved deltas

@@ -11,13 +11,23 @@ The kill points, in the order a batch reaches them:
 2. ``evolve_manifest`` — the same DDL, killed after the evolve's manifest
    publish, between two bucket swaps (``_swap_bucket``): recovery rolls
    the new schema forward;
-3. ``staged``   — after the staged bucket write, before the manifest
+3. ``staged``   — after the batch's staged delta write, before the manifest
    publish (``_post_stage_hook``); recovery must roll the batch back;
-4. ``manifest`` — after the manifest publish, between two bucket swaps
+4. ``manifest`` — after the manifest publish, between two bucket moves
    (``_swap_bucket``); recovery must roll the batch forward;
-5. ``history``  — after the SCD2 history upsert;
-6. ``offsets``  — after the whole batch, before Structured Streaming
+5. ``delta_staged``, 6. ``delta_manifest`` — the same two points on a
+   table seeded large enough that no compaction runs, so the restart
+   reads base ∪ deltas of several commits, the rolled-back or rolled-forward
+   one among them;
+7. ``compaction`` — between two bucket folds of the compaction that
+   follows the killed batch's delta commit (``_swap_bucket`` moving a whole
+   bucket); recovery must roll the compaction forward;
+8. ``history``  — after the SCD2 history upsert;
+9. ``offsets``  — after the whole batch, before Structured Streaming
    commits its offsets.
+
+Points 1-4 and 7 run on a table seeded empty: every bucket's deltas pass
+the compaction fraction of its (small) base, so every batch compacts.
 
 In every case the offset log replays the killed epoch, and the idempotent
 apply (last-writer-wins + the history's closing guard) must converge.
@@ -42,6 +52,9 @@ TABLE = "batch_seq"
 FIELDS = [WireField("id", "int64"), WireField("seq", "int32"), WireField("name", "string")]
 PK = ["id"]
 KILLED_EPOCH = 1
+# seed rows of the delta_* points: 25 per bucket, so the 22 events of the
+# three batches never bring a bucket's deltas to the compaction fraction
+SEED = [(i, 0, f"s{i}") for i in range(100, 300)]
 ADD_COLUMN = f"ALTER TABLE `{DB}`.`{TABLE}` ADD COLUMN note VARCHAR(8)"
 
 
@@ -93,12 +106,12 @@ def _serial_apply(batches):
     return state, history
 
 
-def _pipeline(spark, root):
+def _pipeline(spark, root, seed=()):
     cfg = Config()
     cfg.server, cfg.db_name, cfg.tables = SERVER, DB, [TABLE]
     store = PartitionedParquetStateStore(spark, f"{root}/state")
     if not store.exists(TABLE):
-        store.init(TABLE, spark.createDataFrame([], "id long, seq long, name string"), PK)
+        store.init(TABLE, spark.createDataFrame(list(seed), "id long, seq long, name string"), PK)
     return CDCPipeline(
         spark, cfg, [TableSpec(TABLE, list(FIELDS), PK)], store,
         dead_letter_path=f"{root}/dead_letters", scd2_tables={TABLE},
@@ -161,24 +174,25 @@ def _install_fault(point, pipe, monkeypatch, fired):
 
     store.evolve = flagged_evolve
 
-    if point in ("staged", "evolve_staged"):
+    if point in ("staged", "evolve_staged", "delta_staged"):
         def after_stage(table):
             if killed_epoch(table):
                 fired.append(point)
                 raise Crash(point)
 
         store._post_stage_hook = after_stage
-    elif point in ("manifest", "evolve_manifest"):
+    elif point in ("manifest", "evolve_manifest", "delta_manifest", "compaction"):
         real_swap = PartitionedParquetStateStore._swap_bucket
         swaps = {"n": 0}
 
-        def swap(self, table, bucket_dir):
-            if killed_epoch(table):
+        def swap(self, table, staged, live):
+            # a compaction moves whole buckets; a delta lands under _delta
+            if killed_epoch(table) and (point != "compaction" or "/_delta/" not in live):
                 swaps["n"] += 1
-                if swaps["n"] == 2:  # one bucket swapped, the rest pending
+                if swaps["n"] == 2:  # one directory moved, the rest pending
                     fired.append(point)
                     raise Crash(point)
-            return real_swap(self, table, bucket_dir)
+            return real_swap(self, table, staged, live)
 
         monkeypatch.setattr(PartitionedParquetStateStore, "_swap_bucket", swap)
     elif point == "history":
@@ -205,11 +219,16 @@ def _install_fault(point, pipe, monkeypatch, fired):
 
 
 @pytest.mark.parametrize(
-    "point", ["evolve_staged", "evolve_manifest", "staged", "manifest", "history", "offsets"]
+    "point",
+    ["evolve_staged", "evolve_manifest", "staged", "manifest", "delta_staged",
+     "delta_manifest", "compaction", "history", "offsets"],
 )
 def test_kill_and_restart_equals_serial_apply(spark, tmp_path, monkeypatch, point):
+    import os
+
     root = str(tmp_path)
     batches = _batches()
+    seed = SEED if point.startswith("delta_") else ()
     ddl = point.startswith("evolve_")
     for epoch, batch in enumerate(batches):
         msgs = [(TOPIC, envelope(b, a, pos=p)) for b, a, p in batch]
@@ -217,7 +236,7 @@ def test_kill_and_restart_equals_serial_apply(spark, tmp_path, monkeypatch, poin
             msgs.insert(0, (SERVER, ddl_envelope(DB, TABLE, ADD_COLUMN)))
         make_transport(spark, msgs, f"{root}/transport")
 
-    crashed = _pipeline(spark, root)
+    crashed = _pipeline(spark, root, seed)
     fired: list[str] = []
     _install_fault(point, crashed, monkeypatch, fired)
     first: list[int] = []
@@ -227,7 +246,7 @@ def test_kill_and_restart_equals_serial_apply(spark, tmp_path, monkeypatch, poin
     assert fired == [point]
     assert first == [0, KILLED_EPOCH]
 
-    restarted = _pipeline(spark, root)
+    restarted = _pipeline(spark, root, seed)
     replayed: list[int] = []
     _run(spark, restarted, root, replayed)
     # the offset log re-delivers the killed epoch, then the stream moves on
@@ -236,7 +255,13 @@ def test_kill_and_restart_equals_serial_apply(spark, tmp_path, monkeypatch, poin
 
     state, history = _serial_apply(batches)
     store = restarted.store
-    assert {tuple(r) for r in store.read(TABLE).select("id", "seq", "name").collect()} == state
+    assert {tuple(r) for r in store.read(TABLE).select("id", "seq", "name").collect()} == (
+        state | set(seed)
+    )
+    if seed:
+        # no compaction ran: the state above was resolved from the deltas
+        table_dir = f"{root}/state/{TABLE}"
+        assert any(os.path.isdir(f"{table_dir}/{d}/_delta") for d in os.listdir(table_dir))
     got_history = {
         tuple(r)
         for r in store.read(f"{TABLE}__history")

@@ -1,5 +1,5 @@
 """Round-2 hardening tests: DDL-then-DML schema re-bind, partitioned state
-store as the pipeline default (partial rewrite, emptied-table recovery,
+store as the pipeline default (delta upserts, emptied-table recovery,
 untouched-bucket stability), passthrough flood bound, and exact range
 bucketing for pks above 2^53.
 
@@ -282,12 +282,10 @@ def test_range_bucket_exact_above_2_53(spark, tmp_path):
     assert store.read("t").collect()[0]["id"] == big
 
 
-def test_upsert_backfill_takes_sort_merge_path(spark, tmp_path, monkeypatch):
-    """A batch above BROADCAST_THRESHOLD must still apply correctly through
-    the full-outer sort-merge path."""
+def test_upsert_backfill_batch_larger_than_state(spark, tmp_path):
+    """A backfill batch larger than the table (30 events, 20 rows, 10 keys
+    in common) applies like any batch: the upsert never joins state."""
     from pyspark.sql import functions as F
-
-    from etl_consumer_spark.sinks import partitioned_state
 
     img = "struct<id:long,province_id:long,seq:long,amount:double,created_day:date>"
     seed = spark.createDataFrame([(i, 0, 0, 1.0, None) for i in range(1, 21)], STATE_DDL)
@@ -302,8 +300,6 @@ def test_upsert_backfill_takes_sort_merge_path(spark, tmp_path, monkeypatch):
     )
     store = PartitionedParquetStateStore(spark, str(tmp_path / "p"))
     store.init("t", seed, ["id"])
-    # threshold 5 < 30 events -> sort-merge branch
-    monkeypatch.setattr(partitioned_state, "BROADCAST_THRESHOLD", 5)
     store.upsert("t", events, ["id"])
     out = {r["id"]: r["amount"] for r in store.read("t").collect()}
     assert len(out) == 40  # 20 seed + 20 new (ids 21..40); 11..20 upserted

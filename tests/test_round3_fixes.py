@@ -123,11 +123,11 @@ def test_crash_between_bucket_swaps_rolls_forward(spark, tmp_path, monkeypatch):
     calls = {"n": 0}
     orig = PartitionedParquetStateStore._swap_bucket
 
-    def crashing_swap(self, table, bucket_dir):
+    def crashing_swap(self, table, staged, live):
         calls["n"] += 1
         if calls["n"] == 2:
             raise OSError("injected crash between bucket swaps")
-        return orig(self, table, bucket_dir)
+        return orig(self, table, staged, live)
 
     monkeypatch.setattr(PartitionedParquetStateStore, "_swap_bucket", crashing_swap)
     with pytest.raises(OSError, match="injected crash"):
@@ -146,7 +146,8 @@ def test_crash_between_bucket_swaps_rolls_forward(spark, tmp_path, monkeypatch):
 def test_crash_before_manifest_rolls_back(spark, tmp_path, monkeypatch):
     """Interrupt AFTER the staging write but BEFORE the manifest publish:
     the batch never committed, so reopening must yield exactly the
-    pre-batch state (staging discarded)."""
+    pre-batch state. A read leaves the orphaned staging alone (it could be
+    a live writer's); the next write discards it."""
     store, pre = _seeded_store(spark, tmp_path)
 
     def no_publish(path_tmp, path_final):
@@ -162,6 +163,8 @@ def test_crash_before_manifest_rolls_back(spark, tmp_path, monkeypatch):
     reopened = PartitionedParquetStateStore(spark, str(tmp_path))
     got = {(r["id"], r["v"]) for r in reopened.read("t").collect()}
     assert got == pre
+    assert os.path.isdir(str(tmp_path / "t" / "_staging"))
+    reopened.upsert("t", _update_events(spark, [0]), ["id"])
     assert not os.path.isdir(str(tmp_path / "t" / "_staging"))
 
 
@@ -187,9 +190,9 @@ def test_commit_handles_emptied_buckets(spark, tmp_path):
 
 
 def test_upsert_broadcast_decision_without_count_job(spark, tmp_path, monkeypatch):
-    """The broadcast-vs-sort-merge decision must come from the same job
-    that derives the touched buckets (per-bucket counts sum to the batch
-    size) — no standalone DataFrame.count() action during upsert."""
+    """An upsert into an existing table runs no standalone
+    DataFrame.count() action (the broadcast-vs-sort-merge decision it once
+    sized is gone with the merge)."""
     store, _ = _seeded_store(spark, tmp_path, n=50)
     df_cls = type(spark.range(1))
     orig_count = df_cls.count

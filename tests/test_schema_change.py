@@ -188,6 +188,45 @@ def test_pk_type_change_then_update(spark, tmp_path):
     assert sorted(tuple(r) for r in state.collect()) == sorted([(seeded, 9.5), (other, 2.5)])
 
 
+def test_timestamp_image_for_bigint_micros_column_dead_letters_the_slice(spark, tmp_path):
+    """A BIGINT state column holding raw MicroTimestamp micros (captured
+    before that type was decoded) meets a decoded timestamp image. Cast to
+    BIGINT it would be stored as whole epoch seconds beside rows holding
+    micros; instead the slice is dead-lettered and the state is unchanged."""
+    micros = 1641092645123456
+    cfg = Config()
+    cfg.server, cfg.db_name, cfg.tables = SERVER, DB, [TABLE]
+    store = PartitionedParquetStateStore(spark, str(tmp_path / "state"))
+    store.init(TABLE, spark.createDataFrame([(1, micros)], "id long, dt long"), ["id"],
+               layout=hash_layout(2))
+    pipe = CDCPipeline(spark, cfg, [TableSpec(TABLE, [WireField("id", "int64"),
+                                                      WireField("dt", "int64", MICROTIMESTAMP)],
+                                              ["id"])],
+                       store, dead_letter_path=str(tmp_path / "dead"),
+                       republish_path=str(tmp_path / "republish"))
+    update = json.loads(dml({"id": 1, "dt": micros + 60_000_000}, 10))
+    update["payload"].update(before={"id": 1, "dt": micros}, op="u")
+    result = pipe.process_batch(transport(spark, [(TOPIC, json.dumps(update))]), 0)
+    assert result.dead_letters == 1 and result.applied == {}
+    assert "integral" in spark.read.parquet(str(tmp_path / "dead")).first()["error"]
+    assert [tuple(r) for r in store.read(TABLE).collect()] == [(1, micros)]
+
+
+def test_apply_cdc_refuses_a_timestamp_image_for_an_integral_column(spark):
+    """``apply_cdc``'s image cast refuses the same cast while the plan is
+    built, before any job."""
+    from etl_consumer_spark.operators.apply import apply_cdc
+
+    state = spark.createDataFrame([(1, 5)], "id long, dt long")
+    events = spark.createDataFrame(
+        [(None, (2, None), 1, 0)],
+        "before struct<id:long,dt:timestamp>, after struct<id:long,dt:timestamp>, "
+        "pos long, ts_ms long",
+    )
+    with pytest.raises(ValueError, match="'dt'"):
+        apply_cdc(state, events, ["id"], missing_update="upsert")
+
+
 def test_benchmark_ddl_fates(spark, tmp_path):
     """The schema events the benchmark streams: qualified ADD COLUMNs apply,
     CREATE INDEX is skipped, DROP TABLE is blocked without a trace and
