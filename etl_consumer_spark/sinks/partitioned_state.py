@@ -468,18 +468,11 @@ class PartitionedParquetStateStore:
         full commit of the batch's surviving images with the hash layout
         sized by the batch, whose sidecars take the after-image schema."""
         self._recover(table)
-        path = self._path(table)
-        if not os.path.exists(f"{path}/_schema.json"):
-            layout = self._hash_layout(events.count())
-            latest = compact_events(events, pk_cols)
-            after = latest.schema["_after"].dataType
-            rows = latest.filter(F.col("_after").isNotNull()).select(
-                *[image_column(latest.schema, c, after[c].dataType, pk_cols).alias(c) for c in after.names]
-            )
-            return self._rewrite(table, rows, pk_cols, layout)
-        layout, schema = self._layout(table), self._schema(table)
-        # above every live delta's sequence: within a bucket, later wins
-        seq = 1 + max((int(n.split("-")[0]) for ns in self._deltas(table).values() for n in ns), default=0)
+        new = not os.path.exists(f"{self._path(table)}/_schema.json")
+        if new:
+            layout, schema = self._hash_layout(events.count()), events.schema["after"].dataType
+        else:
+            layout, schema = self._layout(table), self._schema(table)
         keys = [F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")) for k in pk_cols]
         bucket = self._bucket_of(keys, [schema[k].dataType for k in pk_cols], layout)
         # one shuffle: hash-partitioned on the bucket, the per-key compaction
@@ -490,8 +483,14 @@ class PartitionedParquetStateStore:
         latest = compact_events(
             events.withColumn("_bucket", bucket).repartition(width, "_bucket"), pk_cols, by=("_bucket",)
         )
+        images = [image_column(latest.schema, c, schema[c].dataType, pk_cols).alias(c) for c in schema.names]
+        if new:
+            rows = latest.filter(F.col("_after").isNotNull()).select(*images)
+            return self._rewrite(table, rows, pk_cols, layout)
+        # above every live delta's sequence: within a bucket, later wins
+        seq = 1 + max((int(n.split("-")[0]) for ns in self._deltas(table).values() for n in ns), default=0)
         delta = latest.select(
-            *[image_column(latest.schema, c, schema[c].dataType, pk_cols).alias(c) for c in schema.names],
+            *images,
             F.col("_after").isNull().alias("_deleted"),
             F.lit(seq).cast("long").alias("_seq"),
             "_bucket",
