@@ -194,8 +194,10 @@ def apply_cdc(
     delete            yes/no          row absent (C3)
     ===============  ==============  =====================================
 
-    ``missing_update="upsert"`` is the streaming-pipeline mode: the latest
-    event's after-image always wins (delete removes, insert/update upsert).
+    ``missing_update="upsert"`` is the upsert mode, which perfbench's
+    replay and the tests run (the pipeline's state store resolves the same
+    rule per bucket without this merge): the latest event's after-image
+    always wins (delete removes, insert/update upsert).
     For a *consistent* ordered CDC stream this equals the reference's
     one-at-a-time outcome even for within-batch chains (insert→update of a
     key created in the same batch — the strict mode would wrongly no-op

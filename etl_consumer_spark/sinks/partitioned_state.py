@@ -11,18 +11,22 @@ reference's one keyed statement per event is. Readers (``read``,
 ``read_keys``, and so ``evolve`` and the SCD2 maintainer) resolve base ∪
 deltas per pk: the highest ``_seq`` wins and a deleted winner drops the
 key. Once a bucket's delta rows pass ``COMPACT_FRACTION`` of its base
-rows, the writer's commit folds them into a new base (no background
-thread) — the design of Spark's own streaming state store, per-version
-deltas folded into snapshots (Structured Streaming, SIGMOD 2018). On disk::
+rows, the writer's commit folds them into a SNAPSHOT of the bucket (no
+background thread), at most a ``1/FOLD_SPREAD`` share of the table's
+buckets per commit — the design of Spark's own streaming state store,
+per-version deltas folded into snapshots (Structured Streaming, SIGMOD
+2018). On disk::
 
-    <table>/_schema.json, _pk.json, _layout.json               sidecars
-    <table>/_bucket=<b>/part-*.parquet                         base
-    <table>/_bucket=<b>/_delta/<seq>-<rows>/part-*.parquet     deltas
+    <table>/_schema.json, _pk.json, _layout.json                       sidecars
+    <table>/_bucket=<b>/part-*.parquet                                 base
+    <table>/_bucket=<b>/_delta/<seq>-<rows>/part-*.parquet             delta
+    <table>/_bucket=<b>/_delta/<seq>-<rows>-snapshot/part-*.parquet    snapshot
 
-Spark's partition discovery skips a directory named ``_…`` without ``=``,
-so a plain scan reads only the base; a delta's name carries its sequence
-and row count, so neither the next sequence nor the compaction check
-needs a Spark job.
+A bucket's rows are its latest snapshot (or, before its first, its base)
+plus the deltas with a higher sequence. Spark's partition discovery skips
+a directory named ``_…`` without ``=``, so a plain scan reads only the
+base; an entry's name carries its sequence and row count, so neither the
+next sequence nor the compaction check needs a Spark job.
 
 A table's layout is fixed by the commit that creates it (``init``, or the
 first ``upsert`` into a table never committed) and read from its
@@ -38,12 +42,13 @@ got per-statement atomicity from its SQL target, main.go:88,135):
 1. stage: the new files are written to ``_staging``, partitioned by bucket;
 2. publish: a ``_commit.json`` manifest, renamed into place atomically, is
    THE commit point. It maps each staged bucket directory to its place: a
-   delta goes to ``_bucket=<b>/_delta/<seq>-<rows>``; a rewrite (``init``,
-   ``evolve``, a table's first upsert, a compaction) replaces whole bucket
-   directories, deltas included, and drops rewritten buckets that staged
-   no rows. A full rewrite also carries the new sidecars;
+   delta or a snapshot goes to its ``_bucket=<b>/_delta/`` entry; a full
+   rewrite (``init``, ``evolve``, a table's first upsert) replaces whole
+   bucket directories, deltas and snapshots included, drops rewritten
+   buckets that staged no rows, and carries the new sidecars;
 3. roll forward: sidecars replaced atomically, directories moved one
-   rename at a time, staging and manifest removed.
+   rename at a time, the manifest's ``drop`` paths removed, staging and
+   manifest removed.
 
 A writer (``init``, ``evolve``, ``upsert``) first rolls a published
 manifest forward and discards staging left without one (the commit point
@@ -52,18 +57,28 @@ rolls back: at most it finishes a published commit. A roll-forward holds
 an exclusive lock on the manifest file, so callers finishing the same
 commit take turns and the later one finds it done.
 
+A read plans its files from the bucket entries it lists. A delta commit
+only adds files; a snapshot commit adds the snapshot and drops only what
+the bucket's PREVIOUS snapshot superseded (the base, older snapshots and
+the deltas that one folded), never what the new one supersedes. So a read
+fails loudly on a missing file only if two folds of one of its buckets,
+or a full rewrite (``init``, ``evolve``), land between its plan and its
+run. A fold is housekeeping: if
+it fails after the delta's commit, the upsert still returns (deltas left
+unfolded are valid state) and the next writer discards its staging or
+rolls its manifest forward.
+
 One writer per table, on a local filesystem: ``os.replace`` and
-``os.rename`` are atomic only there, and URI base paths are rejected. A
-delta commit only adds files; a compaction or full rewrite removes the
-files it replaces, so a read planned before it and run after fails loudly
-on a missing file. Multi-writer tables and object-store state take a
-deploy-time Delta ``MERGE`` above the same apply protocol.
+``os.rename`` are atomic only there, and URI base paths are rejected.
+Multi-writer tables and object-store state take a deploy-time Delta
+``MERGE`` above the same apply protocol.
 """
 
 from __future__ import annotations
 
 import fcntl
 import json
+import logging
 import os
 import re
 import shutil
@@ -101,11 +116,18 @@ def evolve_frame(df: DataFrame, statement: str) -> DataFrame:
 #: O(rows/65536) buckets instead of many near-empty ones
 TARGET_BUCKET_ROWS = 65536
 
-#: a bucket's deltas are folded into a new base once their rows pass this
-#: fraction of the base's rows. Amortized, an applied row then costs its
-#: delta row plus 1/COMPACT_FRACTION rows of compaction, and a read of a
-#: bucket scans at most (1 + COMPACT_FRACTION) times its base rows
+#: a bucket's deltas are folded into a snapshot once their rows pass this
+#: fraction of its base (or latest snapshot) rows. Amortized, an applied
+#: row then costs its delta row plus 1/COMPACT_FRACTION rows of compaction,
+#: and a read of a bucket scans about (1 + COMPACT_FRACTION) times its base
+#: rows
 COMPACT_FRACTION = 0.5
+
+#: a commit folds at most 1/FOLD_SPREAD of the table's buckets, the most
+#: overdue first. A uniform table's buckets all come due within a few
+#: batches; folded together they would rewrite the whole table in one
+#: batch, spread they rewrite a share of it in each of FOLD_SPREAD batches
+FOLD_SPREAD = 4
 
 
 class PartitionedParquetStateStore:
@@ -132,7 +154,7 @@ class PartitionedParquetStateStore:
 
     # test seam (like _swap_bucket's crash seam): when set on an instance,
     # called after a commit's staged write and before its manifest publish
-    # (a delta, a compaction, init and evolve alike) — the window the
+    # (a delta, a snapshot, init and evolve alike) — the window the
     # concurrent-writer and crash tests interleave into
     _post_stage_hook = None
 
@@ -232,6 +254,19 @@ class PartitionedParquetStateStore:
             pq.read_metadata(f"{path}/{f}").num_rows for f in os.listdir(path) if f.endswith(".parquet")
         )
 
+    def _bucketed(self, frame: DataFrame, pk_cols: list[str], layout: dict, width: int) -> DataFrame:
+        """``frame`` (its pk columns carry the table's pk types) with its
+        ``_bucket``, hash-partitioned on it. repartition(k, "_bucket") puts
+        ALL rows of a bucket in one task for ANY k: one file per bucket, not
+        tasks x buckets small files; k is ``width`` clamped to the session's
+        parallelism (r12 sweep: 1465 near-empty write tasks per SCD2 staged
+        write at sf1.0)."""
+        bucket = self._bucket_of(
+            [F.col(c) for c in pk_cols], [frame.schema[c].dataType for c in pk_cols], layout
+        )
+        width = max(1, min(width, self.spark.sparkContext.defaultParallelism))
+        return frame.withColumn("_bucket", bucket).repartition(width, "_bucket")
+
     def _stage(self, table: str, frame: DataFrame) -> list[str]:
         """Write ``frame`` to staging partitioned by its ``_bucket`` column
         (the caller hash-partitions it on ``_bucket`` first, so each bucket
@@ -248,50 +283,35 @@ class PartitionedParquetStateStore:
         self._write_atomic(self._manifest(table), json.dumps(manifest))
         self._apply_commit(table)
 
-    def _rewrite(
-        self, table: str, frame: DataFrame, pk_cols: list[str], layout: dict,
-        touched: list[str] | None = None,
-    ) -> int:
-        """Replace whole bucket directories with ``frame``'s rows; returns
-        the number of rewritten buckets. ``touched`` lists a compaction's
-        buckets; None is a full rewrite (init, evolve, a table's first
-        upsert): every live and every staged bucket is rewritten and the
-        manifest carries ``frame``'s schema, ``pk_cols`` and ``layout`` as
-        the table's new sidecars. ``frame``'s pk columns carry the table's
-        pk types."""
-        # repartition(k, "_bucket") puts ALL rows of a bucket in one task
-        # for ANY k: one file per bucket, not tasks x buckets small files.
-        # k is clamped to the session's parallelism (r12 sweep: 1465
-        # near-empty write tasks per SCD2 staged write at sf1.0). The plan
-        # reads only LIVE files, never staging.
+    def _rewrite(self, table: str, frame: DataFrame, pk_cols: list[str], layout: dict) -> int:
+        """A full rewrite (init, evolve, a table's first upsert): every live
+        and every staged bucket directory is replaced with ``frame``'s rows,
+        and the manifest carries ``frame``'s schema, ``pk_cols`` and
+        ``layout`` as the table's new sidecars; returns the number of
+        rewritten buckets. The plan reads only LIVE files, never staging."""
         width = self.spark.sparkContext.defaultParallelism
-        if touched is not None:
-            width = max(1, min(len(touched), width))
-        bucket = self._bucket_of(
-            [F.col(c) for c in pk_cols], [frame.schema[c].dataType for c in pk_cols], layout
-        )
-        staged = self._stage(table, frame.withColumn("_bucket", bucket).repartition(width, "_bucket"))
-        manifest: dict = {"moves": {f"_bucket={b}": f"_bucket={b}" for b in staged}}
-        if touched is None:
-            touched = sorted({*self._bucket_dirs(self._path(table)), *staged})
-            manifest["sidecars"] = {
+        staged = self._stage(table, self._bucketed(frame, pk_cols, layout, width))
+        touched = sorted({*self._bucket_dirs(self._path(table)), *staged})
+        self._publish(table, {
+            "moves": {f"_bucket={b}": f"_bucket={b}" for b in staged},
+            "sidecars": {
                 "_schema.json": frame.schema.json(),
                 "_pk.json": json.dumps(pk_cols),
                 "_layout.json": json.dumps(layout),
-            }
-        # a rewritten bucket whose rows were ALL deleted stages no
-        # directory: its live one is dropped
-        manifest["drop"] = [f"_bucket={b}" for b in touched if b not in staged]
-        self._publish(table, manifest)
+            },
+            # a rewritten bucket whose rows were ALL deleted stages no
+            # directory: its live one is dropped
+            "drop": [f"_bucket={b}" for b in touched if b not in staged],
+        })
         return len(touched)
 
     def _apply_commit(self, table: str) -> None:
         """Roll a published manifest forward. Idempotent: sidecars are
         rewritten whole, a directory already moved is absent from staging
-        and skipped, and drops re-run harmlessly. The exclusive lock on the
-        manifest file lets one caller at a time roll it forward; a caller
-        that gets the lock after the manifest was removed (or replaced by
-        the next commit's) has nothing left to do."""
+        and skipped, and drops (directories or files) re-run harmlessly.
+        The exclusive lock on the manifest file lets one caller at a time
+        roll it forward; a caller that gets the lock after the manifest was
+        removed (or replaced by the next commit's) has nothing left to do."""
         path = self._manifest(table)
         try:
             fh = open(path)
@@ -312,7 +332,11 @@ class PartitionedParquetStateStore:
                 if os.path.isdir(f"{staging}/{staged}"):
                     self._swap_bucket(table, staged, live)
             for d in manifest.get("drop", []):
-                shutil.rmtree(f"{self._path(table)}/{d}", ignore_errors=True)
+                dropped = f"{self._path(table)}/{d}"
+                if os.path.isdir(dropped):
+                    shutil.rmtree(dropped, ignore_errors=True)
+                elif os.path.exists(dropped):
+                    os.remove(dropped)
             shutil.rmtree(staging, ignore_errors=True)
             os.remove(path)
 
@@ -331,9 +355,17 @@ class PartitionedParquetStateStore:
 
     # -- merge on read -------------------------------------------------------
 
-    def _deltas(self, table: str, buckets: list[str] | None = None) -> dict[str, list[str]]:
-        """Each bucket's delta directory names (``<seq>-<rows>``), for every
-        bucket or only ``buckets``, from the directory listing."""
+    @staticmethod
+    def _entry(name: str) -> tuple[int, int, bool]:
+        """A ``_delta`` entry's sequence, row count and whether it is a
+        snapshot, from its name: ``<seq>-<rows>[-snapshot]``."""
+        seq, rows, *snapshot = name.split("-")
+        return int(seq), int(rows), bool(snapshot)
+
+    def _logs(self, table: str, buckets: list[str] | None = None) -> dict[str, list[str]]:
+        """Each bucket's ``_delta`` entry names, for every bucket or only
+        ``buckets``, from the directory listing; buckets with none are
+        left out."""
         path = self._path(table)
         out = {}
         for b in self._bucket_dirs(path) if buckets is None else buckets:
@@ -345,32 +377,46 @@ class PartitionedParquetStateStore:
                 out[b] = names
         return out
 
+    @classmethod
+    def _view(cls, names: list[str]) -> tuple[str | None, list[str]]:
+        """A bucket's live entries: its latest snapshot (None: the base
+        files directly under the bucket) and the deltas above it."""
+        entries = {n: cls._entry(n) for n in names}
+        snapshot = max((n for n, e in entries.items() if e[2]), key=lambda n: entries[n][0], default=None)
+        floor = entries[snapshot][0] if snapshot else 0
+        return snapshot, [n for n, (seq, _, snap) in entries.items() if not snap and seq > floor]
+
     def _scan(self, table: str, buckets: list | None = None) -> DataFrame:
-        """The table's rows, or only those of ``buckets``: the base scan's
-        PartitionFilters carry the bucket list (directory pruning), and each
-        pk's latest delta row, if any, replaces its base row or, when
-        deleted, removes it."""
+        """The table's rows, or only those of ``buckets``: each bucket's
+        base (the scan's PartitionFilters carry the bucket list: directory
+        pruning) or latest snapshot, and each pk's latest delta row above
+        it, if any, replaces its row or, when deleted, removes it."""
         schema, path = self._schema(table), self._path(table)
+        names = None if buckets is None else [str(b) for b in buckets]
+        views = {b: self._view(ns) for b, ns in self._logs(table, names).items()}
+        snapshots = {b: s for b, (s, _) in views.items() if s}
         # the sidecar schema needs no inference job and reads a table whose
         # buckets hold no base file (emptied, or deltas only) as empty
         base = self.spark.read.schema(
             T.StructType([*schema.fields, T.StructField("_bucket", T.LongType())])
         ).parquet(path)
-        names = None
-        if buckets is not None:
-            names = [str(b) for b in buckets]
-            base = base.filter(F.col("_bucket").isin([int(b) for b in names]))
+        if names is not None:
+            base = base.filter(F.col("_bucket").isin([int(b) for b in names if b not in snapshots]))
+        elif snapshots:
+            base = base.filter(~F.col("_bucket").isin([int(b) for b in snapshots]))
         base = base.drop("_bucket")
-        deltas = self._deltas(table, names)
+        if snapshots:
+            base = base.unionByName(self.spark.read.schema(schema).parquet(
+                *[f"{path}/_bucket={b}/_delta/{s}" for b, s in snapshots.items()]
+            ))
+        deltas = [f"{path}/_bucket={b}/_delta/{n}" for b, (_, ns) in views.items() for n in ns]
         if not deltas:
             return base
         pk = self._pk_cols(table)
         delta_schema = T.StructType([
             *schema.fields, T.StructField("_deleted", T.BooleanType()), T.StructField("_seq", T.LongType()),
         ])
-        rows = self.spark.read.schema(delta_schema).parquet(
-            *[f"{path}/_bucket={b}/_delta/{n}" for b, ns in deltas.items() for n in ns]
-        )
+        rows = self.spark.read.schema(delta_schema).parquet(*deltas)
         values = [c for c in schema.names if c not in pk]
         latest = rows.groupBy(*pk).agg(
             F.max_by(F.struct(*values, "_deleted"), "_seq").alias("_r")
@@ -379,18 +425,39 @@ class PartitionedParquetStateStore:
             latest.filter(~F.col("_deleted")).select(*schema.names)
         )
 
-    def _compact(self, table: str, pk_cols: list[str], layout: dict, buckets: list[str]) -> None:
-        """Fold the deltas of each of ``buckets`` whose delta rows pass
-        ``COMPACT_FRACTION`` of its base rows into a new base: a rewrite of
-        those buckets through the commit step. Row counts come from delta
-        directory names and base footers, not from a Spark job."""
+    def _compact(self, table: str, pk_cols: list[str], layout: dict, buckets: list[str], seq: int) -> None:
+        """Fold the deltas of the touched ``buckets`` whose delta rows pass
+        ``COMPACT_FRACTION`` of their base (or snapshot) rows, at most
+        ``1/FOLD_SPREAD`` of the table's buckets, into snapshots at
+        sequence ``seq`` (the delta just committed). Each snapshot's commit
+        drops what the bucket's previous snapshot superseded. Row counts
+        come from entry names and base footers, not from a Spark job."""
         path = self._path(table)
-        due = [
-            b for b, names in self._deltas(table, buckets).items()
-            if sum(int(n.split("-")[1]) for n in names) > COMPACT_FRACTION * self._rows(f"{path}/_bucket={b}")
-        ]
-        if due:
-            self._rewrite(table, self._scan(table, due), pk_cols, layout, touched=due)
+        logs = self._logs(table, buckets)
+        overdue = {}
+        for b, names in logs.items():
+            snapshot, deltas = self._view(names)
+            base = self._entry(snapshot)[1] if snapshot else self._rows(f"{path}/_bucket={b}")
+            pending = sum(self._entry(n)[1] for n in deltas)
+            if pending > COMPACT_FRACTION * base:
+                overdue[b] = pending / max(base, 1)
+        n_buckets = layout["n_buckets"] if layout["bucket_mode"] == "hash" else len(self._bucket_dirs(path))
+        due = sorted(overdue, key=lambda b: -overdue[b])[: -(-n_buckets // FOLD_SPREAD)]
+        if not due:
+            return
+        staged = self._stage(table, self._bucketed(self._scan(table, due), pk_cols, layout, len(due)))
+        staging = self._staging(table)
+        moves, drop = {}, []
+        for b in due:
+            if b not in staged:  # every row deleted: an empty snapshot
+                os.makedirs(f"{staging}/_bucket={b}")
+            moves[f"_bucket={b}"] = f"_bucket={b}/_delta/{seq}-{self._rows(f'{staging}/_bucket={b}')}-snapshot"
+            previous, _ = self._view(logs[b])
+            if previous:
+                floor = self._entry(previous)[0]
+                drop += [f"_bucket={b}/{f}" for f in os.listdir(f"{path}/_bucket={b}") if f != "_delta"]
+                drop += [f"_bucket={b}/_delta/{n}" for n in logs[b] if self._entry(n)[0] <= floor and n != previous]
+        self._publish(table, {"moves": moves, "drop": drop})
 
     # -- public entry points -----------------------------------------------
 
@@ -461,8 +528,8 @@ class PartitionedParquetStateStore:
         Into an existing table: one staged write of the batch's resolved
         rows as a delta per touched bucket (``compact_events`` over the
         batch, images cast to the state schema; no read of the table), the
-        commit, then a compaction of any touched bucket whose deltas are due
-        (module docstring).
+        commit, then a fold of the touched buckets whose deltas are due
+        into snapshots (module docstring), which cannot fail the batch.
 
         A table the store has never committed is created by this upsert: a
         full commit of the batch's surviving images with the hash layout
@@ -487,8 +554,8 @@ class PartitionedParquetStateStore:
         if new:
             rows = latest.filter(F.col("_after").isNotNull()).select(*images)
             return self._rewrite(table, rows, pk_cols, layout)
-        # above every live delta's sequence: within a bucket, later wins
-        seq = 1 + max((int(n.split("-")[0]) for ns in self._deltas(table).values() for n in ns), default=0)
+        # above every entry's sequence: within a bucket, later wins
+        seq = 1 + max((self._entry(n)[0] for ns in self._logs(table).values() for n in ns), default=0)
         delta = latest.select(
             *images,
             F.col("_after").isNull().alias("_deleted"),
@@ -501,5 +568,13 @@ class PartitionedParquetStateStore:
             f"_bucket={b}": f"_bucket={b}/_delta/{seq}-{self._rows(f'{staging}/_bucket={b}')}"
             for b in staged
         }})
-        self._compact(table, pk_cols, layout, staged)
+        # the batch has committed: a failed fold must not fail it (the
+        # caller would dead-letter and requeue a slice the table holds).
+        # Unfolded deltas are valid state; the next writer discards the
+        # fold's staging or rolls its manifest forward
+        try:
+            self._compact(table, pk_cols, layout, staged, seq)
+        except Exception:  # noqa: BLE001
+            logging.getLogger(__name__).warning("fold of %s failed after its batch committed", table,
+                                                exc_info=True)
         return len(staged)

@@ -471,13 +471,21 @@ def test_init_rejects_unknown_bucket_mode_before_writing(spark, tmp_path):
 # -- merge on read: deltas, compaction, readers that never delete ------------
 
 
-def _delta_dirs(root, table="t") -> list[str]:
+def _delta_entries(root, table="t") -> dict[str, list[str]]:
     path = f"{root}/{table}"
-    return sorted(
-        f"{d}/_delta/{n}"
+    return {
+        d: os.listdir(f"{path}/{d}/_delta")
         for d in os.listdir(path)
         if d.startswith("_bucket=") and os.path.isdir(f"{path}/{d}/_delta")
-        for n in os.listdir(f"{path}/{d}/_delta")
+    }
+
+
+def _delta_dirs(root, table="t") -> list[str]:
+    """The live deltas: each bucket's deltas above its latest snapshot."""
+    return sorted(
+        f"{d}/_delta/{n}"
+        for d, names in _delta_entries(root, table).items()
+        for n in PartitionedParquetStateStore._view(names)[1]
     )
 
 
@@ -517,29 +525,48 @@ def test_upsert_appends_a_delta_without_reading_the_table_in_at_most_three_jobs(
     assert got == {(i, i * 10) for i in range(400) if i not in (5, 7)} | {(5, 51), (1000, 1)}
 
 
-def test_deltas_fold_into_a_new_base_past_the_compaction_fraction(spark, tmp_path):
+def test_deltas_fold_into_a_snapshot_past_the_compaction_fraction(spark, tmp_path):
     """Each batch adds a delta until the bucket's delta rows pass
-    COMPACT_FRACTION of its base rows; that commit folds them into one new
-    base file and the bucket holds no delta after it."""
+    COMPACT_FRACTION of its base rows; that commit folds them into a
+    one-file snapshot and no delta is live after it. The fold retires
+    nothing (a read planned before it still finds its files); the next
+    fold drops what the previous snapshot superseded: the base, and the
+    deltas and snapshots up to it."""
     from etl_consumer_spark.sinks.partitioned_state import COMPACT_FRACTION
 
     store = PartitionedParquetStateStore(spark, str(tmp_path))
     store.init("t", spark.createDataFrame([(i, 0) for i in range(40)], "id long, v long"), ["id"],
                layout=hash_layout(1))
+    bucket = tmp_path / "t" / "_bucket=0"
+    base_files = sorted(os.listdir(bucket))
     expected = {i: 0 for i in range(40)}
-    pending, folds = 0, 0
+    pending, folds = 0, []
     for k in range(1, 7):
         ids = [(8 * k + j) % 40 for j in range(8)]
+        planned = store.read("t")
         store.upsert("t", ev_rows(spark, [(Row(id=i, v=expected[i]), Row(id=i, v=k), k * 100 + i, 0)
                                            for i in ids]), ["id"])
+        # a read planned before this commit runs after it, on its own view
+        assert {(r["id"], r["v"]) for r in planned.collect()} == set(expected.items())
         expected.update((i, k) for i in ids)
         pending += 8
         if pending > COMPACT_FRACTION * 40:
-            pending, folds = 0, folds + 1
+            pending = 0
+            folds.append(k)
+        entries = _delta_entries(tmp_path)["_bucket=0"]
+        snapshots = sorted(n for n in entries if n.endswith("-snapshot"))
+        assert snapshots == [f"{f}-40-snapshot" for f in folds[-2:]]
         assert len(_delta_dirs(tmp_path)) == pending // 8
-        assert len([f for f in os.listdir(tmp_path / "t" / "_bucket=0") if f.endswith(".parquet")]) == 1
+        if folds:
+            assert len([f for f in os.listdir(bucket / "_delta" / snapshots[-1])
+                        if f.endswith(".parquet")]) == 1
+        # retired only by the second fold: the base, and entries up to the
+        # previous snapshot
+        assert sorted(os.listdir(bucket)) == (["_delta"] if len(folds) > 1 else sorted([*base_files, "_delta"]))
+        if len(folds) > 1:
+            assert min(PartitionedParquetStateStore._entry(n)[0] for n in entries) == folds[-2]
         assert {(r["id"], r["v"]) for r in store.read("t").collect()} == set(expected.items())
-    assert folds >= 1
+    assert folds == [3, 6]
 
 
 def test_readers_leave_a_live_writers_staging_alone(spark, tmp_path):
@@ -635,7 +662,9 @@ def test_reads_polled_during_a_live_stream_never_fail(spark, tmp_path):
     """A second thread polls ``store.read()`` from its own store instance
     while a file-transport stream commits one batch after another: no read
     fails, no batch dead-letters, and the final state equals a serial
-    last-writer-wins fold of the stream."""
+    last-writer-wins fold of the stream. The seed is small, so most
+    batches fold buckets into snapshots, and some buckets fold twice (the
+    second fold drops the files the first superseded)."""
     import threading
 
     from etl_consumer_spark.config import Config
@@ -646,12 +675,12 @@ def test_reads_polled_during_a_live_stream_never_fail(spark, tmp_path):
 
     table = "batch_seq"
     root = str(tmp_path / "state")
-    seed = {i: i for i in range(1000, 1400)}  # no bucket reaches the compaction fraction
+    seed = {i: i for i in range(1000, 1016)}  # two rows a bucket: a batch's deltas pass the fraction
     store = PartitionedParquetStateStore(spark, root)
     store.init(table, spark.createDataFrame(list(seed.items()), "id long, seq long"), ["id"],
                layout=hash_layout(8))
     expected, pos = dict(seed), 0
-    for b in range(4):
+    for b in range(8):
         msgs = []
         for k in range(8):
             key, pos = (b * 3 + k) % 12, pos + 1
@@ -691,6 +720,10 @@ def test_reads_polled_during_a_live_stream_never_fail(spark, tmp_path):
         done.set()
         poller.join(120)
     assert errors == [] and len(polls) >= 2
-    assert len(pipe.results) == 4 and not any(r.dead_letters for r in pipe.results)
+    assert len(pipe.results) == 8 and not any(r.dead_letters for r in pipe.results)
     assert {(r["id"], r["seq"]) for r in store.read(table).collect()} == set(expected.items())
-    assert _delta_dirs(root, table)  # the polls resolved deltas
+    # folds ran under the polls, and some bucket's base was retired by its
+    # second fold
+    entries = _delta_entries(root, table)
+    assert any(n.endswith("-snapshot") for names in entries.values() for n in names)
+    assert any(os.listdir(f"{root}/{table}/{d}") == ["_delta"] for d in entries)

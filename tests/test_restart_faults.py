@@ -20,8 +20,8 @@ The kill points, in the order a batch reaches them:
    reads base ∪ deltas of several commits, the rolled-back or rolled-forward
    one among them;
 7. ``compaction`` — between two bucket folds of the compaction that
-   follows the killed batch's delta commit (``_swap_bucket`` moving a whole
-   bucket); recovery must roll the compaction forward;
+   follows the killed batch's delta commit (``_swap_bucket`` moving a
+   snapshot); recovery must roll the compaction forward;
 8. ``history``  — after the SCD2 history upsert;
 9. ``offsets``  — after the whole batch, before Structured Streaming
    commits its offsets.
@@ -186,8 +186,8 @@ def _install_fault(point, pipe, monkeypatch, fired):
         swaps = {"n": 0}
 
         def swap(self, table, staged, live):
-            # a compaction moves whole buckets; a delta lands under _delta
-            if killed_epoch(table) and (point != "compaction" or "/_delta/" not in live):
+            # a compaction moves snapshots, a batch moves deltas
+            if killed_epoch(table) and (point != "compaction" or live.endswith("-snapshot")):
                 swaps["n"] += 1
                 if swaps["n"] == 2:  # one directory moved, the rest pending
                     fired.append(point)
@@ -273,3 +273,56 @@ def test_kill_and_restart_equals_serial_apply(spark, tmp_path, monkeypatch, poin
         # the column was added once, in both tables, and no image carries it
         for t in (TABLE, f"{TABLE}__history"):
             assert store.read(t).filter("note IS NOT NULL").count() == 0
+
+
+def test_a_failed_fold_does_not_fail_its_committed_batch(spark, tmp_path, monkeypatch):
+    """A fold that raises an ordinary exception after its batch's delta
+    committed (here once its snapshots are staged, before their manifest)
+    leaves the batch applied: no dead letter, no spill, the SCD2 history
+    written, and state and history equal to the serial fold. The next
+    batch's upsert discards the fold's staging."""
+    import os
+
+    root = str(tmp_path)
+    batches = _batches()
+    for batch in batches:
+        make_transport(spark, [(TOPIC, envelope(b, a, pos=p)) for b, a, p in batch], f"{root}/transport")
+    pipe = _pipeline(spark, root)
+    real_compact = PartitionedParquetStateStore._compact
+    folds = {"n": 0}
+    failed: list[str] = []
+
+    def fail(table):
+        failed.append(table)
+        raise RuntimeError("fold failed")
+
+    def compact(self, table, *args):
+        if table == TABLE:
+            folds["n"] += 1
+            if folds["n"] == KILLED_EPOCH + 1:
+                self._post_stage_hook = fail
+        try:
+            return real_compact(self, table, *args)
+        finally:
+            self._post_stage_hook = None
+
+    monkeypatch.setattr(PartitionedParquetStateStore, "_compact", compact)
+    epochs: list[int] = []
+    _run(spark, pipe, root, epochs)
+    monkeypatch.undo()
+
+    assert failed == [TABLE] and epochs == [0, 1, 2]
+    assert not any(r.dead_letters or r.scd2_errors for r in pipe.results)
+    spill = pipe._republish_base()
+    assert not os.path.isdir(spill) or not os.listdir(spill)
+    assert not os.path.isdir(f"{root}/state/{TABLE}/_staging")
+    state, history = _serial_apply(batches)
+    store = pipe.store
+    assert {tuple(r) for r in store.read(TABLE).select("id", "seq", "name").collect()} == state
+    got_history = {
+        tuple(r)
+        for r in store.read(f"{TABLE}__history")
+        .select("id", "seq", "name", "valid_from", "valid_to", "is_current")
+        .collect()
+    }
+    assert got_history == history

@@ -78,11 +78,11 @@ def test_upsert_staged_write_one_file_per_bucket_under_clamp(spark, tmp_path):
     assert touched == n_buckets  # a corpus-wide batch touches every bucket
     for d in os.listdir(str(tmp_path / "s" / "t")):
         if d.startswith("_bucket="):
-            files = [
-                f for f in os.listdir(str(tmp_path / "s" / "t" / d))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, f"{d} has {len(files)} files"
+            # the base, the batch's delta and (for folded buckets) a snapshot
+            delta = tmp_path / "s" / "t" / d / "_delta"
+            for sub in [tmp_path / "s" / "t" / d, *(delta / n for n in os.listdir(delta))]:
+                files = [f for f in os.listdir(str(sub)) if f.endswith(".parquet")]
+                assert len(files) == 1, f"{sub} has {len(files)} files"
     assert store.read("t").count() == 2000
 
 
